@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from garamond_jl_spark.session import local_frame
+
 DISTANCES = ("levenshtein", "damerau", "hamming", "jaro")
 
 
@@ -124,9 +126,9 @@ def suggest_terms(terms: DataFrame, needles: list[str],
                          f"(choose from {DISTANCES})")
     spark = terms.sparkSession
     if not needles:
-        return spark.createDataFrame(
+        return local_frame(spark,
             [], "needle STRING, suggestion STRING, distance DOUBLE, rank INT")
-    ndf = spark.createDataFrame([(n,) for n in needles], "needle STRING")
+    ndf = local_frame(spark, [(n,) for n in needles], "needle STRING")
     if metric != "jaro":
         # |len diff| ≤ d lower-bounds every edit-family metric, and as a
         # banded EQUI-join key (needle fans out over its length band,

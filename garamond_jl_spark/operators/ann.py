@@ -47,6 +47,8 @@ from itertools import combinations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from garamond_jl_spark.session import local_frame
+
 _HEX_HIGH = set("89abcdef")
 
 
@@ -165,8 +167,8 @@ class LSHCandidateIndex:
         rows = [(qid, self.query_bucket(qv) ^ m)
                 for qid, qv in qv_map.items() for m in self._masks]
         if not rows:
-            return spark.createDataFrame([], "query_id INT, doc_id LONG")
-        probes = F.broadcast(spark.createDataFrame(
+            return local_frame(spark, [], "query_id INT, doc_id LONG")
+        probes = F.broadcast(local_frame(spark,
             rows, "query_id INT, bucket LONG"))
         return (probes.join(self.buckets, "bucket")
                 .select("query_id", "doc_id").distinct())
@@ -259,7 +261,7 @@ def train_kmeans(dv: DataFrame, k: int, n_iter: int = 5, seed: int = 0,
     cent_rows = init.collect()
 
     for _ in range(n_iter):
-        cent = F.broadcast(spark.createDataFrame(
+        cent = F.broadcast(local_frame(spark,
             [(r["cid"], r["i"], float(r["cv"])) for r in cent_rows],
             "cid INT, i INT, cv DOUBLE"))
         asg = _assign_join(dv, cent)
@@ -270,7 +272,7 @@ def train_kmeans(dv: DataFrame, k: int, n_iter: int = 5, seed: int = 0,
         seen = {r["cid"] for r in new_rows}
         cent_rows = new_rows + [r for r in cent_rows
                                 if r["cid"] not in seen]
-    return spark.createDataFrame(
+    return local_frame(spark,
         [(r["cid"], r["i"], float(r["cv"])) for r in cent_rows],
         "cid INT, i INT, cv DOUBLE")
 
@@ -399,7 +401,7 @@ class IVFCandidateIndex:
         if packed is not None:
             asg = assign_lists_arrow(packed, _cent_matrix(cent_rows, dim))
         else:
-            cent = F.broadcast(spark.createDataFrame(
+            cent = F.broadcast(local_frame(spark,
                 cent_rows, "cid INT, i INT, cv DOUBLE"))
             asg = _assign_join(doc_embeddings, cent)
         if persist:
@@ -430,8 +432,8 @@ class IVFCandidateIndex:
         rows = [(qid, cid) for qid, qv in qv_map.items()
                 for cid in self.probe_cids(qv)]
         if not rows:
-            return spark.createDataFrame([], "query_id INT, doc_id LONG")
-        probes = F.broadcast(spark.createDataFrame(
+            return local_frame(spark, [], "query_id INT, doc_id LONG")
+        probes = F.broadcast(local_frame(spark,
             rows, "query_id INT, cid INT"))
         return (probes.join(self.asg, "cid")
                 .select("query_id", "doc_id").distinct())
@@ -445,7 +447,7 @@ class IVFCandidateIndex:
         spark = new_embeddings.sparkSession
         cent_rows = [(c, i, v) for c, comp in self._cent.items()
                      for i, v in comp.items()]
-        cent = F.broadcast(spark.createDataFrame(
+        cent = F.broadcast(local_frame(spark,
             cent_rows, "cid INT, i INT, cv DOUBLE"))
         na = _assign_join(new_embeddings, cent)
         return IVFCandidateIndex(self.asg.unionByName(na), cent_rows,
@@ -518,7 +520,7 @@ def train_pq(resid: DataFrame, dim: int, m: int, n_codes: int = 16,
     cb_rows = init.collect()
 
     for _ in range(n_iter):
-        cb = F.broadcast(spark.createDataFrame(
+        cb = F.broadcast(local_frame(spark,
             [(r["sub"], r["code"], r["j"], float(r["cv"]))
              for r in cb_rows], "sub INT, code INT, j INT, cv DOUBLE"))
         codes = _pq_assign(sv, cb)
@@ -528,7 +530,7 @@ def train_pq(resid: DataFrame, dim: int, m: int, n_codes: int = 16,
         seen = {(r["sub"], r["code"]) for r in new_rows}
         cb_rows = new_rows + [r for r in cb_rows
                               if (r["sub"], r["code"]) not in seen]
-    return spark.createDataFrame(
+    return local_frame(spark,
         [(r["sub"], r["code"], r["j"], float(r["cv"])) for r in cb_rows],
         "sub INT, code INT, j INT, cv DOUBLE")
 
@@ -659,7 +661,7 @@ class IVFADCIndex:
         spark = doc_embeddings.sparkSession
         cent_rows = [(c, i, v) for c, comp in ivf._cent.items()
                      for i, v in comp.items()]
-        cent = F.broadcast(spark.createDataFrame(
+        cent = F.broadcast(local_frame(spark,
             cent_rows, "cid INT, i INT, cv DOUBLE"))
         train_dv = _sample_cut(doc_embeddings, sample_ratio, seed)
         resid = (train_dv.join(ivf.asg, "doc_id")
@@ -676,7 +678,7 @@ class IVFADCIndex:
                                     _cent_matrix(cent_rows, dim), cb_rows,
                                     dim, m)
         else:
-            cbb = F.broadcast(spark.createDataFrame(
+            cbb = F.broadcast(local_frame(spark,
                 cb_rows, "sub INT, code INT, j INT, cv DOUBLE"))
             full_resid = (doc_embeddings.join(ivf.asg, "doc_id")
                           .join(cent, ["cid", "i"], "left")
@@ -722,7 +724,7 @@ class IVFADCIndex:
         approximate distance before the searcher's exact rerank."""
         spark = self.codes.sparkSession
         cids = self.ivf.probe_cids(qv_rows)
-        adc = F.broadcast(spark.createDataFrame(
+        adc = F.broadcast(local_frame(spark,
             self._adc_table(qv_rows, cids),
             "cid INT, sub INT, code INT, pd DOUBLE"))
         approx = (self.codes.where(F.col("cid").isin(cids))
@@ -743,8 +745,8 @@ class IVFADCIndex:
                 for cid, sub, code, pd in
                 self._adc_table(qv, self.ivf.probe_cids(qv))]
         if not rows:
-            return spark.createDataFrame([], "query_id INT, doc_id LONG")
-        adc = F.broadcast(spark.createDataFrame(
+            return local_frame(spark, [], "query_id INT, doc_id LONG")
+        adc = F.broadcast(local_frame(spark,
             rows, "query_id INT, cid INT, sub INT, code INT, pd DOUBLE"))
         approx = (self.codes.join(adc, ["cid", "sub", "code"])
                   .groupBy("query_id", "doc_id")
@@ -788,7 +790,7 @@ class IVFADCIndex:
                                      _cent_matrix(cent_rows, self.dim),
                                      cb_rows, self.dim, self.m)
         else:
-            cent = F.broadcast(spark.createDataFrame(
+            cent = F.broadcast(local_frame(spark,
                 cent_rows, "cid INT, i INT, cv DOUBLE"))
             na = _assign_join(new_embeddings, cent)
             resid = (new_embeddings.join(na, "doc_id")
@@ -796,7 +798,7 @@ class IVFADCIndex:
                      .select("doc_id", "i",
                              (F.col("dv") - F.coalesce("cv", F.lit(0.0)))
                              .alias("rv")))
-            cbb = F.broadcast(spark.createDataFrame(
+            cbb = F.broadcast(local_frame(spark,
                 cb_rows, "sub INT, code INT, j INT, cv DOUBLE"))
             sv = _with_subspace(resid, self.dim // self.m)
             ncodes = (_pq_assign(sv, cbb)
@@ -1025,7 +1027,7 @@ class HNSWCandidateIndex:
         batch moves no graph data at all."""
         spark = self.graph.sparkSession
         if not qv_map:
-            return spark.createDataFrame([], "query_id INT, doc_id LONG")
+            return local_frame(spark, [], "query_id INT, doc_id LONG")
         queries = [(int(qid), self._qvec(qv))
                    for qid, qv in sorted(qv_map.items())]
         ef_ = int(ef if ef is not None else self.ef)
@@ -1058,8 +1060,8 @@ class HNSWCandidateIndex:
                             out.append((qid, key))
                 return pd.DataFrame(out, columns=["query_id", "doc_id"])
 
-            shard_df = spark.createDataFrame([(s,) for s in shard_ids],
-                                             "shard INT")
+            shard_df = local_frame(spark, [(s,) for s in shard_ids],
+                                   "shard INT")
             return (shard_df.groupBy("shard")
                     .applyInPandas(_search_resident,
                                    "query_id INT, doc_id LONG"))

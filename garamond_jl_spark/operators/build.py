@@ -53,6 +53,7 @@ from garamond_jl_spark.config import EngineConfig
 from garamond_jl_spark.functions.codec import pack_f32, pack_ids, varbyte_encode
 from garamond_jl_spark.functions.scoring import idf_expr, weight_expr
 from garamond_jl_spark.functions.textprep import tokenize_with_config
+from garamond_jl_spark.session import local_frame
 
 POSTINGS_SCHEMA = StructType([
     StructField("term", StringType(), False),
@@ -134,7 +135,7 @@ def assign_dense_ids(df: DataFrame, order_cols: list[str],
     spark = df.sparkSession
     # explicit schema: an EMPTY input yields offsets == [] and
     # schema inference would raise instead of returning an empty result
-    off_df = F.broadcast(spark.createDataFrame(
+    off_df = F.broadcast(local_frame(spark,
         offsets, "_pid INT, _offset BIGINT"))
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     out = (part.join(off_df, "_pid")

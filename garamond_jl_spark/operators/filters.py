@@ -26,6 +26,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from garamond_jl_spark.session import local_frame
+
 
 def filter_predicate(key: str, val: Any) -> Column:
     c = F.col(key)
@@ -49,7 +51,7 @@ def indexfilter(df: DataFrame, filter_query: dict[str, Any],
     Vector{Int}; here a 1-column DataFrame, kept lazy for semi-joins)."""
     cols = set(df.columns)
     if id_key not in cols:
-        return df.sparkSession.createDataFrame([], f"{id_key} long")
+        return local_frame(df.sparkSession, [], f"{id_key} long")
     preds = [filter_predicate(k, v) for k, v in filter_query.items()
              if k in cols]  # P8: unknown keys dropped
     out = df

@@ -37,6 +37,7 @@ from garamond_jl_spark.operators.build import (InvertedIndex, doc_table,
                                                pack_blocks, term_stats,
                                                tokenize_to_postings,
                                                weighted_postings)
+from garamond_jl_spark.session import local_frame
 
 LINEAGE_COLS = ("bucket BIGINT, docs_tokenized BIGINT, postings_emitted "
                 "BIGINT, sum_doclen BIGINT, wall_sec DOUBLE, finished_at "
@@ -118,7 +119,7 @@ def build_persistent(spark: SparkSession, docs: DataFrame, cfg: EngineConfig,
             .agg(F.countDistinct("doc_id").alias("d"),
                  F.count("*").alias("p"),
                  F.sum("tf").alias("s")).collect()[0]
-        lineage_row = spark.createDataFrame(
+        lineage_row = local_frame(spark,
             [(b, stats["d"] or 0, stats["p"] or 0, int(stats["s"] or 0),
               time.time() - t0, time.strftime("%Y-%m-%dT%H:%M:%S"))],
             LINEAGE_COLS)

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import math
 from collections import Counter
+from itertools import islice
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -39,6 +40,7 @@ from garamond_jl_spark.config import EngineConfig, bm25_weight, idf_weight, tf_w
 from garamond_jl_spark.functions.scoring import score_transform_expr
 from garamond_jl_spark.functions.textprep import tokenize_with_config
 from garamond_jl_spark.operators.build import InvertedIndex
+from garamond_jl_spark.session import local_frame
 
 QTERMS_SCHEMA = StructType([
     StructField("query_id", LongType(), False),
@@ -94,30 +96,30 @@ def pruned_postings(index: InvertedIndex, qterms: DataFrame) -> DataFrame:
     index is unbucketed (or when reading an incremental union whose
     delta segments dropped the partition column).
 
-    ``qterms`` is the driver-built LocalRelation from
-    :func:`embed_queries`, so the term collect and the bucket-id
-    evaluation execute locally — no cluster job."""
+    ``qterms`` is :func:`embed_queries`' ``LocalRelation``
+    (``session.local_frame``).  The term collect and the bucket hashing
+    below are projections of local relations, which the optimizer
+    folds on the driver, and the de-duplication is Python — so pruning
+    launches no Spark job in either posture (tests/test_resident.py).
+    The resident posture reads the bucket ids from its driver-held
+    stats instead of hashing."""
     nb = index.meta.get("term_buckets")
     p = index.postings
     if not nb or "_tb" not in p.columns:
         return p
-    if index.resident is not None:
-        # warm posture: bucket ids come from the driver-held stats —
-        # no job at all (operators/resident.py).  qterms is a
-        # LocalRelation, so this collect is driver-side evaluation.
-        terms = sorted({r["term"] for r in qterms.select("term").collect()})
-        buckets = index.resident.buckets_of(terms)
-        if buckets is None or not terms:
-            return p
-        return p.where(F.col("_tb").isin(buckets))
-    terms = [r["term"] for r in qterms.select("term").distinct().collect()]
+    terms = sorted({r["term"] for r in qterms.select("term").collect()})
     if not terms:
         return p
-    spark = p.sparkSession
-    buckets = [r["b"] for r in
-               spark.createDataFrame([(t,) for t in terms], "term string")
-               .select(F.pmod(F.xxhash64("term"), F.lit(nb)).alias("b"))
-               .distinct().collect()]
+    if index.resident is not None:
+        buckets = index.resident.buckets_of(terms)
+        if buckets is None:
+            return p
+    else:
+        buckets = sorted({r["b"] for r in
+                          local_frame(p.sparkSession, [(t,) for t in terms],
+                                      "term string")
+                          .select(F.pmod(F.xxhash64("term"), F.lit(nb))
+                                  .alias("b")).collect()})
     return p.where(F.col("_tb").isin(buckets))
 
 
@@ -127,6 +129,12 @@ def pruned_postings(index: InvertedIndex, qterms: DataFrame) -> DataFrame:
 # per-batch driver constant the 1200-query scaling leg pays — VERDICT
 # r5 item 5), while a broadcast hash semi-join is O(1) plan size
 STATS_PROBE_ISIN_MAX = 256
+
+# df-memo bounds: a long-lived serving index sees an unbounded stream of
+# distinct query terms.  Out-of-vocabulary strings come straight from
+# users, so the absent set gets its own, smaller cap
+DF_MEMO_CAP = 1_000_000
+DF_MEMO_ABSENT_CAP = 100_000
 
 
 def _df_stats(index: InvertedIndex, terms: list[str]) -> dict[str, int]:
@@ -139,21 +147,35 @@ def _df_stats(index: InvertedIndex, terms: list[str]) -> dict[str, int]:
     resident posture's df lookup, acquired lazily instead of up
     front).  Live incremental views (``meta["live_deltas"]``: appends
     move df under the reader) bypass the memo, the same honesty rule
-    ``make_env_resident`` applies."""
+    ``make_env_resident`` applies.  Both memos are bounded
+    (``DF_MEMO_CAP``, ``DF_MEMO_ABSENT_CAP``)."""
     if index.meta.get("live_deltas"):
         return {r["term"]: r["df"] for r in
                 _stats_probe(index.terms, terms)
                 .select("term", "df").collect()}
     memo: dict = index.meta.setdefault("_df_memo", {})
-    absent: set = index.meta.setdefault("_df_memo_absent", set())
-    missing = [t for t in terms if t not in memo and t not in absent]
+    absent: dict = index.meta.setdefault("_df_memo_absent", {})
+    # read the hits once: a concurrent request may evict them below
+    out = {t: d for t in terms if (d := memo.get(t)) is not None}
+    missing = [t for t in terms if t not in out and t not in absent]
     if missing:
         fetched = {r["term"]: r["df"] for r in
                    _stats_probe(index.terms, missing)
                    .select("term", "df").collect()}
+        out.update(fetched)
         memo.update(fetched)
-        absent.update(t for t in missing if t not in fetched)
-    return {t: memo[t] for t in terms if t in memo}
+        absent.update(dict.fromkeys(t for t in missing if t not in fetched))
+        _evict_oldest(memo, DF_MEMO_CAP)
+        _evict_oldest(absent, DF_MEMO_ABSENT_CAP)
+    return out
+
+
+def _evict_oldest(memo: dict, cap: int) -> None:
+    """Past ``cap`` entries drop the oldest half (insertion order) — an
+    evicted term only costs its stats probe again."""
+    if len(memo) > cap:
+        for t in list(islice(memo, len(memo) - cap // 2)):
+            memo.pop(t, None)
 
 
 def _stats_probe(terms: DataFrame, query_terms: list[str]) -> DataFrame:
@@ -163,7 +185,7 @@ def _stats_probe(terms: DataFrame, query_terms: list[str]) -> DataFrame:
     if len(query_terms) <= STATS_PROBE_ISIN_MAX:
         return terms.where(F.col("term").isin(query_terms))
     spark = terms.sparkSession
-    probe = F.broadcast(spark.createDataFrame(
+    probe = F.broadcast(local_frame(spark,
         [(t,) for t in query_terms], "term string"))
     return terms.join(probe, "term")
 
@@ -196,8 +218,8 @@ def embed_queries(spark: SparkSession, index: InvertedIndex,
                 for qid, toks in enumerate(tokenized)
                 for pat, c in sorted(Counter(toks).items())]
         if not pats:
-            return spark.createDataFrame([], QTERMS_SCHEMA)
-        pdf = F.broadcast(spark.createDataFrame(
+            return local_frame(spark, [], QTERMS_SCHEMA)
+        pdf = F.broadcast(local_frame(spark,
             pats, "query_id INT, pat STRING, c INT"))
         # one pruned scan per DISTINCT pattern, unioned: pure literals
         # become codegen `contains` (no regex at all), ^-anchored
@@ -240,7 +262,7 @@ def embed_queries(spark: SparkSession, index: InvertedIndex,
         tokenized = [tok(q) for q in queries]
         all_terms = sorted({t for toks in tokenized for t in toks})
         if not all_terms:
-            return spark.createDataFrame([], QTERMS_SCHEMA)
+            return local_frame(spark, [], QTERMS_SCHEMA)
         if index.resident is not None:
             # warm posture: df stats are a driver lookup — the per-
             # request stats job disappears (operators/resident.py)
@@ -292,7 +314,7 @@ def embed_queries(spark: SparkSession, index: InvertedIndex,
         for qid, t, _ in rows:
             per_q[qid] = per_q.get(qid, 0) + stats.get(t, 0)
         stats_out["max_query_hit_rows"] = max(per_q.values(), default=0)
-    return spark.createDataFrame(rows, QTERMS_SCHEMA)
+    return local_frame(spark, rows, QTERMS_SCHEMA)
 
 
 def fill_score(cfg: EngineConfig) -> float:
@@ -393,7 +415,7 @@ def topk_plan(index: InvertedIndex, qterms: DataFrame, k: int,
         if res is not None and k <= res.pad_k:
             # warm posture: the 2k lowest all-OOV ids are driver-held
             spark = qterms.sparkSession
-            oov_low = spark.createDataFrame(
+            oov_low = local_frame(spark,
                 [(i,) for i in res.oov_low_ids[:2 * k]], "doc_id LONG")
         else:
             oov_low = (index.docs.where(F.col("doclen") == 0)
@@ -413,7 +435,7 @@ def topk_plan(index: InvertedIndex, qterms: DataFrame, k: int,
             low_pairs = res.low_ids[:2 * k]
             if oov_hits is not None:
                 low_pairs = [(d, p) for d, p in low_pairs if p]
-            low = spark.createDataFrame(
+            low = local_frame(spark,
                 [(d,) for d, _ in low_pairs], "doc_id LONG")
             # membership probe RESTRICTED to the pad-candidate ids:
             # (qid, d) ∈ hits ⟺ doc d has ≥1 posting on one of qid's
@@ -596,7 +618,7 @@ def search(spark: SparkSession, index: InvertedIndex, queries: list[str],
                          agg_rows_hint=est.get("expected_hit_rows"),
                          max_rows_hint=est.get("max_query_hit_rows"))
         if len(reps) < len(queries):
-            fan = F.broadcast(spark.createDataFrame(
+            fan = F.broadcast(local_frame(spark,
                 [(rep, qid) for qid, rep in enumerate(rep_of)],
                 "_rep LONG, query_id LONG"))
             hits = (hits.withColumnRenamed("query_id", "_rep")

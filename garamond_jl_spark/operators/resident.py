@@ -27,13 +27,18 @@ index tables once, and collect the *small* serving state to the driver —
   ``:large_vector`` OOV policy, the ``2·pad_k`` lowest all-OOV doc ids
   — the only rows the pad construction can ever touch for ``k ≤ pad_k``.
 
-After this a single classic request is ONE Spark job (score + window +
-hydrate over the cached postings/docs); query embedding and pad
-construction are pure driver math.  Result identity: the resident paths
-in ``embed_queries`` / ``pruned_postings`` / ``topk_plan`` consume the
-same values the lazy paths would have collected, so scores and ranks are
-bit-identical (tests/test_resident.py asserts equality and the
-zero-job property).
+After this, query embedding, bucket pruning and pad construction are
+pure driver math that launches no Spark job.  A single classic request
+served through ``lifecycle.response_json`` then runs 10 Spark jobs
+(traced perfbench ``serve`` run, seed 1, local[2] on a 4-core host:
+broadcasts of the driver-built query-term and page frames, the score
+aggregation and ranking over the cached postings, and the page
+hydrate), and none of them starts a Python-worker task: every
+driver-built frame is a ``LocalRelation`` (``session.local_frame``).
+Result identity: the resident paths in ``embed_queries`` /
+``pruned_postings`` / ``topk_plan`` consume the same values the lazy
+paths would have collected, so scores and ranks are bit-identical
+(tests/test_resident.py asserts equality and the zero-job property).
 
 Scope: a resident index is a *frozen serving snapshot* — the posture a
 ``gars`` server loads with ``--env-cache``.  Incremental live views

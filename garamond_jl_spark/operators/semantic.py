@@ -35,6 +35,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from garamond_jl_spark.session import local_frame
+
 DEFAULT_DIM = 16
 _NIB = "0123456789abcdef"
 # raw 24-bit value from the first 6 hex chars of md5 → v ∈ [-1, 1)
@@ -107,11 +109,11 @@ def boe_embed_query(spark: SparkSession, query: str,
                              max_compound_word_length=max_compound_word_length,
                              wildcard_matching=wildcard_matching)
     if not toks:
-        return spark.createDataFrame([], "i INT, qv DOUBLE")
+        return local_frame(spark, [], "i INT, qv DOUBLE")
     counts: dict[str, int] = {}
     for t in toks:
         counts[t] = counts.get(t, 0) + 1
-    qt = F.broadcast(spark.createDataFrame(
+    qt = F.broadcast(local_frame(spark,
         list(counts.items()), "term STRING, qtf INT"))
     # prefilter the word-vector lineage to the query's own tokens (r6):
     # the equi-join keeps exactly these rows anyway, but the static
@@ -343,7 +345,7 @@ def borep_doc_embeddings(tokens: DataFrame, word_vectors: DataFrame,
     tiny broadcast join; ``max`` pools per projected dimension and
     needs the per-word projection first (|tokens|·dim_out rows)."""
     spark = tokens.sparkSession
-    R = F.broadcast(spark.createDataFrame(
+    R = F.broadcast(local_frame(spark,
         borep_projection(dim_in, dim_out, seed), "o INT, i INT, r DOUBLE"))
     if pooling == "sum":
         boe = (tokens.join(word_vectors, "term")
@@ -565,7 +567,7 @@ def lsa_projection(postings: DataFrame, dim_out: int = LSA_DIM_OUT
     s = [float(x) for x in svd.s]
     v_rows = [(int(t), i + 1, float(V[t, i]))
               for t in range(n_terms) for i in range(V.shape[1])]
-    v_df = (spark.createDataFrame(v_rows, "tid LONG, i INT, v DOUBLE")
+    v_df = (local_frame(spark, v_rows, "tid LONG, i INT, v DOUBLE")
             .join(tid_df, "tid").select("term", "i", "v"))
     return v_df, s
 
@@ -728,7 +730,7 @@ class DenseVectorSearcher:
                 parts.append(qv.select(F.lit(qid).alias("query_id"),
                                        "i", "qv"))
         if not parts:
-            return spark.createDataFrame(
+            return local_frame(spark,
                 [], "query_id INT, i INT, qv DOUBLE")
         out = parts[0]
         for p in parts[1:]:
@@ -771,7 +773,7 @@ class DenseVectorSearcher:
             cand = self.candidate_index.candidates(qv_rows)
             dv = dv.join(cand, "doc_id", "left_semi")
             norms = norms.join(cand, "doc_id", "left_semi")
-        qvb = F.broadcast(spark.createDataFrame(qv_rows, "i INT, qv DOUBLE"))
+        qvb = F.broadcast(local_frame(spark, qv_rows, "i INT, qv DOUBLE"))
         dots = (dv.join(qvb, "i")
                 .groupBy("doc_id")
                 .agg(F.sum(F.col("dv") * F.col("qv")).alias("dot")))
@@ -807,7 +809,7 @@ class DenseVectorSearcher:
         this searcher's is_embedded gate (the per-query analog of the
         single path's ``None``).  The per-request driver loops of the
         single path (query projection, norm collect) become one
-        createDataFrame + joins — an N-query batch costs O(1) jobs per
+        local_frame + joins — an N-query batch costs O(1) jobs per
         searcher, not O(N)."""
         from garamond_jl_spark.functions.scoring import score_transform_expr
         qv = self.embed_queries_df(spark, queries)
@@ -822,7 +824,7 @@ class DenseVectorSearcher:
                     (int(r["i"]), float(r["qv"])))
             qv_map = {q: rows for q, rows in qv_map.items()
                       if sum(v * v for _, v in rows) > 0.0}
-            embedded = spark.createDataFrame(
+            embedded = local_frame(spark,
                 [(q,) for q in sorted(qv_map)], "query_id INT")
             src = self.packed
             if self.candidate_index is not None and qv_map:
@@ -846,7 +848,7 @@ class DenseVectorSearcher:
         # nqdf aggregate, the dots join, and the candidate-probe
         # collect — three jobs over the same plan
         qv_rows = qv.collect()
-        qv = spark.createDataFrame(qv_rows, qv.schema)
+        qv = local_frame(spark, qv_rows, qv.schema)
         nqdf = (qv.groupBy("query_id")
                 .agg(F.sqrt(F.sum(F.col("qv") ** 2)).alias("nq"))
                 .where(F.col("nq") > 0))
@@ -924,9 +926,9 @@ class BOESearcher(DenseVectorSearcher):
         against the word-vector table (boe.jl's sum, batch form)."""
         rows = query_token_rows(queries)
         if not rows:
-            return spark.createDataFrame(
+            return local_frame(spark,
                 [], "query_id INT, i INT, qv DOUBLE")
-        qt = F.broadcast(spark.createDataFrame(
+        qt = F.broadcast(local_frame(spark,
             rows, "query_id INT, term STRING, qtf INT"))
         return (qt.join(self.word_vectors, "term")
                 .groupBy("query_id", "i")
@@ -965,7 +967,7 @@ class RPSearcher(DenseVectorSearcher):
             for o in range(1, self.dim_out + 1):
                 comps[o - 1] += (r["qw"] * inv
                                  * rp_sign(r["term"], o, self.seed))
-        return spark.createDataFrame(
+        return local_frame(spark,
             [(o + 1, c) for o, c in enumerate(comps)], "i INT, qv DOUBLE")
 
     def embed_queries_df(self, spark: SparkSession,
@@ -1025,8 +1027,8 @@ class LSASearcher(DenseVectorSearcher):
             comps[r["i"]] = comps.get(r["i"], 0.0) + qw[r["term"]] * r["v"]
         if not comps:
             return None
-        return spark.createDataFrame(sorted(comps.items()),
-                                     "i INT, qv DOUBLE")
+        return local_frame(spark, sorted(comps.items()),
+                           "i INT, qv DOUBLE")
 
     def embed_queries_df(self, spark: SparkSession,
                          queries: list[str]) -> DataFrame:
@@ -1069,7 +1071,7 @@ class _QueryAsDocSearcher(DenseVectorSearcher):
 
     def _query_tokens_df(self, spark: SparkSession,
                          queries: list[str]) -> DataFrame:
-        return spark.createDataFrame(
+        return local_frame(spark,
             self._query_token_rows(queries) or [],
             "doc_id INT, term STRING, tf INT")
 
@@ -1210,7 +1212,7 @@ class DisCSearcher(_QueryAsDocSearcher):
 
     def _query_tokens_df(self, spark: SparkSession,
                          queries: list[str]) -> DataFrame:
-        return spark.createDataFrame(
+        return local_frame(spark,
             self._query_token_rows(queries) or [],
             "doc_id INT, pos INT, term STRING")
 
@@ -1329,7 +1331,7 @@ def packed_cosine_scores_batch(packed: DataFrame,
     euclid = metric == "euclidean"
     out_schema = "query_id INT, doc_id LONG, score DOUBLE"
     if len(qid_arr) == 0:
-        return packed.sparkSession.createDataFrame([], out_schema)
+        return local_frame(packed.sparkSession, [], out_schema)
 
     def _score(batches):
         for b in batches:
@@ -1380,8 +1382,8 @@ def cosine_topk(dv: DataFrame, qv_rows: list[tuple[int, float]], k: int,
     import math
     nq = math.sqrt(sum(v * v for _, v in qv_rows))
     if nq == 0.0 or not qv_rows:
-        return spark.createDataFrame([], "doc_id LONG, score DOUBLE, rank INT")
-    qv = F.broadcast(spark.createDataFrame(qv_rows, "i INT, qv DOUBLE"))
+        return local_frame(spark, [], "doc_id LONG, score DOUBLE, rank INT")
+    qv = F.broadcast(local_frame(spark, qv_rows, "i INT, qv DOUBLE"))
     dn = dv.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("dv") ** 2)).alias("nd"))
     dots = (dv.join(qv, "i")
             .groupBy("doc_id").agg(F.sum(F.col("dv") * F.col("qv")).alias("dot")))

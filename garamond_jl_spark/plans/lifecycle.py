@@ -30,6 +30,7 @@ from garamond_jl_spark.operators.filters import filter_predicate, indexfilter
 from garamond_jl_spark.operators.query import (embed_queries, fill_score,
                                                score_all, topk_plan)
 from garamond_jl_spark.plugins import get_ranker, get_recommender
+from garamond_jl_spark.session import local_frame
 
 
 @dataclass
@@ -163,7 +164,7 @@ def search(env: SearchEnv, request: InternalRequest,
         return _linear_scores(ranked)
 
     if not has_search:
-        return env.spark.createDataFrame(
+        return local_frame(env.spark,
             [], "doc_id LONG, score DOUBLE, rank INT")
 
     all_sets = [(env.index, env.score_weight)] + list(env.searchers)
@@ -260,7 +261,7 @@ def search(env: SearchEnv, request: InternalRequest,
         sets = [(*searcher_hits(ix), wgt) for ix, wgt in chosen]
         sets = [(h, wgt, s0) for h, s0, wgt in sets if h is not None]
         if not sets:
-            return env.spark.createDataFrame(
+            return local_frame(env.spark,
                 [], "doc_id LONG, score DOUBLE, rank INT")
         cands = sets[0][0].select("doc_id")
         for h, _, _ in sets[1:]:
@@ -291,7 +292,7 @@ def search(env: SearchEnv, request: InternalRequest,
     else:
         hits = sparse_hits(primary)
         if hits is None:  # OOV query ⇒ no results (is_embedded gate)
-            return env.spark.createDataFrame(
+            return local_frame(env.spark,
                 [], "doc_id LONG, score DOUBLE, rank INT")
         pad_score = fill_score(primary.cfg)
         pad_cands = hits.select("doc_id")
@@ -353,7 +354,7 @@ def search_many(env: SearchEnv, requests: list[InternalRequest]
     ran a per-request corpus job (an N-query mixed-env batch launched
     O(N) jobs; this path launches O(#searchers)).
 
-    Per searcher the whole batch embeds in one createDataFrame + join
+    Per searcher the whole batch embeds in one local_frame + join
     (``embed_queries`` for classic indexes — already batch-shaped —
     and :meth:`DenseVectorSearcher.sparse_hits_batch` for dense ones,
     which replaces the per-query driver projection loops of
@@ -415,8 +416,8 @@ def search_many(env: SearchEnv, requests: list[InternalRequest]
                              tiebreak_round=tiebreak_round, pad_to_k=True)
         else:
             hits = _search_many_multi(env, queries, max_k, tiebreak_round)
-        kdf = F.broadcast(spark.createDataFrame(ks, "query_id INT, k INT"))
-        qmap = F.broadcast(spark.createDataFrame(
+        kdf = F.broadcast(local_frame(spark, ks, "query_id INT, k INT"))
+        qmap = F.broadcast(local_frame(spark,
             [(qid, i) for qid, i in enumerate(batch)],
             "query_id INT, request_id INT"))
         parts.append(hits.join(kdf, "query_id")
@@ -425,7 +426,7 @@ def search_many(env: SearchEnv, requests: list[InternalRequest]
                      .select("request_id", "doc_id", "score", "rank"))
 
     if not parts:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -500,7 +501,7 @@ def _search_many_multi(env: SearchEnv, queries: list[str], k: int,
     # grows geometrically until every query has k non-candidates in it
     # (one tiny job per doubling — candidates rarely monopolize the
     # lowest ids).
-    qids = F.broadcast(spark.createDataFrame(
+    qids = F.broadcast(local_frame(spark,
         [(q,) for q in range(len(queries))], "query_id INT"))
     n_docs = env.index.meta.get("n_live_docs", env.index.meta["n_docs"])
     L = 4 * k
@@ -542,7 +543,7 @@ def rank_ids(env: SearchEnv, request: InternalRequest) -> DataFrame:
     ids, _ = ranker(ids, [0.0] * len(ids), request, env)
     denom = max(len(ids) - 1, 1)
     rows = [(d, 1.0 - i / denom, i + 1) for i, d in enumerate(ids)]
-    out = env.spark.createDataFrame(rows, "doc_id LONG, score DOUBLE, rank INT")
+    out = local_frame(env.spark, rows, "doc_id LONG, score DOUBLE, rank INT")
     # keep only ids that exist in the table (J1 semi-join)
     return out.join(env.index.docs.select("doc_id"), "doc_id", "left_semi")
 
@@ -554,7 +555,7 @@ def recommend(env: SearchEnv, request: InternalRequest) -> DataFrame:
     recommender = get_recommender(request.recommender)
     gen_query = recommender(request, env)
     if not gen_query:
-        return env.spark.createDataFrame(
+        return local_frame(env.spark,
             [], "doc_id LONG, score DOUBLE, rank INT")
     sub = InternalRequest(operation="search", query=gen_query,
                           max_matches=request.max_matches + 1,
@@ -619,7 +620,7 @@ def response_json(env: SearchEnv, request: InternalRequest) -> str:
     lo = (request.response_page - 1) * request.response_size
     hi = lo + request.response_size
     page = [r for r in hit_rows if lo < r["rank"] <= hi]
-    page_df = env.spark.createDataFrame(page, hits.schema)
+    page_df = local_frame(env.spark, page, hits.schema)
     rows = [r.asDict()
             for r in _paginate_hydrate(env, request, page_df).collect()]
     rows.sort(key=lambda r: r["rank"])

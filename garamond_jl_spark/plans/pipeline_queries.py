@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from garamond_jl_spark.operators import semantic as _SEM
 from garamond_jl_spark.plans.testdata_queries import ORACLES, QUERIES, e6, q
+from garamond_jl_spark.session import local_frame
 from garamond_jl_spark.sources.tables import load_testdata
 
 __all__ = ["QUERIES", "ORACLES"]
@@ -737,7 +738,7 @@ def ann_lsh_search(u: DataFrame, query_ids: list[int], k: int,
     qb = (bkt.where(F.col("vec_id").isin(*query_ids))
           .select(F.col("vec_id").alias("query_id"),
                   F.col("bucket").alias("qbkt")))
-    masks = spark.createDataFrame(
+    masks = local_frame(spark,
         [(m,) for m in _probe_masks(n_planes, radius)], "m LONG")
     probes = (qb.crossJoin(F.broadcast(masks))
               .select("query_id", F.expr("qbkt ^ m").alias("pbkt")))
@@ -1294,7 +1295,7 @@ def semantic_cpmean_topk(spark, sf_dir):
     vocab = _vocab_hits(wv, BOE_QUERY.split())
     qc = {t: c for t, c in Counter(BOE_QUERY.split()).items() if t in vocab}
     if not qc:
-        return spark.createDataFrame([], "doc_id LONG, cos_e6 LONG, rnk LONG")
+        return local_frame(spark, [], "doc_id LONG, cos_e6 LONG, rnk LONG")
     cols = []
     for t, c in qc.items():
         v = np.array([word_vector_component(t, i, BOE_SEED)
@@ -1419,7 +1420,7 @@ def semantic_borep_topk(spark, sf_dir):
     vocab = _vocab_hits(wv, BOE_QUERY.split())
     qc = {t: c for t, c in Counter(BOE_QUERY.split()).items() if t in vocab}
     if not qc:
-        return spark.createDataFrame([], "doc_id LONG, cos_e6 LONG, rnk LONG")
+        return local_frame(spark, [], "doc_id LONG, cos_e6 LONG, rnk LONG")
     qboe = np.zeros(BOE_DIM)
     for t, c in qc.items():
         qboe += c * np.array([word_vector_component(t, i, BOE_SEED)
@@ -1464,7 +1465,7 @@ def semantic_sif_topk(spark, sf_dir):
     total = lex.agg(F.sum("count")).first()[0]
     qc = {t: c for t, c in Counter(BOE_QUERY.split()).items() if t in stats}
     if not qc:
-        return spark.createDataFrame([], "doc_id LONG, cos_e6 LONG, rnk LONG")
+        return local_frame(spark, [], "doc_id LONG, cos_e6 LONG, rnk LONG")
     q_arr = np.zeros(BOE_DIM)
     w_total = sum(qc.values())
     from garamond_jl_spark.operators.semantic import SIF_ALPHA
@@ -1559,7 +1560,7 @@ def semantic_disc_topk(spark, sf_dir):
     vocab = _vocab_hits(wv, BOE_QUERY.split())
     seq = [t for t in BOE_QUERY.split() if t in vocab]
     if not seq:
-        return spark.createDataFrame([], "doc_id LONG, cos_e6 LONG, rnk LONG")
+        return local_frame(spark, [], "doc_id LONG, cos_e6 LONG, rnk LONG")
     vecs = [np.array([word_vector_component(t, i, BOE_SEED)
                       for i in range(1, BOE_DIM + 1)]) for t in seq]
     q1 = np.sum(vecs, axis=0)
@@ -1648,7 +1649,7 @@ def semantic_rp_topk(spark, sf_dir):
            idx.terms.where(F.col("term").isin(*qc)).select("term", "df")
            .collect()}
     if not dfs:
-        return spark.createDataFrame([], "doc_id LONG, cos_e6 LONG, rnk LONG")
+        return local_frame(spark, [], "doc_id LONG, cos_e6 LONG, rnk LONG")
     n_docs = float(idx.meta["n_docs"])
     ql = float(sum(c for t, c in qc.items() if t in dfs))
     inv = 1.0 / RP_OUT ** 0.5
@@ -1691,7 +1692,7 @@ def semantic_lsa_topk(spark, sf_dir):
            idx.terms.where(F.col("term").isin(*qc)).select("term", "df")
            .collect()}
     if not dfs:
-        return spark.createDataFrame([], "doc_id LONG, cos_e6 LONG, rnk LONG")
+        return local_frame(spark, [], "doc_id LONG, cos_e6 LONG, rnk LONG")
     n_docs = float(idx.meta["n_docs"])
     ql = float(sum(c for t, c in qc.items() if t in dfs))
     qw = {t: math.sqrt(qc[t] / ql) * (math.log(n_docs / (dfs[t] + 1.0)) + 1.0)
@@ -2045,7 +2046,7 @@ def text_lang_id(spark, sf_dir):
 
 def _lang_id_df(d: DataFrame) -> DataFrame:
     spark = d.sparkSession
-    prof = F.broadcast(spark.createDataFrame(
+    prof = F.broadcast(local_frame(spark,
         _lang_trigram_profile(), "g STRING, lang STRING"))
     pt = d.select("doc_id", F.concat(F.lit(" "), F.col("text"), F.lit(" "))
                   .alias("p"), "text")

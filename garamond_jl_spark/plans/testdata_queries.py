@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from garamond_jl_spark.config import EngineConfig
 from garamond_jl_spark.operators.build import build_index
 from garamond_jl_spark.operators.query import search
+from garamond_jl_spark.session import local_frame
 from garamond_jl_spark.sources.tables import load_testdata
 
 # documents-table full-text config: whitespace tokens (text is already
@@ -558,7 +559,7 @@ def fulltext_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from decimal import ROUND_HALF_UP, Decimal
     avgdl_e6 = int(Decimal(repr(idx.meta["avgdl"] * 1e6))
                    .quantize(Decimal(1), rounding=ROUND_HALF_UP))
-    return spark.createDataFrame(
+    return local_frame(spark,
         [(idx.meta["n_docs"], avgdl_e6)],
         "n_docs BIGINT, avgdl_e6 BIGINT")
 
@@ -577,7 +578,7 @@ def fulltext_vocab_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3/U1 missing_needles: query tokens ∩/∖ vocabulary
     (src/search/index.jl:140-147)."""
     idx = _ft_index(spark, sf_dir)
-    probe = spark.createDataFrame(
+    probe = local_frame(spark,
         [("spark",), ("join",), ("zzzz_nope",), ("window",)], "term STRING")
     return (probe.join(idx.terms.select("term", F.lit(True).alias("hit")),
                        "term", "left")
@@ -651,8 +652,8 @@ def positional_after_pushfirst(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_persistent(spark, docs, FT_CFG, out, id_col="doc_id",
                          text_col="text", n_buckets=2, tokenizer=tok)
         for new_id, txt in ((9000, "spark join"), (9001, "window merge")):
-            batch = spark.createDataFrame([(new_id, txt)],
-                                          "doc_id LONG, text STRING")
+            batch = local_frame(spark, [(new_id, txt)],
+                                "doc_id LONG, text STRING")
             prepend_docs(spark, out, batch, id_col="doc_id",
                          text_col="text", tokenizer=tok)
         rows = [(r["pos_id"], r["doc_id"]) for r in
@@ -660,7 +661,7 @@ def positional_after_pushfirst(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .collect()]
     finally:
         shutil.rmtree(out, ignore_errors=True)
-    return spark.createDataFrame(rows, "pos_id LONG, doc_id LONG")
+    return local_frame(spark, rows, "pos_id LONG, doc_id LONG")
 
 
 # --------------------------------------------------------------------------

@@ -155,7 +155,8 @@ def register_sampler(name: str):
 def noop_loader(spark: Any, source: Any = None, **kwargs) -> Any:
     """S2 noop loader (src/data/noop.jl): an empty frame with the
     minimal id schema — the 'searchable env with no data' path."""
-    return spark.createDataFrame([], "doc_id LONG, content STRING")
+    from garamond_jl_spark.session import local_frame
+    return local_frame(spark, [], "doc_id LONG, content STRING")
 
 
 @register_loader("parquet_loader")

@@ -9,8 +9,12 @@ from __future__ import annotations
 
 import os
 import sys
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 # pin workers to the DRIVER's interpreter unless the deployment set its
 # own: local-mode workers otherwise resolve `python3` from PATH, and a
@@ -94,3 +98,38 @@ def get_spark(app: str = "garamond-spark", cpus: int | None = None,
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple],
+                schema: StructType | str) -> DataFrame:
+    """The one way driver-side rows enter a plan: a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, schema)`` plans a ``LogicalRDD``
+    over ``sc.parallelize``, so EVERY job that reads the frame
+    re-pickles its rows in Python-worker tasks (a ``parallelize →
+    mapPartitions → map`` stage per read).  Built from a
+    ``pyarrow.Table`` instead, the frame is a ``LocalRelation``: a
+    ``collect()`` of it (or of a projection of it) is evaluated on the
+    driver with no job, and a broadcast of it is a ``LocalTableScan``.
+
+    ``rows`` are positional tuples (``Row`` included) in ``schema``
+    order; ``schema`` is a ``StructType`` or a DDL string.  Values
+    convert through Arrow's SAFE cast: ints widen to DOUBLE, while a
+    fractional float in an integral column or a None in a
+    non-nullable one raises instead of truncating."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    rows = list(rows)
+    arrow_schema = to_arrow_schema(schema)
+    width = len(arrow_schema)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"every row must have {width} fields")
+    cols = list(zip(*rows)) if rows else [()] * width
+    arrays = []
+    for col, field in zip(cols, arrow_schema):
+        arr = pa.array(col).cast(field.type)
+        if not field.nullable and arr.null_count:
+            raise ValueError(f"None in non-nullable column {field.name!r}")
+        arrays.append(arr)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema)

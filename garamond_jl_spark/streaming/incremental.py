@@ -57,6 +57,7 @@ from garamond_jl_spark.operators.persist import (_check_tokenizer,
                                                  build_persistent, load_index,
                                                  read_meta)
 from garamond_jl_spark.functions.scoring import weight_expr
+from garamond_jl_spark.session import local_frame
 
 
 def _delta_root(out_dir: str) -> str:
@@ -232,8 +233,8 @@ def delete_docs(spark: SparkSession, out_dir: str, doc_ids: list[int]) -> None:
     recover_swap(out_dir)
     os.makedirs(_tombstones_dir(out_dir), exist_ok=True)
     ts = time.time_ns()
-    spark.createDataFrame([(int(d), ts) for d in doc_ids],
-                          "doc_id LONG, ts LONG") \
+    local_frame(spark, [(int(d), ts) for d in doc_ids],
+                "doc_id LONG, ts LONG") \
         .write.mode("append").parquet(_tombstones_dir(out_dir))
 
 

@@ -32,6 +32,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (BooleanType, LongType, StringType,
                                StructField, StructType)
 
+from garamond_jl_spark.session import local_frame
+
 OUTPUT_SCHEMA = StructType([
     StructField("h", StringType()),
     StructField("keep_doc_id", LongType()),
@@ -101,5 +103,5 @@ def stream_dedup_first_seen(spark: SparkSession, source_dir: str,
         # a drain with zero survivors may never create data files —
         # return an empty frame with the output schema instead of
         # letting the read throw
-        return spark.createDataFrame([], OUTPUT_SCHEMA)
+        return local_frame(spark, [], OUTPUT_SCHEMA)
     return spark.read.parquet(out_dir)

@@ -278,3 +278,35 @@ def test_df_stats_memo_identity_and_live_bypass(spark, built):
     assert live_rows == first                # same frozen stats today,
     # but fetched through the probe, not the memo (no new memo object)
     assert live_meta.get("_df_memo") is idx.meta.get("_df_memo")
+
+
+def test_df_stats_memo_bounded_under_oov_flood(spark, built, monkeypatch):
+    """A long-lived index fed a stream of distinct out-of-vocabulary
+    terms keeps both df memos under their caps (oldest entries evicted)
+    and still scores exactly like an uncapped index."""
+    import dataclasses
+
+    import garamond_jl_spark.operators.query as Q
+    idx = built[0]
+    qs = query_set(seed=5, n=6)
+
+    def rows(index, queries):
+        return sorted((r["query_id"], r["doc_id"], round(r["score"], 12),
+                       r["rank"]) for r in search(spark, index, queries, k=5,
+                                                  hydrate=False).collect()
+                      if r["query_id"] < len(qs))
+
+    expected = rows(idx, qs)
+    assert expected
+    monkeypatch.setattr(Q, "DF_MEMO_CAP", 2)
+    monkeypatch.setattr(Q, "DF_MEMO_ABSENT_CAP", 4)
+    capped = dataclasses.replace(idx, meta={
+        k: v for k, v in idx.meta.items() if not k.startswith("_df_memo")})
+    letters = "bcdfghjklmnpqrstvwxz"
+    for rnd in range(4):
+        oov = " ".join(f"qq{letters[rnd]}{a}{b}x"
+                       for a in letters[:3] for b in letters[:3])
+        assert rows(capped, qs + [oov]) == expected
+        memo = capped.meta["_df_memo"]
+        absent = capped.meta["_df_memo_absent"]
+        assert 0 < len(memo) <= 2 and 0 < len(absent) <= 4

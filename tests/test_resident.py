@@ -48,22 +48,41 @@ def test_resident_matches_lazy(spark, built):
         release_resident(warm)
 
 
-def test_resident_zero_jobs_before_scoring(spark, built):
+@pytest.fixture(scope="module")
+def built_tb(spark, tmp_path_factory):
+    """The serving layout: postings partitioned by term bucket, so
+    ``pruned_postings`` runs its resident bucket lookup."""
+    out = str(tmp_path_factory.mktemp("res_index_tb"))
+    docs = corpus_df(spark, N, seed=7, partitions=4)
+    docs = assign_dense_ids(docs, ["repo", "path", "commit"])
+    build_persistent(spark, docs, CFG, out, n_buckets=4, term_buckets=4)
+    return out
+
+
+def test_resident_zero_jobs_before_scoring(spark, built, built_tb):
     """Query embedding + postings pruning must launch NO Spark job in
-    the warm posture — the whole point of the resident stats."""
-    warm = load_index(spark, built, resident=True)
-    try:
-        sc = spark.sparkContext
-        sc.setJobGroup("resident-probe", "embed+prune must be local")
+    the warm posture — the whole point of the resident stats.  The
+    term-bucketed layout also collects the query terms for the bucket
+    lookup, which is job-free only because the query-term frame is a
+    LocalRelation (session.local_frame)."""
+    sc = spark.sparkContext
+    for layout, out in (("flat", built), ("term_buckets", built_tb)):
+        warm = load_index(spark, out, resident=True)
+        group = f"resident-probe-{layout}"
         try:
-            qterms = embed_queries(spark, warm, query_set(4))
-            pruned_postings(warm, qterms)   # plan construction only
+            sc.setJobGroup(group, "embed+prune must be local")
+            try:
+                qterms = embed_queries(spark, warm, query_set(4))
+                pruned = pruned_postings(warm, qterms)  # plan only
+            finally:
+                sc.setJobGroup(group + "-done", "")
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) \
+                == [], layout
+            # the bucketed layout really took the pruning branch
+            assert (pruned is not warm.postings) == (layout
+                                                     == "term_buckets")
         finally:
-            sc.setJobGroup("resident-probe-done", "")
-        assert list(sc.statusTracker().getJobIdsForGroup(
-            "resident-probe")) == []
-    finally:
-        release_resident(warm)
+            release_resident(warm)
 
 
 def test_resident_lazy_embed_does_launch_a_job(spark, built):
