@@ -348,15 +348,55 @@ def score_all(index: InvertedIndex, qterms: DataFrame) -> DataFrame:
     row here outranks every absent doc, so downstream top-k never needs
     corpus-wide scoring — the round-1 ``full=True`` plan's per-query
     corpus window and 2·n_docs cross-join are both gone."""
-    joined = (F.broadcast(qterms)
-              .join(pruned_postings(index, qterms)
-                    .select("term", "doc_id", "wnorm"), "term"))
-    hits = (joined
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum(F.col("qw") * F.col("wnorm")).alias("cos")))
+    hits = (score_contributions(index, qterms)
+            .groupBy("query_id", "doc_id").agg(F.sum("c").alias("cos")))
     score = score_transform_expr(F.lit(1.0) - F.col("cos"),
                                  index.cfg.score_alpha)
     return hits.select("query_id", "doc_id", score.alias("score"))
+
+
+def score_contributions(index: InvertedIndex,
+                        qterms: DataFrame) -> DataFrame:
+    """Per-posting cosine terms ``(query_id, doc_id, c = qw·wnorm)``:
+    the broadcast query terms joined to the (partition-pruned) postings.
+    Their sum per ``(query_id, doc_id)`` is the cosine."""
+    return (F.broadcast(qterms)
+            .join(pruned_postings(index, qterms)
+                  .select("term", "doc_id", "wnorm"), "term")
+            .select("query_id", "doc_id",
+                    (F.col("qw") * F.col("wnorm")).alias("c")))
+
+
+def zero_pad(index: InvertedIndex, qterms: DataFrame, k: int,
+             positive_only: bool = False) -> DataFrame:
+    """The dense-knn fill as zero-weight score contributions:
+    ``(query_id, doc_id, c = 0.0)`` for every query in ``qterms`` and
+    each of the globally lowest ``2k`` doc ids (``positive_only``: only
+    those of them with doclen > 0).
+
+    Unioned into the input of the score aggregation, a pad id that is
+    also a hit keeps its exact cosine (``x + 0.0 == x`` in IEEE-754,
+    and every ``c ≥ 0``) and a pad id with no posting sums to exactly
+    ``0.0`` — the fill row — so no anti-join against the hits is
+    needed.  The warm posture builds the rows from driver-held state:
+    the resident low-id prefix, and the query ids of the query-term
+    ``LocalRelation`` (a collect of it launches no job), exploded
+    against the id list so the plan stays O(queries + k)."""
+    res = index.resident
+    if res is not None and k <= res.pad_k:
+        low = [d for d, pos in res.low_ids[:2 * k] if pos or not positive_only]
+        qids = sorted({r[0] for r in qterms.select("query_id").collect()})
+        qid_frame = local_frame(qterms.sparkSession, [(q,) for q in qids],
+                                StructType([qterms.schema["query_id"]]))
+        ids = F.array(*[F.lit(d) for d in low]).cast("array<long>")
+        return qid_frame.select("query_id", F.explode(ids).alias("doc_id"),
+                                F.lit(0.0).alias("c"))
+    low = index.docs.orderBy("doc_id").limit(2 * k)
+    if positive_only:
+        low = low.where(F.col("doclen") > 0)
+    return (qterms.select("query_id").distinct()
+            .crossJoin(low.select("doc_id"))
+            .withColumn("c", F.lit(0.0)))
 
 
 # phase-1 salt fan-out for the two-phase top-k window (see topk_plan):
@@ -386,16 +426,19 @@ def topk_plan(index: InvertedIndex, qterms: DataFrame, k: int,
     ``1 − tanh(α·1)`` and pad the top-k (tie order: ascending doc_id,
     sortperm stability).  Since cosine ≥ 0, every matching doc outranks
     every non-matching doc, so padding needs only the globally lowest
-    ``2k`` doc_ids (≤ k of which can be displaced by matches) — a tiny
-    ``limit`` scan, not a full-corpus score."""
+    ``2k`` doc_ids (≤ k of which can be displaced by matches).  They
+    enter the score aggregation itself as zero-weight contributions
+    (:func:`zero_pad`): a pad id that is a hit keeps its exact cosine,
+    one that is not sums to the fill's ``cos = 0`` — so the postings
+    are scanned once, in one aggregation, with no anti-join."""
     cfg = index.cfg
-    joined = (F.broadcast(qterms)
-              .join(pruned_postings(index, qterms)
-                    .select("term", "doc_id", "wnorm"), "term"))
-    hits = (joined
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum(F.col("qw") * F.col("wnorm")).alias("cos")))
-    oov_hits = None
+    contrib = score_contributions(index, qterms)
+    if pad_to_k:
+        # under :large_vector the all-OOV docs score as hits (below),
+        # so the cos=0 pad must not double-cover them
+        contrib = contrib.unionByName(zero_pad(
+            index, qterms, k, positive_only=cfg.oov_policy == "large_vector"))
+    hits = contrib.groupBy("query_id", "doc_id").agg(F.sum("c").alias("cos"))
     if cfg.oov_policy == "large_vector":
         # E8 :large_vector (dtv.jl:53-58 + defaults.jl:26-27): an
         # all-OOV document embeds as the constant DEFAULT_OOV_VAL
@@ -420,53 +463,8 @@ def topk_plan(index: InvertedIndex, qterms: DataFrame, k: int,
         else:
             oov_low = (index.docs.where(F.col("doclen") == 0)
                        .orderBy("doc_id").limit(2 * k).select("doc_id"))
-        oov_hits = oov_cos.crossJoin(oov_low) \
-            .select("query_id", "doc_id", "cos")
-    if pad_to_k:
-        qids = qterms.select("query_id").distinct()
-        res = index.resident
-        if res is not None and k <= res.pad_k:
-            # warm posture: pad ids (and the all-OOV exclusion) are
-            # pure driver math over the resident prefix — the per-
-            # request docs scan disappears.  Same rows as the lazy
-            # plan: prefix-of-sorted = the 2k lowest, and filtering
-            # the prefix to doclen>0 = the lazy semi-join.
-            spark = qterms.sparkSession
-            low_pairs = res.low_ids[:2 * k]
-            if oov_hits is not None:
-                low_pairs = [(d, p) for d, p in low_pairs if p]
-            low = local_frame(spark,
-                [(d,) for d, _ in low_pairs], "doc_id LONG")
-            # membership probe RESTRICTED to the pad-candidate ids:
-            # (qid, d) ∈ hits ⟺ doc d has ≥1 posting on one of qid's
-            # terms, so this tiny filtered re-join decides the anti-
-            # join without re-evaluating the full scored aggregation
-            # (the lazy plan's `hits` right side re-ran the whole agg
-            # per request — measured 2.1 s of a 5 s warm request at
-            # 1M docs, BENCH.md r5 warm-serving table)
-            probe = (F.broadcast(qterms.select("query_id", "term"))
-                     .join(pruned_postings(index, qterms)
-                           .select("term", "doc_id")
-                           .where(F.col("doc_id").isin(
-                               [d for d, _ in low_pairs])), "term")
-                     .select("query_id", "doc_id").distinct())
-            pad = (qids.crossJoin(low)
-                   .join(probe, ["query_id", "doc_id"], "left_anti")
-                   .withColumn("cos", F.lit(0.0)))
-        else:
-            low = index.docs.orderBy("doc_id").limit(2 * k) \
-                .select("doc_id")
-            pad = (qids.crossJoin(low)
-                   .join(hits.select("query_id", "doc_id"),
-                         ["query_id", "doc_id"], "left_anti")
-                   .withColumn("cos", F.lit(0.0)))
-            if oov_hits is not None:
-                # the cos=0 pad must not double-cover the all-OOV docs
-                pad = pad.join(index.docs.where(F.col("doclen") > 0)
-                               .select("doc_id"), "doc_id", "left_semi")
-        hits = hits.unionByName(pad)
-    if oov_hits is not None:
-        hits = hits.unionByName(oov_hits)
+        hits = hits.unionByName(oov_cos.crossJoin(oov_low)
+                                .select("query_id", "doc_id", "cos"))
     score = score_transform_expr(F.lit(1.0) - F.col("cos"), cfg.score_alpha)
     hits = hits.withColumn("score", score)
     rank_on = (F.round(F.col("score"), tiebreak_round)

@@ -29,12 +29,14 @@ index tables once, and collect the *small* serving state to the driver —
 
 After this, query embedding, bucket pruning and pad construction are
 pure driver math that launches no Spark job.  A single classic request
-served through ``lifecycle.response_json`` then runs 10 Spark jobs
+served through ``lifecycle.response_json`` then runs 5 Spark jobs
 (traced perfbench ``serve`` run, seed 1, local[2] on a 4-core host:
-broadcasts of the driver-built query-term and page frames, the score
-aggregation and ranking over the cached postings, and the page
-hydrate), and none of them starts a Python-worker task: every
-driver-built frame is a ``LocalRelation`` (``session.local_frame``).
+the broadcast of the driver-built query-term frame, the score
+aggregation's single scan of the cached postings — the dense-knn pad
+rides it as zero-weight rows — the ranking collect, and the broadcast
+and join of the page hydrate), and none of them starts a Python-worker
+task: every driver-built frame is a ``LocalRelation``
+(``session.local_frame``).
 Result identity: the resident paths in ``embed_queries`` /
 ``pruned_postings`` / ``topk_plan`` consume the same values the lazy
 paths would have collected, so scores and ranks are bit-identical
@@ -182,23 +184,25 @@ def make_env_resident(env, pad_k: int = RESIDENT_PAD_K):
             return
         frame_attrs = [n for n, v in vars(obj).items()
                        if isinstance(v, DataFrame)]
-        owned: list[str] = []
+        # extend the record of an earlier call: a repeat call finds the
+        # frames already persisted and must not forget who owns them
+        owned: list[str] = getattr(obj, "_resident_owned", None) or []
         for n in frame_attrs:
             f = getattr(obj, n)
             if f.storageLevel.useMemory or f.storageLevel.useDisk:
                 continue                       # already persisted
             setattr(obj, n, f.persist())
             owned.append(n)
-        # record which frames THIS call persisted so shutdown releases
-        # exactly those — release_env_resident must not evict caches
-        # other code created (ADVICE r5)
-        obj._resident_owned = owned
         if hasattr(obj, "_doc_norms"):
             norms = obj._doc_norms()
             if not (norms.storageLevel.useMemory
                     or norms.storageLevel.useDisk):
                 obj._norms = norms.persist()
                 owned.append("_norms")
+        # record which frames these calls persisted so shutdown releases
+        # exactly those — release_env_resident must not evict caches
+        # other code created (ADVICE r5)
+        obj._resident_owned = owned
         _residentify(getattr(obj, "index", None))   # RP/LSA backing
         for n, v in vars(obj).items():
             if isinstance(v, DataFrame):

@@ -45,7 +45,8 @@ from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
 from garamond_jl_spark.functions.codec import unpack_f32, unpack_ids
 from garamond_jl_spark.functions.scoring import score_transform_expr
 from garamond_jl_spark.operators.build import InvertedIndex
-from garamond_jl_spark.operators.query import embed_queries
+from garamond_jl_spark.operators.query import (embed_queries, pruned_postings,
+                                              zero_pad)
 
 UNPACKED_SCHEMA = StructType([
     StructField("term", StringType(), False),
@@ -132,7 +133,6 @@ def wand_topk(spark: SparkSession, index: InvertedIndex,
     # short posting lists are always scored in full from flat postings
     # (partition-pruned to the query's term buckets) — both for θ
     # seeding (they sharpen it cheaply) and in phase 3
-    from garamond_jl_spark.operators.query import pruned_postings
     blocked_terms = qblocks.select("term").distinct()
     unblocked_posts = (pruned_postings(index, qterms)
                        .select("term", "doc_id", "wnorm")
@@ -196,7 +196,6 @@ def wand_topk(spark: SparkSession, index: InvertedIndex,
         # pruned_postings for the term-bucketed partition pruning the
         # exact/impact plans already get.
         from garamond_jl_spark.operators.build import block_strides
-        from garamond_jl_spark.operators.query import pruned_postings
         q_term_df = qt.select("term").distinct()
         strides = block_strides(index.terms, index.meta["n_docs"], cfg) \
             .join(F.broadcast(q_term_df), "term", "left_semi")
@@ -217,19 +216,14 @@ def wand_topk(spark: SparkSession, index: InvertedIndex,
             index.blocks.join(survivors, ["term", "min_doc_id"])) \
             .select("term", "doc_id", "wnorm") \
             .unionByName(unblocked_posts)
-    hits = (posts.join(qt.select("query_id", "term", "qw"), "term")
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum(F.col("qw") * F.col("wnorm")).alias("cos")))
+    contrib = (posts.join(qt.select("query_id", "term", "qw"), "term")
+               .select("query_id", "doc_id",
+                       (F.col("qw") * F.col("wnorm")).alias("c")))
     if pad_to_k:
-        # same fill construction as topk_plan (query.py): the globally
-        # lowest 2k doc_ids cover every pad slot
-        qids = qterms.select("query_id").distinct()
-        low = index.docs.orderBy("doc_id").limit(2 * k).select("doc_id")
-        pad = (qids.crossJoin(low)
-               .join(hits.select("query_id", "doc_id"),
-                     ["query_id", "doc_id"], "left_anti")
-               .withColumn("cos", F.lit(0.0)))
-        hits = hits.unionByName(pad)
+        # the fill enters the aggregation as zero-weight rows, exactly
+        # as in topk_plan (query.zero_pad)
+        contrib = contrib.unionByName(zero_pad(index, qterms, k))
+    hits = contrib.groupBy("query_id", "doc_id").agg(F.sum("c").alias("cos"))
     score = score_transform_expr(F.lit(1.0) - F.col("cos"), cfg.score_alpha)
     hits = hits.withColumn("score", score)
     rank_on = (F.round(F.col("score"), tiebreak_round)

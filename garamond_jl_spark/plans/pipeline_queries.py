@@ -386,7 +386,9 @@ sh AS (SELECT doc_id, cast({hi} AS BIGINT) AS sh_hi,
 
 # per-task cap on the term → sign-vector memo inside the SimHash Arrow
 # pass: Zipf reuse makes the hit rate high, but an unbounded dict over
-# a 10^8-term corpus vocabulary would OOM a worker (64 B/entry + key)
+# a 10^8-term corpus vocabulary would OOM a worker (64 B/entry + key).
+# Past the cap the oldest half (insertion order) is dropped rather than
+# the whole memo, so the newer half keeps answering without re-hashing
 _SIMHASH_SIGN_CACHE_CAP = 1_000_000
 
 
@@ -417,6 +419,7 @@ def _simhash64_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def simhash(batches):
         import hashlib
+        from itertools import islice
 
         import numpy as np
 
@@ -435,9 +438,14 @@ def _simhash64_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                 nibs[1::2] = dig & 15      # hex chars 2,4,6,...
                 bits = (nibs.repeat(2) >> np.tile([0, 1], 32)) & 1
                 s = (2 * bits.astype(np.int64) - 1)
-                if len(sign_cache) >= _SIMHASH_SIGN_CACHE_CAP:
-                    sign_cache.clear()
                 sign_cache[term] = s
+                cap = _SIMHASH_SIGN_CACHE_CAP
+                if len(sign_cache) > cap:
+                    # oldest half out, as query._evict_oldest (not
+                    # imported: the worker would load the engine)
+                    for t in list(islice(sign_cache,
+                                         len(sign_cache) - cap // 2)):
+                        del sign_cache[t]
             return s
 
         weights = (np.int64(1) << np.arange(32, dtype=np.int64))

@@ -154,6 +154,20 @@ def test_simhash_pairs_agree_with_minhash(spark):
     assert len(sh & mh) / max(len(sh), 1) >= 0.5  # precision
 
 
+def test_simhash_sign_cache_eviction_keeps_signatures(spark, monkeypatch):
+    """The per-task SimHash sign memo evicts its oldest half at the cap;
+    a tiny cap (constant eviction) must leave every signature as is."""
+    import garamond_jl_spark.plans.pipeline_queries as P
+    sf = "/root/testdata/sf0.01"
+
+    def rows():
+        return sorted(tuple(r) for r in P.dedup_simhash64(spark, sf).collect())
+
+    want = rows()
+    monkeypatch.setattr(P, "_SIMHASH_SIGN_CACHE_CAP", 4)
+    assert rows() == want and want
+
+
 def test_boe_rank_identity_vs_numpy(spark):
     """BOE top-k rank identity vs a NumPy oracle implementing the same
     reference semantics (boe.jl sum-of-word-vectors, cosine knn):

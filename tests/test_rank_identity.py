@@ -187,6 +187,54 @@ def test_oov_large_vector_without_pad(spark):
     assert 1 not in got                   # zero-overlap fill IS suppressed
 
 
+def test_pad_edges_match_oracle_both_postures(spark):
+    """The dense-knn pad enters the score aggregation as zero-weight
+    rows (query.zero_pad).  Against the oracle, lazy and resident:
+    a hit among the 2k lowest ids appears once with its real score,
+    a query with fewer hits than k fills its tail in doc_id order, and
+    under :large_vector the all-OOV docs inside the low prefix score as
+    OOV hits and are not padded a second time."""
+    from garamond_jl_spark.operators.resident import (make_resident,
+                                                      release_resident)
+    texts = ["!!! ??? ...", "alpha beta", "... ???", "gamma delta",
+             "delta epsilon", "epsilon zeta", "zeta eta", "eta theta",
+             "theta iota", "alpha alpha kappa", "kappa lambda",
+             "lambda mu"]
+    # k=5 → pad ids 0..9: "alpha" hits 1 (inside) and 9 (inside, last);
+    # "delta epsilon" hits 3,4,5; "lambda" hits only ids past the pad
+    queries = ["alpha", "delta epsilon", "lambda"]
+    k = 5
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id LONG, content STRING")
+    for policy in ("none", "large_vector"):
+        cfg = EngineConfig(score_alpha=TEST_SCORE_ALPHA, oov_policy=policy)
+        oracle = OracleIndex(texts, cfg)
+        index = build_index(spark, df, cfg, id_col="doc_id")
+        for posture in ("lazy", "resident"):
+            if posture == "resident":
+                make_resident(spark, index, pad_k=8)
+            try:
+                # the batch exercises the ranking window, each single
+                # query the one-request TakeOrdered plan
+                batch = search(spark, index, queries, k=k,
+                               hydrate=False).collect()
+                for qid, q in enumerate(queries):
+                    single = search(spark, index, [q], k=k,
+                                    hydrate=False).collect()
+                    for rows in ([r for r in batch
+                                  if r["query_id"] == qid], single):
+                        got = sorted(rows, key=lambda r: r["rank"])
+                        want = oracle.search(q, k)
+                        ids = [r["doc_id"] for r in got]
+                        assert ids == [d for d, _ in want], \
+                            (policy, posture, q)
+                        assert len(set(ids)) == len(ids)
+                        for r, (_, s) in zip(got, want):
+                            assert r["score"] == pytest.approx(s, abs=1e-12)
+            finally:
+                release_resident(index)
+
+
 def test_two_phase_topk_salt_invariance(spark, built, monkeypatch):
     """The salted two-phase ranking window (query.TOPK_SALTS) is
     rank-identical at every salt count — each salt's local top-k is a

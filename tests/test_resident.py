@@ -2,6 +2,9 @@
 the lazy posture, the zero-pre-scoring-jobs property, and the guard
 rails.  The latency claim itself is bench/warm_serving.py (BENCH.md)."""
 
+import re
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -97,6 +100,38 @@ def test_resident_lazy_embed_does_launch_a_job(spark, built):
         sc.setJobGroup("lazy-probe-done", "")
     assert len(list(sc.statusTracker().getJobIdsForGroup(
         "lazy-probe"))) >= 1
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan of a collected frame (AQE's final
+    plan when adaptive execution ran it)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_single_request_scans_postings_once(spark, built_tb):
+    """The dense-knn pad rides the score aggregation as zero-weight
+    rows: a single-query request has no anti-join and aggregates
+    (query_id, doc_id) once in both postures, and the resident one
+    reads the cached postings once."""
+    for resident in (True, False):
+        idx = load_index(spark, built_tb, resident=resident)
+        try:
+            df = search(spark, idx, ["main run"], k=5, hydrate=False)
+            assert len(df.collect()) == 5
+            plan = _final_plan(df)
+            assert "LeftAnti" not in plan, resident
+            if resident:
+                # the postings relation is the cached table led by `term`
+                assert len(re.findall(r"InMemoryRelation \[term#",
+                                      plan)) == 1
+            assert len(re.findall(
+                r"HashAggregate\(keys=\[query_id#\d+L?, doc_id#\d+L?\], "
+                r"functions=\[(?!partial_)", plan)) == 1, resident
+        finally:
+            release_resident(idx)
 
 
 def test_resident_large_vector_oov_identity(spark):
@@ -213,3 +248,35 @@ def test_env_resident_mixed_identity(spark, built):
     finally:
         release_env_resident(env)
         assert env.index.resident is None
+
+
+def test_env_resident_repeat_call_releases_everything(spark, built):
+    """A second make_env_resident finds the frames already persisted;
+    it must extend, not overwrite, the first call's ownership record so
+    release_env_resident frees every cache the first call created."""
+    from garamond_jl_spark.operators.resident import (make_env_resident,
+                                                      release_env_resident)
+    from garamond_jl_spark.operators.semantic import (
+        BOESearcher, synthetic_word_vectors)
+    from garamond_jl_spark.plans.lifecycle import SearchEnv
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def cached_rdds() -> set[int]:
+        rl = store.rddList(True)
+        return {int(rl.apply(i).id()) for i in range(rl.size())}
+
+    idx = load_index(spark, built)
+    tok = idx.postings.select("doc_id", "term", "tf")
+    wv = synthetic_word_vectors(tok.select("term"), dim=8, seed=3)
+    boe = BOESearcher.from_tokens(tok, wv, score_alpha=0.4)
+    env = SearchEnv(spark=spark, index=idx, searchers=[(boe, 1.0)])
+    baseline = cached_rdds()
+    make_env_resident(env)
+    assert cached_rdds() - baseline
+    make_env_resident(env)
+    release_env_resident(env)
+    deadline = time.time() + 30       # unpersist is asynchronous
+    while cached_rdds() - baseline and time.time() < deadline:
+        time.sleep(0.5)
+    assert not cached_rdds() - baseline
