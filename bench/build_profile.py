@@ -77,12 +77,12 @@ def main() -> None:
         t["termstats"] = min(t["termstats"], time.time() - t0)
 
         terms_p = terms.persist()
-        terms_p.count()
+        n_terms = terms_p.count()
         total_len = raw_p.agg(F.sum("tf")).collect()[0][0] or 0
         avgdl = float(total_len) / n_docs
 
         t0 = time.time()
-        pw = weighted_postings(raw_p, terms_p, avgdl, cfg)
+        pw = weighted_postings(raw_p, terms_p, avgdl, cfg, n_terms)
         pw.count()
         t["weighting"] = min(t["weighting"], time.time() - t0)
 

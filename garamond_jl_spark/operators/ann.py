@@ -74,24 +74,36 @@ def lsh_sign(p: int, i: int, seed: int = 0) -> float:
     return 1.0 if h[0] in _HEX_HIGH else -1.0
 
 
-def _lsh_sign_expr(seed: int) -> F.Column:
+def _lsh_sign_expr(seed: int | None) -> F.Column:
+    key = [] if seed is None else [F.lit(seed), F.lit("L")]
     return F.when(
-        F.substring(F.md5(F.concat_ws(":", F.lit(seed), F.lit("L"),
-                                      F.col("p"), F.col("i"))), 1, 1)
+        F.substring(F.md5(F.concat_ws(":", *key, F.col("p"), F.col("i"))),
+                    1, 1)
         .isin(*sorted(_HEX_HIGH)), F.lit(1.0)).otherwise(F.lit(-1.0))
 
 
-def lsh_buckets(dv: DataFrame, n_planes: int, seed: int = 0) -> DataFrame:
+def lsh_buckets(dv: DataFrame, n_planes: int, seed: int | None = 0,
+                dim: int | None = None) -> DataFrame:
     """Long-form embeddings (doc_id, i, dv) → (doc_id, bucket): the
-    sign pattern of ``n_planes`` deterministic ±1 hyperplane dots.  One
-    broadcast of the |dims|·n_planes sign table + one shuffle by
-    (doc_id, p); at scale the output is written bucketed BY bucket so a
-    probe reads only its buckets' files."""
+    sign pattern of ``n_planes`` deterministic ±1 hyperplane dots.
+
+    Plane ``p``'s sign at dimension ``i`` is the high bit of
+    md5('{seed}:L:{p}:{i}') (:func:`lsh_sign`), or of md5('{p}:{i}')
+    with ``seed=None`` — the key the DuckDB parity SQL hashes.  The
+    1-based dimensions come from a range over ``1..dim``; ``dim=None``
+    reads it with one scalar max-agg (a ``select('i').distinct()``
+    would re-run the embedding lineage plus a shuffle).  One broadcast
+    of the dim·n_planes sign table + one shuffle by (doc_id, p); at
+    scale the output is written bucketed BY bucket so a probe reads
+    only its buckets' files."""
     if n_planes > 62:
         raise ValueError(f"n_planes must be <= 62 (bucket is one long), "
                          f"got {n_planes}")
     spark = dv.sparkSession
-    planes = (dv.select("i").distinct()
+    if dim is None:
+        dim = int(dv.agg(F.max("i")).first()[0] or 0)
+    planes = (spark.range(1, dim + 1).select(F.col("id").cast("int")
+                                             .alias("i"))
               .crossJoin(F.broadcast(
                   spark.range(n_planes).select(F.col("id").alias("p"))))
               .withColumn("sgn", _lsh_sign_expr(seed)))
@@ -110,13 +122,16 @@ def lsh_buckets(dv: DataFrame, n_planes: int, seed: int = 0) -> DataFrame:
 
 
 def probe_masks(n_planes: int, radius: int) -> list[int]:
-    """All XOR masks flipping ≤ ``radius`` of ``n_planes`` bits —
-    multiprobe neighborhood of a bucket (sorted for determinism)."""
+    """All XOR masks flipping ≤ ``radius`` of ``n_planes`` bits — the
+    multiprobe neighborhood of a bucket (0 = the bucket itself), in
+    combination order: by Hamming weight, then lexicographic bit
+    combinations.  The parity oracle SQL lists the masks in this
+    order."""
     masks = [0]
     for r in range(1, radius + 1):
         for bits in combinations(range(n_planes), r):
             masks.append(sum(1 << b for b in bits))
-    return sorted(masks)
+    return masks
 
 
 class LSHCandidateIndex:

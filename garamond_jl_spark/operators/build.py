@@ -17,9 +17,10 @@ Shuffle budget (3 wide dependencies, each annotated below):
    (north rule; AQE alone cannot split a single mega-key inside one
    ``groupBy`` stage, SURVEY.md §4.2).  [shuffle #1: by (term, salt),
    then a tiny by-term merge]
-3. **weighting** — postings ⋈ terms on ``term`` (sort-merge; AQE skew
-   join) brings idf to each posting; BM25 is a pure column expression
-   (whole-stage codegen).  [shuffle #2: by term]
+3. **weighting** — postings ⋈ terms on ``term`` brings idf to each
+   posting (broadcast hash join while the dictionary fits, else
+   sort-merge with AQE skew join); BM25 is a pure column expression
+   (whole-stage codegen).  [shuffle #2: by term, sort-merge only]
 4. **cosine norms** — ``sum(w²) over (partition by doc_id)`` window →
    ``wnorm = w / ‖d‖`` stored per posting, so query time needs NO join
    against doc norms.  [shuffle #3: by doc_id]
@@ -39,7 +40,6 @@ every bucket whose lineage row and _SUCCESS marker exist.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
@@ -230,221 +230,45 @@ def term_stats(postings: DataFrame, n_docs: int,
 WEIGHTED_COLS = ["term", "doc_id", "tf", "doclen", "idf", "w", "norm",
                  "wnorm"]
 
-# norms="broadcast" safety valve: above this corpus size the per-doc
-# norms table stops being comfortably broadcastable (~24 B/doc) and the
-# plan falls back to the doc_id window
-NORM_BROADCAST_MAX_DOCS = 8_000_000
+# above this vocabulary size the dictionary stops being comfortably
+# broadcastable and weighted_postings delivers idf by a sort-merge join
+BROADCAST_IDF_MAX_VOCAB = 4_000_000
+
+
+def weight_and_norm(p: DataFrame, avgdl: float,
+                    cfg: EngineConfig) -> DataFrame:
+    """Add ``w`` (the weighting as a JVM expression over tf, doclen and
+    idf), ``norm = ‖d‖`` as ``sqrt(sum(w²)) over (partition by doc_id)``
+    and ``wnorm = w / norm``, so query time needs no join against doc
+    norms.  The index build and the incremental append both weight
+    through here."""
+    w = weight_expr(cfg.weighting, F.col("tf").cast("double"),
+                    F.col("doclen").cast("double"), F.lit(avgdl),
+                    F.col("idf"), cfg)
+    win = Window.partitionBy("doc_id")
+    return (p.withColumn("w", w)
+            .withColumn("norm",
+                        F.sqrt(F.sum(F.col("w") * F.col("w")).over(win)))
+            .withColumn("wnorm", F.col("w") / F.col("norm")))
 
 
 def weighted_postings(postings: DataFrame, terms: DataFrame,
                       avgdl: float, cfg: EngineConfig,
-                      local_norms: bool = False,
-                      broadcast_idf: bool = False,
-                      norms: str = "window",
-                      n_docs: int | None = None) -> DataFrame:
-    """Stages 3+4: per-posting weight ``w`` (JVM expression) and
-    L2-normalized ``wnorm = w/‖d‖``.
+                      n_terms: int) -> DataFrame:
+    """Stages 3+4: per-posting weight ``w`` and L2-normalized
+    ``wnorm = w/‖d‖`` (:func:`weight_and_norm`).
 
-    Two independently-chosen physical strategies (all value-identical
-    up to float addition order; every parity gate rounds at 1e-6):
-
-    * idf delivery — ``broadcast_idf=False``: postings⋈terms sort-merge
-      join (full-postings shuffle by term).  ``broadcast_idf=True``:
-      forced broadcast hash join (narrow — the dictionary is
-      Heaps-sublinear; callers guard with ``LOCAL_NORMS_MAX_VOCAB``).
-    * ``norms`` — ``"window"``: ``sum(w²) over (partition by doc_id)``
-      (full-postings shuffle by doc_id); the default.  ``"broadcast"``:
-      per-doc Σw² via map-side-combined ``groupBy(doc_id)`` (shuffle of
-      ~n_docs tiny rows) then a forced broadcast join back — guarded by
-      ``NORM_BROADCAST_MAX_DOCS`` when ``n_docs`` is passed (falls back
-      to the window plan above it).  CAVEAT: the probe
-      lineage (postings scan → idf join → weight projection) is
-      evaluated twice (agg + join back); in full-build A/Bs that
-      recompute costs more than the one doc_id shuffle it saves
-      (BENCH.md), so it's an opt-in for regimes where shuffle I/O is
-      the scarce resource and the postings scan is cheap to repeat.
-      ``"arrow"``: zero shuffles, see :func:`weighted_postings_local`
-      (requires broadcast_idf's narrow join to preserve tokenize's
-      doc-contiguity).
-
-    ``local_norms=True`` is the legacy alias for the arrow plan."""
-    if local_norms or norms == "arrow":
-        return weighted_postings_local(postings, terms, avgdl, cfg)
+    idf reaches the postings by a forced broadcast hash join while the
+    ``n_terms``-row dictionary fits (no shuffle of the postings by
+    term), else by a sort-merge join.  The norms always take the one
+    doc_id window shuffle: the broadcast-norms and Arrow-pass tiers
+    lost every full-build A/B against it (BENCH.md "Shuffle-light
+    weighting tiers") and were removed."""
     idf = terms.select("term", "idf")
-    p = postings.join(F.broadcast(idf) if broadcast_idf else idf, "term")
-    w = weight_expr(cfg.weighting, F.col("tf").cast("double"),
-                    F.col("doclen").cast("double"), F.lit(avgdl),
-                    F.col("idf"), cfg)
-    p = p.withColumn("w", w)
-    if norms == "broadcast":
-        # the safety valve is enforced HERE (not by convention): a
-        # forced broadcast of a too-large per-doc norms table hits
-        # Spark's broadcast hard limit or OOMs the driver with no
-        # graceful fallback.  Callers that know the corpus size pass
-        # n_docs; above the valve the plan falls back to the window.
-        if n_docs is not None and n_docs > NORM_BROADCAST_MAX_DOCS:
-            import warnings
-            warnings.warn(
-                f"norms='broadcast' requested for {n_docs} docs > "
-                f"NORM_BROADCAST_MAX_DOCS={NORM_BROADCAST_MAX_DOCS}; "
-                f"falling back to the window plan")
-            norms = "window"
-    if norms == "broadcast":
-        nrm = (p.groupBy("doc_id")
-               .agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("norm")))
-        p = p.join(F.broadcast(nrm), "doc_id")
-    elif norms == "window":
-        win = Window.partitionBy("doc_id")
-        p = p.withColumn("norm",
-                         F.sqrt(F.sum(F.col("w") * F.col("w")).over(win)))
-    else:
-        raise ValueError(f"unknown norms strategy: {norms!r}")
-    return p.withColumn("wnorm", F.col("w") / F.col("norm")) \
+    if n_terms <= BROADCAST_IDF_MAX_VOCAB:
+        idf = F.broadcast(idf)
+    return weight_and_norm(postings.join(idf, "term"), avgdl, cfg) \
         .select(*WEIGHTED_COLS)
-
-
-WEIGHTED_SCHEMA = StructType([
-    StructField("term", StringType(), False),
-    StructField("doc_id", LongType(), False),
-    StructField("tf", IntegerType(), False),
-    StructField("doclen", IntegerType(), False),
-    StructField("idf", DoubleType(), False),
-    StructField("w", DoubleType(), False),
-    StructField("norm", DoubleType(), False),
-    StructField("wnorm", DoubleType(), False),
-])
-
-# broadcast-idf safety valve: above this vocabulary size the dictionary
-# stops being comfortably broadcastable and weighted_postings falls back
-# to the classic shuffle plan (callers check; see build_index)
-LOCAL_NORMS_MAX_VOCAB = 4_000_000
-
-
-def weighted_postings_local(postings: DataFrame, terms: DataFrame,
-                            avgdl: float, cfg: EngineConfig) -> DataFrame:
-    """Shuffle-free stages 3+4.
-
-    The build-scaling investigation (BENCH.md) pinned the build's
-    non-scaling fraction on shared memory/IO bandwidth; the two
-    full-postings shuffles of the classic plan (59.5M rows × ~40 B
-    written+read twice at the 3M-doc protocol) are the largest
-    avoidable byte stream.  Both are avoidable because
-
-    * the dictionary is SUBLINEAR in the corpus (Heaps' law) — idf fits
-      in a broadcast hash join (narrow; per-partition row order is
-      preserved), and
-    * :func:`tokenize_to_postings` emits each document's postings as
-      one CONTIGUOUS run (each input row is one whole document), so the
-      per-doc ``Σw²`` is computable inside one ``mapInArrow`` pass with
-      a run-boundary carry across Arrow batches — no doc_id shuffle.
-
-    Contiguity can break only at PARTITION edges (a parquet re-read may
-    split a file mid-document; the first/last run of a partition may
-    continue in a neighbour).  Those docs are repaired exactly: a tiny
-    side job computes the true global ``Σw²`` for the ≤2·n_partitions
-    edge doc_ids and the pass substitutes them for the local run sums.
-    Interior runs are provably complete.
-
-    Output schema and values match the classic plan (norm addition
-    order differs in the last ulps; every parity gate rounds at 1e-6).
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    p = postings.join(F.broadcast(terms.select("term", "idf")), "term")
-    w = weight_expr(cfg.weighting, F.col("tf").cast("double"),
-                    F.col("doclen").cast("double"), F.lit(avgdl),
-                    F.col("idf"), cfg)
-    p = p.withColumn("w", w)
-
-    # --- edge docs: the first/last doc_id of every partition ----------
-    # (runs on the same scan lineage ⇒ identical partition boundaries)
-    def first_last(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        first = last = None
-        for b in batches:
-            col = b.column(b.schema.get_field_index("doc_id"))
-            if len(col):
-                if first is None:
-                    first = col[0].as_py()
-                last = col[len(col) - 1].as_py()
-        if first is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(sorted({first, last}), pa.int64())], ["doc_id"])
-
-    edge_ids = sorted({r["doc_id"] for r in postings.select("doc_id")
-                       .mapInArrow(first_last, "doc_id long").collect()})
-    edge_norms: dict[int, float] = {}
-    if edge_ids:
-        import math
-        rows = (p.where(F.col("doc_id").isin(edge_ids))
-                .groupBy("doc_id")
-                .agg(F.sum(F.col("w") * F.col("w")).alias("ss")).collect())
-        edge_norms = {r["doc_id"]: math.sqrt(r["ss"]) for r in rows}
-
-    in_cols = ["term", "doc_id", "tf", "doclen", "idf", "w"]
-
-    def add_norms(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        def flush(tbl: "pa.Table") -> "pa.RecordBatch":
-            tbl = tbl.combine_chunks()
-            ids = tbl.column("doc_id").to_numpy()
-            wv = tbl.column("w").to_numpy()
-            starts = np.flatnonzero(
-                np.concatenate(([True], ids[1:] != ids[:-1])))
-            sums = np.add.reduceat(wv * wv, starts)
-            norms = np.sqrt(sums)
-            if edge_norms:
-                for i, g in enumerate(ids[starts]):
-                    hit = edge_norms.get(int(g))
-                    if hit is not None:
-                        norms[i] = hit
-            lens = np.diff(np.append(starts, len(ids)))
-            norm_col = np.repeat(norms, lens)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                wnorm = wv / norm_col
-            arrays = [tbl.column(c).combine_chunks() for c in in_cols]
-            arrays += [pa.array(norm_col, pa.float64()),
-                       pa.array(wnorm, pa.float64())]
-            return pa.RecordBatch.from_arrays(arrays, in_cols + ["norm",
-                                                                 "wnorm"])
-
-        # the pending (possibly batch-spanning) trailing run is kept as
-        # a LIST of tables and concatenated once at flush — re-concat
-        # per batch was O(run²) row copies for a doc spanning many
-        # Arrow batches.  Invariant: every pend part holds rows of one
-        # single doc_id (the current trailing run).
-        pend_parts: list["pa.Table"] = []
-        for b in batches:
-            t = pa.Table.from_batches([b])
-            if t.num_rows == 0:
-                continue
-            ids = t.column("doc_id").to_numpy()
-            nz = np.flatnonzero(ids != ids[-1])
-            cut = 0 if nz.size == 0 else int(nz[-1]) + 1
-            if cut == 0:
-                # single-id batch: continues pend, or starts a new run
-                if pend_parts and pend_parts[0].column("doc_id")[0] \
-                        .as_py() != int(ids[0]):
-                    yield flush(pa.concat_tables(pend_parts))
-                    pend_parts = []
-                pend_parts.append(t)
-                continue
-            head = t.slice(0, cut)
-            if pend_parts:
-                if pend_parts[0].column("doc_id")[0].as_py() == int(ids[0]):
-                    yield flush(pa.concat_tables(pend_parts + [head]))
-                else:       # pend's run ended exactly at the boundary
-                    yield flush(pa.concat_tables(pend_parts))
-                    yield flush(head)
-                pend_parts = []
-            else:
-                yield flush(head)
-            tail = t.slice(cut)
-            if tail.num_rows:
-                pend_parts = [tail]
-        if pend_parts:
-            yield flush(pa.concat_tables(pend_parts))
-
-    return p.select(*in_cols).mapInArrow(add_norms, WEIGHTED_SCHEMA)
 
 
 def block_strides(terms: DataFrame, n_docs: int,
@@ -588,16 +412,8 @@ def build_index(spark: SparkSession, docs: DataFrame, cfg: EngineConfig,
     avgdl = float(total_len) / n_docs if n_docs else 0.0
     # persist WEIGHTED postings: otherwise every query batch would re-run
     # the terms join and the doc_id norm window (a full shuffle) — the
-    # persistent index stores wnorm for the same reason.  broadcast_idf
-    # kills the postings-by-term shuffle whenever the dictionary fits;
-    # norms stay on the window plan: the broadcast tier re-evaluates the
-    # probe lineage (scan → idf join → weight projection) TWICE — once
-    # for the norm agg, once for the join back — which measured slower
-    # than the one doc_id shuffle in every full-build A/B rep
-    # (BENCH.md); it remains an explicit weighted_postings(...) opt-in.
-    b_idf = n_terms <= LOCAL_NORMS_MAX_VOCAB
-    pw = weighted_postings(postings, terms, avgdl, cfg,
-                           broadcast_idf=b_idf, norms="window").persist()
+    # persistent index stores wnorm for the same reason
+    pw = weighted_postings(postings, terms, avgdl, cfg, n_terms).persist()
     terms_full = terms  # term_max added lazily when blocks are built
     blocks = None
     if with_blocks:

@@ -144,14 +144,7 @@ def build_persistent(spark: SparkSession, docs: DataFrame, cfg: EngineConfig,
 
     pw_dir = os.path.join(out_dir, "postings")
     if not (resume and _done(pw_dir)):
-        from garamond_jl_spark.operators.build import \
-            LOCAL_NORMS_MAX_VOCAB
-        # broadcast idf when the dictionary fits; norms keep the window
-        # plan — the broadcast tier double-evaluates the probe lineage
-        # (see build_index / BENCH.md full-build A/B) and stays opt-in
-        b_idf = n_terms <= LOCAL_NORMS_MAX_VOCAB
-        pw_out = weighted_postings(postings, terms, avgdl, cfg,
-                                   broadcast_idf=b_idf, norms="window")
+        pw_out = weighted_postings(postings, terms, avgdl, cfg, n_terms)
         if term_buckets:
             # term-bucketed layout: postings partitioned by
             # pmod(xxhash64(term), term_buckets) so query plans prune

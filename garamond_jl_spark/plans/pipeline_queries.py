@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from garamond_jl_spark.operators import semantic as _SEM
+from garamond_jl_spark.operators.ann import lsh_buckets, probe_masks
 from garamond_jl_spark.plans.testdata_queries import ORACLES, QUERIES, e6, q
 from garamond_jl_spark.session import local_frame
 from garamond_jl_spark.sources.tables import load_testdata
@@ -589,20 +590,6 @@ def _vocab_hits(wv, terms):
             .distinct().collect()}
 
 
-def _probe_masks(n_planes: int, radius: int) -> list[int]:
-    """XOR masks enumerating every bucket within Hamming ``radius`` of
-    the query's bucket (0 = the bucket itself).  The radius is honored
-    exactly: 0 really is the plain same-bucket join and 3+ really
-    probes the wider ball (the old version unconditionally added the
-    Hamming-1 masks and silently capped at 2)."""
-    from itertools import combinations
-    masks = [0]
-    for r in range(1, radius + 1):
-        for bits in combinations(range(n_planes), r):
-            masks.append(sum(1 << b for b in bits))
-    return masks
-
-
 def _lsh_bucket_cte(n_planes: int) -> str:
     """Deterministic random-hyperplane buckets (md5(plane:dim) high-bit
     signs) as a SQL CTE chain ending in ``bkt(vec_id, bucket)``."""
@@ -641,31 +628,38 @@ def _emb_long(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("i", F.col("i") + 1))
 
 
-def _lsh_buckets_df(u: DataFrame, n_planes: int = N_PLANES,
-                    dim: int | None = None) -> DataFrame:
-    """(vec_id, bucket) under the deterministic hyperplane LSH.  The
-    dimension list comes from one scalar max-agg (the long form is
-    dense 1..dim) — a ``select('i').distinct()`` re-ran the whole
-    embedding lineage plus a shuffle per call just to enumerate it.
-    Callers that know the embedding width pass ``dim`` and skip even
-    that scalar job (r6)."""
-    spark = u.sparkSession
-    if dim is None:
-        dim = int(u.agg(F.max("i")).first()[0])
-    planes = (spark.range(1, dim + 1).select(F.col("id").cast("int")
-                                             .alias("i"))
-              .crossJoin(F.broadcast(
-                  spark.range(n_planes).select(F.col("id").alias("p"))))
-              .withColumn("sgn", F.when(
-                  F.substring(F.md5(F.concat_ws(":", F.col("p"), F.col("i"))), 1, 1)
-                  .isin(*HEX_HIGH), F.lit(1.0)).otherwise(F.lit(-1.0))))
-    proj = (u.join(F.broadcast(planes), "i")
-            .groupBy("vec_id", "p")
-            .agg(F.sum(F.col("v") * F.col("sgn")).alias("dot")))
-    return (proj.groupBy("vec_id")
-            .agg(F.sum(F.when(F.col("dot") >= 0,
-                              F.pow(F.lit(2.0), F.col("p"))).otherwise(F.lit(0.0)))
-                 .cast("long").alias("bucket")))
+def _vec_norms(u: DataFrame) -> DataFrame:
+    """(vec_id, nv): the L2 norm of every long-form vector."""
+    return u.groupBy("vec_id").agg(
+        F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nv"))
+
+
+def _cosine_rerank(u: DataFrame, cand: DataFrame, nrm: DataFrame,
+                   query_ids: list[int], k: int) -> DataFrame:
+    """Exact cosine rerank of (query_id, vec_id) candidates → top-k
+    (query_id, vec_id, cos_e6, rnk) per query, ties by vec_id.  ``nrm``
+    is :func:`_vec_norms` of ``u``; only the QUERIES' norms broadcast
+    (|query_ids| rows) — the unfiltered table is corpus-sized and would
+    ship to every executor."""
+    uq = u.select(F.col("vec_id").alias("query_id"), "i",
+                  F.col("v").alias("qv"))
+    dots = (cand.join(u, "vec_id")
+            .join(uq, ["query_id", "i"])
+            .groupBy("query_id", "vec_id")
+            .agg(F.sum(F.col("v") * F.col("qv")).alias("dot")))
+    nq = (nrm.where(F.col("vec_id").isin(*query_ids))
+          .select(F.col("vec_id").alias("query_id"),
+                  F.col("nv").alias("nq")))
+    cosd = (dots.join(nrm, "vec_id").join(F.broadcast(nq), "query_id")
+            .select("query_id", "vec_id",
+                    (F.col("dot") / (F.col("nv") * F.col("nq")))
+                    .alias("c")))
+    w = Window.partitionBy("query_id").orderBy(
+        F.round(F.col("c"), 6).desc(), F.col("vec_id").asc())
+    return (cosd.withColumn("rnk", F.row_number().over(w).cast("long"))
+            .where(F.col("rnk") <= k)
+            .select("query_id", "vec_id", e6(F.col("c")).alias("cos_e6"),
+                    "rnk"))
 
 
 @q("ann_cosine_topk", f"""
@@ -715,7 +709,8 @@ def ann_lsh_buckets(spark, sf_dir):
     ±1 hyperplanes derived from md5(plane:dim) high-bit, bucket = sign
     pattern.  Neighbor candidates at scale = bucket-equality join
     instead of the quadratic cross join."""
-    return _lsh_buckets_df(_emb_long(spark, sf_dir))
+    return lsh_buckets(_emb_long(spark, sf_dir).toDF("doc_id", "i", "dv"),
+                       N_PLANES, seed=None).toDF("vec_id", "bucket")
 
 
 def ann_lsh_search(u: DataFrame, query_ids: list[int], k: int,
@@ -741,42 +736,25 @@ def ann_lsh_search(u: DataFrame, query_ids: list[int], k: int,
     # the candidate join) — checkpoint the tiny (vec_id, bucket) table
     # once instead of re-deriving the projection+bucket aggregation per
     # consumer (r6, guide §2.4; ~16 B/vector at any corpus size)
-    bkt = _lsh_buckets_df(u, n_planes, dim=dim) \
+    bkt = lsh_buckets(u.toDF("doc_id", "i", "dv"), n_planes, seed=None,
+                      dim=dim).toDF("vec_id", "bucket") \
         .localCheckpoint(eager=True)
     qb = (bkt.where(F.col("vec_id").isin(*query_ids))
           .select(F.col("vec_id").alias("query_id"),
                   F.col("bucket").alias("qbkt")))
     masks = local_frame(spark,
-        [(m,) for m in _probe_masks(n_planes, radius)], "m LONG")
+        [(m,) for m in probe_masks(n_planes, radius)], "m LONG")
     probes = (qb.crossJoin(F.broadcast(masks))
               .select("query_id", F.expr("qbkt ^ m").alias("pbkt")))
     cand = (F.broadcast(probes)
             .join(bkt, bkt["bucket"] == probes["pbkt"])
             .where(F.col("vec_id") != F.col("query_id"))
             .select("query_id", "vec_id").distinct())
-    uq = u.select(F.col("vec_id").alias("query_id"), "i",
-                  F.col("v").alias("qv"))
-    dots = (cand.join(u, "vec_id")
-            .join(uq, ["query_id", "i"])
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum(F.col("v") * F.col("qv")).alias("dot")))
-    nrm = u.groupBy("vec_id").agg(F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nv"))
-    # only the QUERIES' norms broadcast (|query_ids| rows) — the
-    # unfiltered nrm is corpus-sized and would ship to every executor
-    nq = (nrm.where(F.col("vec_id").isin(*query_ids))
-          .select(F.col("vec_id").alias("query_id"), F.col("nv").alias("nq")))
-    cosd = (dots.join(nrm, "vec_id").join(F.broadcast(nq), "query_id")
-            .select("query_id", "vec_id",
-                    (F.col("dot") / (F.col("nv") * F.col("nq"))).alias("c")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("c"), 6).desc(), F.col("vec_id").asc())
-    return (cosd.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .where(F.col("rnk") <= k)
-            .select("query_id", "vec_id", e6(F.col("c")).alias("cos_e6"), "rnk"))
+    return _cosine_rerank(u, cand, _vec_norms(u), query_ids, k)
 
 
 _ANN_MASK_VALUES = ", ".join(
-    f"({m})" for m in _probe_masks(ANN_PLANES, ANN_PROBE_RADIUS))
+    f"({m})" for m in probe_masks(ANN_PLANES, ANN_PROBE_RADIUS))
 
 
 @q("ann_lsh_topk", f"""
@@ -811,9 +789,15 @@ FROM cosd QUALIFY rnk <= {ANN_K}
 def ann_lsh_topk(spark, sf_dir):
     """Parity wrapper: multiprobe LSH ANN over the embeddings table
     (see :func:`ann_lsh_search`).  The embedding width comes from one
-    1-row peek at the array column — not a full-table max-agg."""
+    min/max agg over the array sizes, which also rejects ragged
+    widths (a plane table sized by one row would silently drop the
+    dimensions of longer vectors)."""
     e = load_testdata(spark, sf_dir, "embeddings")
-    dim = int(e.select(F.size("embedding")).first()[0])
+    lo, hi = e.agg(F.min(F.size("embedding")),
+                   F.max(F.size("embedding"))).first()
+    if lo != hi:
+        raise ValueError(f"ragged embeddings: widths range {lo}..{hi}")
+    dim = int(hi or 0)
     return ann_lsh_search(_emb_long(spark, sf_dir),
                           list(ANN_QUERY_IDS), ANN_K, dim=dim)
 
@@ -865,8 +849,7 @@ def ann_ivf_search(u: DataFrame, query_ids: list[int], k: int,
         centroids = (u.where(F.col("vec_id") < n_centroids)
                      .select(F.col("vec_id").alias("cid"), "i",
                              F.col("v").alias("cv")))
-    nrm = u.groupBy("vec_id").agg(
-        F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nv"))
+    nrm = _vec_norms(u)
     cnrm = centroids.groupBy("cid").agg(
         F.sqrt(F.sum(F.col("cv") * F.col("cv"))).alias("nc"))
     # with a precomputed assignment, centroid cosines are needed for the
@@ -890,25 +873,7 @@ def ann_ivf_search(u: DataFrame, query_ids: list[int], k: int,
     cand = (F.broadcast(probes).join(asg, "cid")
             .where(F.col("vec_id") != F.col("query_id"))
             .select("query_id", "vec_id").distinct())
-    uq = u.select(F.col("vec_id").alias("query_id"), "i",
-                  F.col("v").alias("qv"))
-    dots = (cand.join(u, "vec_id")
-            .join(uq, ["query_id", "i"])
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum(F.col("v") * F.col("qv")).alias("dot")))
-    nq = (nrm.where(F.col("vec_id").isin(*query_ids))
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("nv").alias("nq")))
-    cosd = (dots.join(nrm, "vec_id").join(F.broadcast(nq), "query_id")
-            .select("query_id", "vec_id",
-                    (F.col("dot") / (F.col("nv") * F.col("nq")))
-                    .alias("c")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("c"), 6).desc(), F.col("vec_id").asc())
-    return (cosd.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .where(F.col("rnk") <= k)
-            .select("query_id", "vec_id", e6(F.col("c")).alias("cos_e6"),
-                    "rnk"))
+    return _cosine_rerank(u, cand, nrm, query_ids, k)
 
 
 _IVF_QUERY_VALUES = ", ".join(f"({q})" for q in ANN_QUERY_IDS)
@@ -1006,27 +971,7 @@ def ann_hnsw_search(u: DataFrame, query_ids: list[int], k: int,
             .select(F.col("query_id").cast("long").alias("query_id"),
                     F.col("doc_id").alias("vec_id"))
             .where(F.col("vec_id") != F.col("query_id")))
-    uq = u.select(F.col("vec_id").alias("query_id"), "i",
-                  F.col("v").alias("qv"))
-    dots = (cand.join(u, "vec_id")
-            .join(uq, ["query_id", "i"])
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum(F.col("v") * F.col("qv")).alias("dot")))
-    nrm = u.groupBy("vec_id").agg(
-        F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nv"))
-    nq = (nrm.where(F.col("vec_id").isin(*query_ids))
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("nv").alias("nq")))
-    cosd = (dots.join(nrm, "vec_id").join(F.broadcast(nq), "query_id")
-            .select("query_id", "vec_id",
-                    (F.col("dot") / (F.col("nv") * F.col("nq")))
-                    .alias("c")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("c"), 6).desc(), F.col("vec_id").asc())
-    return (cosd.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .where(F.col("rnk") <= k)
-            .select("query_id", "vec_id", e6(F.col("c")).alias("cos_e6"),
-                    "rnk"))
+    return _cosine_rerank(u, cand, _vec_norms(u), query_ids, k)
 
 
 @q("ann_hnsw_topk", f"""
@@ -1730,7 +1675,7 @@ WITH {EMB_NORM_CTE},
 cand AS (
   SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
   FROM bkt a
-  CROSS JOIN (SELECT unnest([{", ".join(str(m) for m in _probe_masks(N_PLANES, 1))}]) AS m) mm
+  CROSS JOIN (SELECT unnest([{", ".join(str(m) for m in probe_masks(N_PLANES, 1))}]) AS m) mm
   JOIN bkt b ON xor(a.bucket, mm.m) = b.bucket AND a.vec_id < b.vec_id
 ),
 dots AS (
@@ -1776,9 +1721,10 @@ def embedding_cosine_pairs(u: DataFrame, threshold: float = DEDUP_COS_T,
     test_pipeline_ops."""
     # both sides of the bucket equi-join read the same tiny bucket
     # table — checkpoint it once (r6, same reuse fix as ann_lsh_search)
-    bkt = _lsh_buckets_df(u, n_planes).localCheckpoint(eager=True)
+    bkt = lsh_buckets(u.toDF("doc_id", "i", "dv"), n_planes, seed=None) \
+        .toDF("vec_id", "bucket").localCheckpoint(eager=True)
     masks = F.explode(F.array(*[
-        F.lit(m) for m in _probe_masks(n_planes, probe_radius)])).alias("m")
+        F.lit(m) for m in probe_masks(n_planes, probe_radius)])).alias("m")
     a = (bkt.select(F.col("vec_id").alias("vec_a"), "bucket", masks)
          .select("vec_a",
                  F.col("bucket").bitwiseXOR(F.col("m")).alias("bucket")))
@@ -1791,8 +1737,7 @@ def embedding_cosine_pairs(u: DataFrame, threshold: float = DEDUP_COS_T,
     dots = (cand.join(x, "vec_a").join(y, ["vec_b", "i"])
             .groupBy("vec_a", "vec_b")
             .agg(F.sum(F.col("va") * F.col("vb")).alias("dot")))
-    nrm = u.groupBy("vec_id").agg(
-        F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nv"))
+    nrm = _vec_norms(u)
     na = nrm.select(F.col("vec_id").alias("vec_a"), F.col("nv").alias("na"))
     nb = nrm.select(F.col("vec_id").alias("vec_b"), F.col("nv").alias("nb"))
     return (dots.join(na, "vec_a").join(nb, "vec_b")

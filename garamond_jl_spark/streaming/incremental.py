@@ -52,11 +52,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from garamond_jl_spark.operators.build import InvertedIndex, tokenize_to_postings
+from garamond_jl_spark.operators.build import (InvertedIndex,
+                                               tokenize_to_postings,
+                                               weight_and_norm)
 from garamond_jl_spark.operators.persist import (_check_tokenizer,
                                                  build_persistent, load_index,
                                                  read_meta)
-from garamond_jl_spark.functions.scoring import weight_expr
 from garamond_jl_spark.session import local_frame
 
 
@@ -163,14 +164,9 @@ def _append_docs_inner(spark, out_dir, new_docs, id_col, text_col,
     # pseudo-document convention embed_queries uses), so BM25 length
     # normalization of pushed docs matches the reference's push! path.
     p = postings.join(terms.select("term", "idf"), "term")
-    win = Window.partitionBy("doc_id")
-    p = p.withColumn("doclen", F.sum("tf").over(win).cast("int"))
-    w = weight_expr(cfg.weighting, F.col("tf").cast("double"),
-                    F.col("doclen").cast("double"), F.lit(m["avgdl"]),
-                    F.col("idf"), cfg)
-    p = p.withColumn("w", w)
-    p = (p.withColumn("norm", F.sqrt(F.sum(F.col("w") * F.col("w")).over(win)))
-         .withColumn("wnorm", F.col("w") / F.col("norm")))
+    p = p.withColumn("doclen", F.sum("tf").over(Window.partitionBy("doc_id"))
+                     .cast("int"))
+    p = weight_and_norm(p, m["avgdl"], cfg)
 
     prefix = "first" if _position == "first" else "batch"
     # nanosecond commit stamp: (a) same-second pushes keep a

@@ -64,3 +64,69 @@ def test_assign_dense_ids_empty_input(spark):
                                       "commit STRING, content STRING")
     out = assign_dense_ids(empty, ["repo", "path", "commit"])
     assert out.count() == 0 and "doc_id" in out.columns
+
+
+WEIGHT_DOCS = [
+    (0, "spark shuffle join window aggregate spark"),
+    (1, "broadcast join skew salt"),
+    (2, "window window window rank"),
+    (3, "tokenize arrow batch spark broadcast"),
+    (4, "varbyte delta block max wand"),
+    (5, "singleton"),
+]
+
+
+def test_build_index_stores_n_terms_and_unit_norms(spark):
+    docs = spark.createDataFrame(WEIGHT_DOCS, "doc_id LONG, content STRING")
+    idx = build_index(spark, docs, EngineConfig(),
+                      tokenizer=lambda s: s.split())
+    assert idx.meta["n_terms"] == idx.terms.count()
+    # wnorm is L2-normalized per doc: Σ wnorm² = 1 for every doc
+    sums = (idx.postings.groupBy("doc_id")
+            .agg(F.sum(F.col("wnorm") * F.col("wnorm")).alias("s"))
+            .collect())
+    assert len(sums) == len(WEIGHT_DOCS)
+    for r in sums:
+        assert r["s"] == pytest.approx(1.0, abs=1e-9)
+
+
+def test_idf_broadcast_and_sort_merge_weighting_match(spark, monkeypatch):
+    """Both idf deliveries of weighted_postings — the broadcast hash
+    join a fitting dictionary takes and the sort-merge join above
+    BROADCAST_IDF_MAX_VOCAB — give the same (term, doc_id) → (w, norm,
+    wnorm) map."""
+    import garamond_jl_spark.operators.build as B
+    cfg = EngineConfig()
+    docs = spark.createDataFrame(WEIGHT_DOCS, "doc_id LONG, content STRING") \
+        .repartition(3)
+    postings = B.tokenize_to_postings(docs, cfg,
+                                      tokenizer=lambda s: s.split()).persist()
+    n_docs = len(WEIGHT_DOCS)
+    avgdl = postings.agg(F.sum("tf")).collect()[0][0] / n_docs
+    terms = B.term_stats(postings, n_docs, cfg).persist()
+    n_terms = terms.count()
+
+    def weighted():
+        df = B.weighted_postings(postings, terms, avgdl, cfg, n_terms)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan, {(r["term"], r["doc_id"]): (r["w"], r["norm"],
+                                                 r["wnorm"])
+                      for r in df.collect()}
+
+    # no automatic broadcast: the sort-merge arm must really sort-merge
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan_b, bcast = weighted()
+        monkeypatch.setattr(B, "BROADCAST_IDF_MAX_VOCAB", 0)
+        plan_s, merged = weighted()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        terms.unpersist()
+        postings.unpersist()
+    assert "BroadcastHashJoin" in plan_b and "SortMergeJoin" not in plan_b
+    assert "SortMergeJoin" in plan_s and "BroadcastHashJoin" not in plan_s
+    assert bcast.keys() == merged.keys() and len(bcast) > len(WEIGHT_DOCS)
+    for key, vb in bcast.items():
+        for x, y in zip(vb, merged[key]):
+            assert x == pytest.approx(y, abs=1e-12), (key, vb, merged[key])

@@ -38,3 +38,21 @@ def test_gate_head_fits_driver_snapshot():
     rows_only = {n for n in qs if n not in osql}
     assert rows_only <= set(entry.GATE_TAIL)
     assert all(n in osql for n in head)
+
+
+# sha256 over (name, SQL) of every oracle in name order, measured on
+# the frozen registry: any change to an oracle text (a reordered mask
+# list, a renamed constant spliced into an f-string) changes it
+ORACLE_SQL_SHA256 = \
+    "8304968036a6eb71c26568cbdd95984de47a97a82d9f43ed569c5b8ac55b11f4"
+
+
+def test_oracle_sql_text_is_frozen():
+    import hashlib
+    osql = entry.oracle_sql()
+    assert len(osql) == 66
+    h = hashlib.sha256()
+    for name in sorted(osql):
+        h.update(name.encode())
+        h.update(osql[name].encode())
+    assert h.hexdigest() == ORACLE_SQL_SHA256

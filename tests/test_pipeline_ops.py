@@ -278,14 +278,48 @@ def test_probe_masks_honor_radius():
     """radius=0 is the plain same-bucket join, radius=3 probes the
     full Hamming-3 ball (the old version forced Hamming-1 in and
     silently capped at 2)."""
-    from garamond_jl_spark.plans.pipeline_queries import _probe_masks
-    assert _probe_masks(6, 0) == [0]
-    r1 = _probe_masks(6, 1)
+    from garamond_jl_spark.operators.ann import probe_masks
+    from garamond_jl_spark.plans.pipeline_queries import (
+        ANN_PLANES, ANN_PROBE_RADIUS, ORACLES)
+    assert probe_masks(6, 0) == [0]
+    r1 = probe_masks(6, 1)
     assert sorted(r1) == [0, 1, 2, 4, 8, 16, 32]
     import math
-    assert len(_probe_masks(6, 2)) == 1 + 6 + math.comb(6, 2)
-    assert len(_probe_masks(6, 3)) == 1 + 6 + math.comb(6, 2) + \
+    assert len(probe_masks(6, 2)) == 1 + 6 + math.comb(6, 2)
+    assert len(probe_masks(6, 3)) == 1 + 6 + math.comb(6, 2) + \
         math.comb(6, 3)
     # all masks unique and within the plane width
-    m3 = _probe_masks(6, 3)
+    m3 = probe_masks(6, 3)
     assert len(set(m3)) == len(m3) and max(m3) < 2 ** 6
+    # combination order (by weight, then bit combination), as the
+    # frozen ann_lsh_topk oracle SQL lists them; that SQL is generated
+    # from probe_masks, so the literal is what pins the order
+    import re
+    line = next(ln for ln in ORACLES["ann_lsh_topk"].splitlines()
+                if ln.startswith("masks(m) AS (VALUES"))
+    listed = [int(v) for v in re.findall(r"\((\d+)\)", line)]
+    assert probe_masks(ANN_PLANES, ANN_PROBE_RADIUS) == listed == [
+        0, 1, 2, 4, 8, 16, 32, 3, 5, 9, 17, 33, 6, 10, 18, 34, 12, 20,
+        36, 24, 40, 48]
+
+
+def test_ann_lsh_topk_rejects_ragged_embedding_widths(spark, tmp_path):
+    """The embedding width is validated where the table is loaded: a
+    ragged table raises instead of sizing the hyperplanes by one row
+    and silently dropping the other rows' extra dimensions."""
+    from garamond_jl_spark.plans.pipeline_queries import ann_lsh_topk
+
+    def write(sf, rows):
+        spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<FLOAT>") \
+            .write.parquet(str(tmp_path / sf / "embeddings.parquet"))
+        return str(tmp_path / sf)
+
+    ragged = write("ragged", [(0, [1.0, 0.0]), (1, [0.5, 0.5, 0.5]),
+                              (2, [0.0, 1.0])])
+    with pytest.raises(ValueError, match="ragged embeddings"):
+        ann_lsh_topk(spark, ragged)
+    even = write("even", [(0, [1.0, 0.0]), (1, [0.5, 0.5]),
+                          (2, [0.0, 1.0])])
+    got = {(r["query_id"], r["vec_id"]) for r in
+           ann_lsh_topk(spark, even).collect()}
+    assert got <= {(a, b) for a in range(3) for b in range(3) if a != b}

@@ -299,33 +299,39 @@ def test_stats_probe_join_path_identity(spark, built, monkeypatch):
     assert base == joined
 
 
-def test_df_stats_memo_identity_and_live_bypass(spark, built):
+def test_df_stats_memo_identity_and_live_bypass(spark, built, monkeypatch):
     """Repeat searches answer term stats from the per-index memo (r6)
-    with identical results, and a live-delta view bypasses the memo."""
+    with identical results and no stats probe; a live-delta view
+    bypasses the memo and probes even when the memo is warm."""
     import garamond_jl_spark.operators.query as Q
+    from garamond_jl_spark.operators.build import InvertedIndex
     idx = built[0]
     qs = query_set(seed=3, n=6)
-    first = sorted((r["query_id"], r["doc_id"], r["rank"])
-                   for r in search(spark, idx, qs, k=5,
-                                   hydrate=False).collect())
+
+    def rows(index):
+        return sorted((r["query_id"], r["doc_id"], r["rank"])
+                      for r in search(spark, index, qs, k=5,
+                                      hydrate=False).collect())
+
+    first = rows(idx)
     assert idx.meta.get("_df_memo")          # memo populated
-    again = sorted((r["query_id"], r["doc_id"], r["rank"])
-                   for r in search(spark, idx, qs, k=5,
-                                   hydrate=False).collect())
-    assert first == again
-    # a live view must not consult the frozen memo
-    live_meta = dict(idx.meta)
-    live_meta["live_deltas"] = True
-    from garamond_jl_spark.operators.build import InvertedIndex
+    calls = []
+    probe = Q._stats_probe
+
+    def counting_probe(terms, query_terms):
+        calls.append(len(query_terms))
+        return probe(terms, query_terms)
+
+    monkeypatch.setattr(Q, "_stats_probe", counting_probe)
+    assert rows(idx) == first
+    assert calls == []                       # warm frozen repeat: no probe
+    # a live view carries the same warm memo but must not consult it
     live = InvertedIndex(docs=idx.docs, terms=idx.terms,
-                         postings=idx.postings, meta=live_meta,
+                         postings=idx.postings,
+                         meta={**idx.meta, "live_deltas": True},
                          tokenizer=idx.tokenizer)
-    live_rows = sorted((r["query_id"], r["doc_id"], r["rank"])
-                       for r in search(spark, live, qs, k=5,
-                                       hydrate=False).collect())
-    assert live_rows == first                # same frozen stats today,
-    # but fetched through the probe, not the memo (no new memo object)
-    assert live_meta.get("_df_memo") is idx.meta.get("_df_memo")
+    assert rows(live) == first               # same frozen stats today,
+    assert calls                             # but fetched through the probe
 
 
 def test_df_stats_memo_bounded_under_oov_flood(spark, built, monkeypatch):
