@@ -56,7 +56,7 @@ def main() -> None:
                       shuffle_partitions=None)
     spark.sparkContext.setLogLevel("ERROR")
     cfg = EngineConfig()
-    idx_dir = f"/tmp/garamond_wand_idx_{args.docs}"   # shared with wand_cold
+    idx_dir = f"/tmp/garamond_plan_auto_idx_{args.docs}"
     if not os.path.exists(os.path.join(idx_dir, "meta.json")):
         docs = assign_dense_ids(
             corpus_df(spark, args.docs, seed=42, partitions=64),

@@ -14,7 +14,8 @@ Reference evidence (all paths relative to /root/reference/):
   — src/search/index.jl:186-202, src/config/defaults.jl:25; the
   reference test config uses 0.4 (test/configs/configgenerator.jl:46).
 * Float32 vector eltype — src/config/defaults.jl:13.
-* max_matches default — src/config/defaults.jl:61.
+* max_matches default (the request-level ``InternalRequest.max_matches``,
+  plans/lifecycle.py) — src/config/defaults.jl:61.
 * text strip flags — src/config/defaults.jl:32-37.
 
 [SA-public] formulas (StringAnalysis.jl v0.4.0 ``src/stats.jl`` lineage,
@@ -47,19 +48,6 @@ NORTH_RULE_B: float = 0.75
 
 DEFAULT_SCORE_ALPHA: float = 0.5   # defaults.jl:25
 TEST_SCORE_ALPHA: float = 0.4      # test/configs/configgenerator.jl:46
-DEFAULT_MAX_MATCHES: int = 1000
-
-# posting-block size cap: bounds per-(term, block) group memory at build
-# and the unit of block-max WAND pruning at query time.  4096 doc ids per
-# block keeps the packed binary ≲ 32 KiB worst-case.
-DEFAULT_BLOCK_SIZE: int = 4096
-
-# terms with shorter posting lists than this are not block-packed: their
-# lists are already tiny (block-max pruning cannot save anything) and at
-# real-code vocabularies the df=1 long tail would dominate the packer's
-# group count.  WAND scores unblocked query terms from flat postings.
-DEFAULT_MIN_BLOCK_DF: int = 256
-
 # hot-term salting: number of salt buckets for the two-stage groupBy used
 # for document-frequency aggregation at web scale (Zipf head terms).
 DEFAULT_TERM_SALT_BUCKETS: int = 64
@@ -96,9 +84,6 @@ class EngineConfig:
     beta: float = REFERENCE_BM25_BETA
     score_alpha: float = DEFAULT_SCORE_ALPHA
     weighting: str = "bm25"          # count | tf | tfidf | bm25 (defaults.jl:10)
-    max_matches: int = DEFAULT_MAX_MATCHES
-    block_size: int = DEFAULT_BLOCK_SIZE
-    min_block_df: int = DEFAULT_MIN_BLOCK_DF
     term_salt_buckets: int = DEFAULT_TERM_SALT_BUCKETS
     # text preparation flags — mirrors DEFAULT_TEXT_STRIP_FLAGS
     # (defaults.jl:32-37): strip case, punctuation, whitespace runs,
@@ -137,7 +122,7 @@ def cfg_to_dict(cfg: EngineConfig) -> dict:
     reads tokenization flags (lowercase/strip_accents/strip_stopwords/
     token_pattern) as well as scoring constants — a persisted index must
     round-trip all of them or load_index silently tokenizes queries
-    differently than the build did (the min_block_df regression class)."""
+    differently than the build did."""
     import dataclasses
     d = dataclasses.asdict(cfg)
     if not d.get("extra"):

@@ -24,16 +24,10 @@ Shuffle budget (3 wide dependencies, each annotated below):
 4. **cosine norms** — ``sum(w²) over (partition by doc_id)`` window →
    ``wnorm = w / ‖d‖`` stored per posting, so query time needs NO join
    against doc norms.  [shuffle #3: by doc_id]
-5. **block packing** — skew-free bounded groups: per-term stride
-   ``stride(t) = 2^ceil(log2(block_size · n_docs / df_t))`` buckets
-   ``doc_id div stride`` so every ``groupBy(term, bucket)`` group holds
-   ≤ ~block_size postings *regardless of term hotness*; an Arrow
-   ``applyInPandas`` packs each group into docID-delta+varbyte blocks
-   with block-max scores for WAND.  No windows over hot terms anywhere.
 
 Persistence (``build_persistent``): stages write parquet tables (the
 Iceberg stand-in, sources/tables.py) with per-bucket lineage rows
-(docs tokenized, postings emitted, bytes packed) and are
+(docs tokenized, postings emitted, token total) and are
 checkpoint-resumable: a killed build re-run with ``resume=True`` skips
 every bucket whose lineage row and _SUCCESS marker exist.
 """
@@ -43,14 +37,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
+                               StructType)
 
 from garamond_jl_spark.config import EngineConfig
-from garamond_jl_spark.functions.codec import pack_f32, pack_ids, varbyte_encode
 from garamond_jl_spark.functions.scoring import idf_expr, weight_expr
 from garamond_jl_spark.functions.textprep import tokenize_with_config
 from garamond_jl_spark.session import local_frame
@@ -62,27 +54,15 @@ POSTINGS_SCHEMA = StructType([
     StructField("doclen", IntegerType(), False),
 ])
 
-BLOCKS_SCHEMA = StructType([
-    StructField("term", StringType(), False),
-    StructField("min_doc_id", LongType(), False),
-    StructField("max_doc_id", LongType(), False),
-    StructField("n", IntegerType(), False),
-    StructField("ids", BinaryType(), False),
-    StructField("tfs", BinaryType(), False),
-    StructField("wnorms", BinaryType(), False),
-    StructField("block_max_wnorm", DoubleType(), False),
-])
-
 
 @dataclass
 class InvertedIndex:
-    """The searchable state: 3-4 tables + scalar meta (the analog of the
+    """The searchable state: 3 tables + scalar meta (the analog of the
     reference ``Searcher``, src/searchable/searcher.jl:8-17)."""
 
     docs: DataFrame       # doc_id, <carried cols>, doclen, norm
-    terms: DataFrame      # term, df, idf, term_max_wnorm
+    terms: DataFrame      # term, df, tf_sum, idf
     postings: DataFrame   # term, doc_id, tf, doclen, w, wnorm
-    blocks: DataFrame | None = None
     meta: dict = field(default_factory=dict)
     # the tokenizer the index was BUILT with; query embedding must use
     # the same one or query terms miss the vocabulary (None = the
@@ -271,66 +251,6 @@ def weighted_postings(postings: DataFrame, terms: DataFrame,
         .select(*WEIGHTED_COLS)
 
 
-def block_strides(terms: DataFrame, n_docs: int,
-                  cfg: EngineConfig) -> DataFrame:
-    """(term, _stride) for every blocked term — the df-adaptive bucket
-    stride ``pack_blocks`` groups by.  ONE definition: WAND's flat-path
-    scoring recomputes posting → bucket keys with this same expression
-    (operators/wand.py), and any drift between packer and query would
-    silently mis-map survivors to empty buckets."""
-    bs = float(cfg.block_size)
-    return terms.where(F.col("df") >= F.lit(cfg.min_block_df)).select(
-        "term",
-        F.pow(F.lit(2.0), F.ceil(F.log2(
-            F.greatest(F.lit(1.0),
-                       F.lit(bs) * F.lit(float(n_docs)) / F.col("df"))
-        ))).cast("long").alias("_stride"))
-
-
-def pack_blocks(postings_w: DataFrame, terms: DataFrame, n_docs: int,
-                cfg: EngineConfig) -> DataFrame:
-    """Stage 5: skew-free posting blocks with block-max scores.
-
-    Bucket by ``doc_id div stride(term)`` with df-adaptive stride so
-    groups are bounded near block_size for hot terms and near df for
-    rare ones; each group packs independently (embarrassingly parallel,
-    no hot-term window).
-
-    Terms with df < cfg.min_block_df are NOT packed: real-code
-    dictionaries carry a df≈1 long tail that would dominate the packer's
-    group count while those posting lists are too short for block-max
-    pruning to ever help.  WAND reads unblocked query terms from the
-    flat postings table (operators/wand.py)."""
-    strides = block_strides(terms, n_docs, cfg)
-    p = (postings_w.join(strides, "term")
-         .withColumn("_bucket", (F.col("doc_id") / F.col("_stride")).cast("long")))
-
-    block_size = cfg.block_size
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        term = pdf["term"].iloc[0]
-        rows = []
-        for s in range(0, len(pdf), block_size):
-            chunk = pdf.iloc[s:s + block_size]
-            ids = chunk["doc_id"].to_numpy()
-            rows.append({
-                "term": term,
-                "min_doc_id": int(ids[0]),
-                "max_doc_id": int(ids[-1]),
-                "n": len(chunk),
-                "ids": pack_ids(ids),
-                "tfs": varbyte_encode(chunk["tf"].to_numpy()),  # plain varbyte (unsorted)
-                "wnorms": pack_f32(chunk["wnorm"].to_numpy()),
-                "block_max_wnorm": float(chunk["wnorm"].max()),
-            })
-        return pd.DataFrame(rows)
-
-    return (p.select("term", "doc_id", "tf", "wnorm", "_bucket")
-            .groupBy("term", "_bucket")
-            .applyInPandas(lambda key, pdf: pack(pdf), BLOCKS_SCHEMA))
-
-
 def doc_table(docs: DataFrame, postings_w: DataFrame, id_col: str,
               carry_cols: list[str]) -> DataFrame:
     """docs side table: carried metadata + doclen + norm (diagnostics /
@@ -358,7 +278,6 @@ def project_embeddable(docs: DataFrame, fields: list[str],
 def build_index(spark: SparkSession, docs: DataFrame, cfg: EngineConfig,
                 id_col: str | None = "doc_id", text_col: str = "content",
                 carry_cols: list[str] | None = None,
-                with_blocks: bool = False,
                 tokenizer=None,
                 embeddable_fields: list[str] | None = None) -> InvertedIndex:
     """In-memory (lazy) build — the test/query-dev path.  The persistent,
@@ -414,13 +333,6 @@ def build_index(spark: SparkSession, docs: DataFrame, cfg: EngineConfig,
     # the terms join and the doc_id norm window (a full shuffle) — the
     # persistent index stores wnorm for the same reason
     pw = weighted_postings(postings, terms, avgdl, cfg, n_terms).persist()
-    terms_full = terms  # term_max added lazily when blocks are built
-    blocks = None
-    if with_blocks:
-        blocks = pack_blocks(pw, terms, n_docs, cfg)
-        terms_full = terms.join(
-            pw.groupBy("term").agg(F.max("wnorm").alias("term_max_wnorm")),
-            "term")
     dtab = doc_table(docs, pw, id_col, carry_cols)
     # "_aux_persist": build-time caches the returned index holds no
     # column handle to (the id_col=None dense-id DISK_ONLY corpus
@@ -434,5 +346,5 @@ def build_index(spark: SparkSession, docs: DataFrame, cfg: EngineConfig,
     meta = {"_aux_persist": aux,
             "n_docs": n_docs, "avgdl": avgdl, "n_terms": n_terms,
             "cfg": cfg}
-    return InvertedIndex(docs=dtab, terms=terms_full, postings=pw,
-                         blocks=blocks, meta=meta, tokenizer=tokenizer)
+    return InvertedIndex(docs=dtab, terms=terms, postings=pw,
+                         meta=meta, tokenizer=tokenizer)

@@ -30,10 +30,11 @@ re-derivation:
    exact plan (same output schema, same semantics, pad included).  The
    certificate decision is a |queries|-row collect.
 
-Reference counterpart: the same capability as block-max WAND pruning
-(src/index/hnsw.jl's role is ANN; the scoring-side pruning analog is
-our operators/wand.py) but batch-friendly: WAND needs θ state per
-query; champions are a static index-side table shared by every query.
+Reference counterpart: none — Garamond's classic search is an
+exhaustive cosine scan (src/index/naive.jl:15-32).  The capability is
+bound-certified early termination, batch-friendly: WAND needs θ state
+per query; champions are a static index-side table shared by every
+query.
 """
 
 from __future__ import annotations
@@ -249,7 +250,6 @@ def _certify_and_assemble(index: InvertedIndex, qterms: DataFrame,
     for pt in parts[1:]:
         out = out.unionByName(pt)
     # materialize the ≤ |queries|·k result so the caller's finally
-    # blocks can release the cached frames (same leak-avoidance
-    # contract as wand_topk — unpersist happens in impact_topk even on
-    # exceptions now)
+    # blocks can release the cached frames (unpersist happens in
+    # impact_topk even on exceptions)
     return out.localCheckpoint(eager=True)

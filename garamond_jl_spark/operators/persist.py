@@ -5,7 +5,7 @@ North-rule requirements covered here:
 * index state + posting segments live as Iceberg/parquet tables
   (sources/tables.py abstraction — parquet in this sandbox),
 * the build is **checkpoint-resumable with per-partition lineage and
-  metrics** (docs tokenized, postings emitted, bytes packed).
+  metrics** (docs tokenized, postings emitted, token total).
 
 Design: the expensive stage (tokenize → postings) is sharded into
 ``n_buckets`` deterministic document buckets
@@ -14,9 +14,9 @@ writing ``postings_raw/bucket=K/`` plus a lineage row; a killed build
 re-run with ``resume=True`` skips buckets whose lineage row exists and
 recomputes only the missing ones.  Bucket content is a pure function of
 the input, so a resumed build is byte-identical to an uninterrupted one
-(verified in tests).  Downstream stages (terms/weights/blocks/docs/meta)
-are cheap relative to tokenization and re-run as single jobs gated by
-their _SUCCESS markers.
+(verified in tests).  Downstream stages (terms/weights/champions/docs/
+meta) are cheap relative to tokenization and re-run as single jobs
+gated by their _SUCCESS markers.
 
 The reference's analog is whole-environment serialize/deserialize
 (S4, /root/reference/src/searchable/env.jl:31-39) — all-or-nothing and
@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from garamond_jl_spark.config import EngineConfig, cfg_from_dict, cfg_to_dict
 from garamond_jl_spark.operators.build import (InvertedIndex, doc_table,
-                                               pack_blocks, term_stats,
+                                               term_stats,
                                                tokenize_to_postings,
                                                weighted_postings)
 from garamond_jl_spark.session import local_frame
@@ -82,12 +82,12 @@ def build_persistent(spark: SparkSession, docs: DataFrame, cfg: EngineConfig,
                      champion_p: int = 8192,
                      term_buckets: int = 0,
                      term_bucket_splits: int = 8) -> InvertedIndex:
-    """Build the index into ``out_dir/{postings_raw,terms,postings,docs,
-    blocks,meta,lineage}``.  ``resume=True`` skips completed buckets and
-    completed downstream stages.  ``retain_content=True`` keeps the text
-    column in the docs table (Lucene stored-field style) so
-    ``compact(recompute_stats=True)`` can fully reindex from the index's
-    own state."""
+    """Build the index into ``out_dir/{postings_raw,terms,postings,
+    champions,docs,meta,lineage}``.  ``resume=True`` skips completed
+    buckets and completed downstream stages.  ``retain_content=True``
+    keeps the text column in the docs table (Lucene stored-field style)
+    so ``compact(recompute_stats=True)`` can fully reindex from the
+    index's own state."""
     os.makedirs(out_dir, exist_ok=True)
     if carry_cols is None:
         carry_cols = [c for c in docs.columns if c not in (id_col, text_col)]
@@ -157,18 +157,6 @@ def build_persistent(spark: SparkSession, docs: DataFrame, cfg: EngineConfig,
             pw_out.write.mode("overwrite").parquet(pw_dir)
     pw = spark.read.parquet(pw_dir)
 
-    blocks_dir = os.path.join(out_dir, "blocks")
-    if not (resume and _done(blocks_dir)):
-        pack_blocks(pw, terms, n_docs, cfg).write.mode("overwrite") \
-            .parquet(blocks_dir)
-    blocks = spark.read.parquet(blocks_dir)
-
-    tmax_dir = os.path.join(out_dir, "term_max")
-    if not (resume and _done(tmax_dir)):
-        pw.groupBy("term").agg(F.max("wnorm").alias("term_max_wnorm")) \
-            .write.mode("overwrite").parquet(tmax_dir)
-    terms_full = terms.join(spark.read.parquet(tmax_dir), "term")
-
     champ_dir = os.path.join(out_dir, "champions")
     if champion_p and not (resume and _done(champ_dir)):
         # per-term impact-ordered prefix for the champion-list plan
@@ -194,8 +182,7 @@ def build_persistent(spark: SparkSession, docs: DataFrame, cfg: EngineConfig,
             "term_bucket_splits": term_bucket_splits,
             "weighting": cfg.weighting,
             "kappa": cfg.kappa, "beta": cfg.beta,
-            "score_alpha": cfg.score_alpha, "block_size": cfg.block_size,
-            "min_block_df": cfg.min_block_df,
+            "score_alpha": cfg.score_alpha,
             "cfg": cfg_to_dict(cfg), "id_col": id_col, "text_col": text_col,
             "retain_content": retain_content,
             "champion_p": champion_p,
@@ -204,8 +191,7 @@ def build_persistent(spark: SparkSession, docs: DataFrame, cfg: EngineConfig,
     with open(os.path.join(out_dir, "meta.json"), "w") as f:
         json.dump(meta, f)
 
-    return InvertedIndex(docs=dtab, terms=terms_full, postings=pw,
-                         blocks=blocks,
+    return InvertedIndex(docs=dtab, terms=terms, postings=pw,
                          meta={"n_docs": n_docs, "avgdl": avgdl, "cfg": cfg,
                                "n_terms": n_terms,
                                "term_buckets": term_buckets,
@@ -224,9 +210,7 @@ def read_meta(out_dir: str) -> tuple[dict, EngineConfig]:
     else:  # legacy meta (pre-round-2): scoring keys only
         cfg = EngineConfig(kappa=m["kappa"], beta=m["beta"],
                            score_alpha=m["score_alpha"],
-                           weighting=m["weighting"],
-                           block_size=m["block_size"],
-                           min_block_df=m.get("min_block_df", 1))
+                           weighting=m["weighting"])
     return m, cfg
 
 
@@ -257,7 +241,9 @@ def load_index(spark: SparkSession, out_dir: str,
                tokenizer=None, resident: bool = False) -> InvertedIndex:
     """Open a persisted index — the 'load cache' path (env.jl:31-39
     analog): just table reads, no recompute.  An index built with a
-    custom ``tokenizer`` must be opened with the same one.
+    custom ``tokenizer`` must be opened with the same one.  Tables an
+    older engine wrote for the retired block-max WAND plan are never
+    read.
 
     ``resident=True`` switches to the warm serving posture
     (operators/resident.py): tables persisted + materialized, term
@@ -265,17 +251,14 @@ def load_index(spark: SparkSession, out_dir: str,
     Spark job — the long-lived ``gars`` server default."""
     m, cfg = read_meta(out_dir)
     _check_tokenizer(m, tokenizer)
-    terms = spark.read.parquet(os.path.join(out_dir, "terms"))
-    tmax = spark.read.parquet(os.path.join(out_dir, "term_max"))
     champ_dir = os.path.join(out_dir, "champions")
     champs = (spark.read.parquet(champ_dir)
               if os.path.exists(os.path.join(champ_dir, "_SUCCESS"))
               else None)
     idx = InvertedIndex(
         docs=spark.read.parquet(os.path.join(out_dir, "docs")),
-        terms=terms.join(tmax, "term"),
+        terms=spark.read.parquet(os.path.join(out_dir, "terms")),
         postings=spark.read.parquet(os.path.join(out_dir, "postings")),
-        blocks=spark.read.parquet(os.path.join(out_dir, "blocks")),
         meta={"n_docs": m["n_docs"], "avgdl": m["avgdl"], "cfg": cfg,
               "n_terms": m.get("n_terms"),
               "term_buckets": m.get("term_buckets"),

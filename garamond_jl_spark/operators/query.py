@@ -563,15 +563,13 @@ def search(spark: SparkSession, index: InvertedIndex, queries: list[str],
            stats: dict | None = None) -> DataFrame:
     """Batched top-k search; optionally hydrates doc metadata (J2).
 
-    ``plan`` selects the physical strategy — all three are
-    rank-identical (certificate / proven):
+    ``plan`` selects the physical strategy — both are rank-identical
+    (the impact plan's certificate proves it):
     * ``exact`` (default) — broadcast-join score of every posting of
       the query's terms; best for warm columnar postings.
     * ``impact`` — champion-list candidates + exactness certificate
       (operators/impact.py); wins on hot-term batches (7.4× at 200 q /
       1M docs, BENCH.md).
-    * ``wand`` — block-max pruning over packed blocks
-      (operators/wand.py); for cold compressed storage.
     * ``auto`` — :func:`choose_plan` picks exact/impact from the batch's
       term statistics (hot-shared-term batches route to impact).
 
@@ -581,9 +579,9 @@ def search(spark: SparkSession, index: InvertedIndex, queries: list[str],
     if plan == "auto":
         plan = choose_plan(index, queries)
     if index.cfg.oov_policy == "large_vector" and plan != "exact":
-        # the impact certificate and WAND θ-pruning do not model the
-        # constant OOV fill vectors — route to the exact plan, which
-        # implements the E8 semantics in its pad
+        # the impact certificate does not model the constant OOV fill
+        # vectors — route to the exact plan, which implements the E8
+        # semantics in its pad
         plan = "exact"
     if stats is not None:
         stats["plan"] = plan
@@ -592,10 +590,6 @@ def search(spark: SparkSession, index: InvertedIndex, queries: list[str],
         hits = impact_topk(spark, index, queries, k=k,
                            tiebreak_round=tiebreak_round, pad_to_k=pad_to_k,
                            stats=stats)
-    elif plan == "wand":
-        from garamond_jl_spark.operators.wand import wand_topk
-        hits = wand_topk(spark, index, queries, k=k,
-                         tiebreak_round=tiebreak_round, pad_to_k=pad_to_k)
     elif plan == "exact":
         # batch memoization (r6): identical query strings tokenize and
         # embed identically, so the scoring DAG runs once per DISTINCT

@@ -143,22 +143,6 @@ def fulltext_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("rank").cast("long").alias("rnk"))
 
 
-@q("fulltext_bm25_topk_wand", _ft_oracle_sql(FT_QUERY.split(), FT_K))
-def fulltext_bm25_topk_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same flagship query answered by the block-max WAND plan
-    (operators/wand.py) against the SAME DuckDB oracle — WAND's
-    rank-identity is checked inside the driver gate, not only in pytest."""
-    from garamond_jl_spark.operators.wand import wand_topk
-    docs = load_testdata(spark, sf_dir, "documents")
-    cfg = EngineConfig(score_alpha=0.4, block_size=64, min_block_df=1)
-    idx = build_index(spark, docs, cfg, id_col="doc_id", text_col="text",
-                      with_blocks=True,
-                      tokenizer=lambda s: [t for t in (s or "").split(" ") if t])
-    hits = wand_topk(spark, idx, [FT_QUERY], k=FT_K, tiebreak_round=6)
-    return hits.select("doc_id", e6(F.col("score")).alias("score_e6"),
-                       F.col("rank").cast("long").alias("rnk"))
-
-
 @q("fulltext_bm25_topk_impact", _ft_oracle_sql(FT_QUERY.split(), FT_K))
 def fulltext_bm25_topk_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship query answered by the champion-list impact-ordered

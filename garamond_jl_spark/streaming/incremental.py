@@ -339,9 +339,7 @@ def _read_optional(spark: SparkSession, path: str) -> DataFrame | None:
 def load_live_index(spark: SparkSession, out_dir: str,
                     tokenizer=None) -> InvertedIndex:
     """Open the index with deltas unioned and tombstones applied — the
-    LSM read path.  Blocks cover only the compacted main postings; the
-    exact plan unions deltas, so query via operators.query on this
-    object (WAND applies after compaction)."""
+    LSM read path; query via operators.query on this object."""
     recover_swap(out_dir)
     idx = load_index(spark, out_dir, tokenizer=tokenizer)
     if "_pos" in idx.docs.columns:
@@ -404,12 +402,8 @@ def load_live_index(spark: SparkSession, out_dir: str,
         # they can neither contain pushed docs nor reflect deletes, and
         # the impact plan's exactness certificate would still pass on
         # them (stale champion counts vs the frozen df) — drop them so
-        # impact_topk recomputes over the live postings.  Packed blocks
-        # are stale the same way (pushed docs absent, deleted docs
-        # resurfacing, block_max undercounting) — drop them too so
-        # plan='wand' fails loudly instead of silently mis-ranking.
+        # impact_topk recomputes over the live postings
         idx.champions = None
-        idx.blocks = None
         idx.meta = dict(idx.meta)
         # impact_topk reads this: certificate df must come from the
         # LIVE postings, not the frozen terms table
@@ -534,20 +528,13 @@ def compact(spark: SparkSession, out_dir: str,
     else:
         live.postings.write.parquet(os.path.join(snap, "postings"))
     live.docs.write.parquet(os.path.join(snap, "docs"))
-    live.terms.drop("term_max_wnorm").write.parquet(os.path.join(snap, "terms"))
-    live.postings.groupBy("term").agg(F.max("wnorm").alias("term_max_wnorm")) \
-        .write.parquet(os.path.join(snap, "term_max"))
-    from garamond_jl_spark.operators.build import pack_blocks
-    pack_blocks(spark.read.parquet(os.path.join(snap, "postings")),
-                spark.read.parquet(os.path.join(snap, "terms")),
-                live.meta["n_docs"], live.cfg) \
-        .write.parquet(os.path.join(snap, "blocks"))
+    live.terms.write.parquet(os.path.join(snap, "terms"))
     champion_p = int(m.get("champion_p") or 0)
     if champion_p:
-        # the fold recomputes term_max from live postings; champions
-        # need the same treatment — the copied meta keeps champion_p
-        # set, and a snapshot without the table would silently demote
-        # every impact_topk to a per-query champion_lists rebuild
+        # the fold recomputes champions from the live postings — the
+        # copied meta keeps champion_p set, and a snapshot without the
+        # table would silently demote every impact_topk to a per-query
+        # champion_lists rebuild
         from garamond_jl_spark.operators.impact import champion_lists
         champion_lists(
             InvertedIndex(docs=live.docs, terms=live.terms,

@@ -44,13 +44,13 @@ def test_gate_head_fits_driver_snapshot():
 # the frozen registry: any change to an oracle text (a reordered mask
 # list, a renamed constant spliced into an f-string) changes it
 ORACLE_SQL_SHA256 = \
-    "8304968036a6eb71c26568cbdd95984de47a97a82d9f43ed569c5b8ac55b11f4"
+    "8da669a2607355c4f24d96b973f416b7a00bb47f110bbd58f766f0204f28a5fc"
 
 
 def test_oracle_sql_text_is_frozen():
     import hashlib
     osql = entry.oracle_sql()
-    assert len(osql) == 66
+    assert len(osql) == 65
     h = hashlib.sha256()
     for name in sorted(osql):
         h.update(name.encode())

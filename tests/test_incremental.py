@@ -16,7 +16,7 @@ from garamond_jl_spark.streaming.incremental import (append_docs, compact,
                                                      load_live_index,
                                                      stream_append)
 
-CFG = EngineConfig(block_size=64, min_block_df=1)
+CFG = EngineConfig()
 
 
 @pytest.fixture()
@@ -83,9 +83,6 @@ def test_compact_preserves_results(spark, built):
     assert before == after
     # deltas folded in: no delta dirs remain
     assert not os.path.exists(os.path.join(built, "delta"))
-    # blocks rebuilt over merged postings
-    assert after_idx.blocks.agg(F.sum("n")).collect()[0][0] == \
-        spark.read.parquet(os.path.join(built, "postings")).count()
 
 
 def test_stream_append(spark, built, tmp_path):
@@ -327,14 +324,12 @@ def test_tokenizer_identity_enforced(spark, tmp_path):
 
 
 def test_live_view_plan_guards(spark, built):
-    """WAND's packed blocks and the impact certificate's frozen df are
-    both stale on a live view: wand raises a clear error, and the
+    """The impact certificate's frozen df is stale on a live view: the
     impact plan stays rank-identical to exact because its certificate
     reads df from the LIVE postings (the frozen df undercounts an
     appended-to term, which would certify a truncated champion list)."""
     from garamond_jl_spark.operators.impact import impact_topk
     from garamond_jl_spark.operators.query import topk_plan, embed_queries
-    from garamond_jl_spark.operators.wand import wand_topk
 
     # push many docs whose only in-vocab term is 'main', so that term's
     # live posting count outgrows a tiny champion prefix p
@@ -347,10 +342,7 @@ def test_live_view_plan_guards(spark, built):
                          + F2.monotonically_increasing_id()).cast("long")))
     assert append_docs(spark, built, bulk) > 0
     live = load_live_index(spark, built)
-    assert live.meta.get("live_deltas") and live.blocks is None
-
-    with pytest.raises(ValueError, match="blocks"):
-        wand_topk(spark, live, ["main run"], k=5)
+    assert live.meta.get("live_deltas") and live.champions is None
 
     got = impact_topk(spark, live, ["main run"], k=5, p=8,
                       tiebreak_round=6, pad_to_k=False).collect()

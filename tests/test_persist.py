@@ -1,7 +1,8 @@
-"""Persistent build (checkpoint/resume/lineage) + block-max WAND
-rank-identity vs the exact plan (BASELINE.md 'checkpoint resume' and
-north-star WAND requirements)."""
+"""Persistent build: checkpoint/resume/lineage, load and meta
+round-trips, legacy index directories (BASELINE.md 'checkpoint
+resume')."""
 
+import json
 import os
 import shutil
 
@@ -10,13 +11,11 @@ from pyspark.sql import functions as F
 
 from garamond_jl_spark.config import EngineConfig
 from garamond_jl_spark.corpus import corpus_df, query_set
-from garamond_jl_spark.operators.build import build_index
 from garamond_jl_spark.operators.persist import (build_persistent, lineage,
                                                  load_index)
 from garamond_jl_spark.operators.query import search
-from garamond_jl_spark.operators.wand import wand_topk
 
-CFG = EngineConfig(block_size=32, min_block_df=1)  # small blocks, all terms
+CFG = EngineConfig()
 N = 200
 
 
@@ -69,7 +68,7 @@ def test_resume_skips_done_and_is_identical(spark, pindex, out_dir, tmp_path):
     shutil.rmtree(os.path.join(out2, "lineage"))
     os.rename(lin_path, os.path.join(out2, "lineage"))
     # downstream stages are stale too — remove so resume recomputes
-    for stage in ("terms", "postings", "blocks", "docs", "term_max"):
+    for stage in ("terms", "postings", "docs"):
         shutil.rmtree(os.path.join(out2, stage))
 
     before = {r["bucket"]: r["finished_at"]
@@ -87,95 +86,6 @@ def test_load_index_roundtrip(spark, pindex, out_dir):
     loaded = load_index(spark, out_dir)
     assert loaded.meta["n_docs"] == idx.meta["n_docs"]
     assert abs(loaded.meta["avgdl"] - idx.meta["avgdl"]) < 1e-9
-    assert loaded.blocks.count() == idx.blocks.count()
-
-
-def test_blocks_cover_postings(spark, pindex):
-    idx, _ = pindex
-    total = idx.blocks.agg(F.sum("n")).collect()[0][0]
-    assert total == idx.postings.count()
-    # block size bound respected
-    assert idx.blocks.agg(F.max("n")).collect()[0][0] <= CFG.block_size
-
-
-@pytest.mark.parametrize("scoring", ["flat", "blocks"])
-def test_wand_rank_identity_vs_exact(spark, pindex, out_dir, scoring):
-    """Both WAND scoring modes must be rank-identical (ids and scores)
-    to the exact flat-postings plan on the same index."""
-    idx = load_index(spark, out_dir)
-    queries = [q for q in query_set(seed=42, n=16) if q]
-    exact = search(spark, idx, queries, k=10, hydrate=False,
-                   pad_to_k=False).collect()
-    wand = wand_topk(spark, idx, queries, k=10, scoring=scoring,
-                     pad_to_k=False).collect()
-    def by_q(rows):
-        d = {}
-        for r in rows:
-            d.setdefault(r["query_id"], []).append(r)
-        return {k: sorted(v, key=lambda r: r["rank"]) for k, v in d.items()}
-    e, w = by_q(exact), by_q(wand)
-    assert set(e) == set(w)
-    for qid in e:
-        assert [r["doc_id"] for r in e[qid]] == [r["doc_id"] for r in w[qid]], \
-            f"{scoring}: query {qid}: {queries[qid]!r}"
-        for a, b in zip(e[qid], w[qid]):
-            assert a["score"] == pytest.approx(b["score"], abs=1e-6)
-
-
-def test_wand_mixed_blocked_unblocked(spark, tmp_path):
-    """With the production min_block_df threshold, rare query terms have
-    no blocks and are scored from flat postings — results must still be
-    rank-identical to the exact plan."""
-    from garamond_jl_spark.operators.build import build_index
-    cfg = EngineConfig(block_size=16, min_block_df=8)
-    docs = corpus_df(spark, 150, seed=9, partitions=2)
-    idx = build_index(spark, docs, cfg, id_col=None, with_blocks=True)
-    # a query mixing a hot head term and a rare (likely unblocked) term
-    queries = ["get", "get parse_1", "parse_1 merge_2", "main run data get"]
-    exact = search(spark, idx, queries, k=8, hydrate=False,
-                   pad_to_k=False).collect()
-    wand = wand_topk(spark, idx, queries, k=8, pad_to_k=False).collect()
-    key = lambda rows: sorted((r["query_id"], r["rank"], r["doc_id"],
-                               round(r["score"], 9)) for r in rows)
-    assert key(exact) == key(wand)
-    # the threshold actually produced unblocked terms in this index
-    blocked = {r["term"] for r in idx.blocks.select("term").distinct().collect()}
-    vocab = {r["term"] for r in idx.terms.select("term").collect()}
-    assert blocked < vocab
-
-
-def test_wand_pad_identity_sparse_query(spark, pindex, out_dir):
-    """A query matching fewer than k docs must return the SAME padded
-    result from the wand plan as from the exact plan (pad_to_k default
-    True — previously wand silently dropped padding)."""
-    idx = load_index(spark, out_dir)
-    # find a rare term (df < k) so the query has < k true matches
-    rare = (idx.terms.orderBy(F.col("df").asc(), F.col("term").asc())
-            .limit(1).collect()[0])
-    assert rare["df"] < 10
-    queries = [rare["term"]]
-    exact = search(spark, idx, queries, k=10, hydrate=False).collect()
-    wand = wand_topk(spark, idx, queries, k=10).collect()
-    key = lambda rows: sorted((r["query_id"], r["rank"], r["doc_id"],
-                               round(r["score"], 9)) for r in rows)
-    assert len(exact) == 10          # padded to k
-    assert key(exact) == key(wand)
-
-
-def test_wand_prunes_blocks(spark, pindex, out_dir):
-    """The pruning phase must actually drop blocks for selective queries
-    (sanity that this is not a no-op plan)."""
-    idx = load_index(spark, out_dir)
-    from garamond_jl_spark.operators.query import embed_queries
-    queries = ["get set main"]
-    qterms = embed_queries(spark, idx, queries)
-    n_all = (qterms.join(idx.blocks.select("term", "min_doc_id"), "term")
-             .count())
-    # run wand and count unpacked survivor blocks via the same logic
-    # (replicated inline: top-1 seed per term + theta prune)
-    # cheap proxy: assert wand returns correct rows AND the index has
-    # more than k blocks for these hot terms so pruning had material
-    assert n_all > 10
 
 
 def test_meta_roundtrips_full_config(spark, tmp_path):
@@ -185,8 +95,8 @@ def test_meta_roundtrips_full_config(spark, tmp_path):
     from garamond_jl_spark.operators.persist import read_meta
     out = str(tmp_path / "idx_cfg")
     # hyphenated tokens survive only under this custom pattern
-    cfg = EngineConfig(block_size=64, min_block_df=1, lowercase=True,
-                       strip_accents=False, token_pattern=r"[a-z0-9_\-]+",
+    cfg = EngineConfig(lowercase=True, strip_accents=False,
+                       token_pattern=r"[a-z0-9_\-]+",
                        ngram_complexity=2, oov_policy="large_vector")
     docs = corpus_df(spark, 40, seed=9, partitions=2).withColumn(
         "content", F.concat(F.col("content"), F.lit(" spe-cial spe-cial")))
@@ -201,6 +111,61 @@ def test_meta_roundtrips_full_config(spark, tmp_path):
     assert hits.count() > 0  # query tokenized like the build
 
 
+def test_legacy_index_with_block_tables_opens(spark, tmp_path):
+    """An index written by an engine that still packed WAND blocks
+    carries block_size/min_block_df/max_matches in meta.json (top level
+    and under cfg) and blocks/ + term_max/ directories.  It must open
+    through load_index and load_live_index with the same answers, the
+    leftover tables must never be read (the stub term_max/ holds one
+    foreign term: joining it into the vocabulary would empty every
+    result), and compaction must not carry them forward."""
+    from garamond_jl_spark.operators.build import assign_dense_ids
+    from garamond_jl_spark.operators.persist import read_meta
+    from garamond_jl_spark.session import local_frame
+    from garamond_jl_spark.streaming.incremental import (compact,
+                                                         load_live_index)
+    out = str(tmp_path / "idx_legacy")
+    docs = assign_dense_ids(corpus_df(spark, 60, seed=5, partitions=2),
+                            ["repo", "path", "commit"])
+    build_persistent(spark, docs, CFG, out, n_buckets=2)
+    queries = ["main run", "get set data"]
+
+    def answers(idx):
+        return sorted((r["query_id"], r["doc_id"], round(r["score"], 9),
+                       r["rank"])
+                      for r in search(spark, idx, queries, k=8,
+                                      hydrate=False).collect())
+
+    want = answers(load_index(spark, out))
+    assert want and want == answers(load_live_index(spark, out))
+
+    meta_path = os.path.join(out, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    legacy = {"block_size": 64, "min_block_df": 1, "max_matches": 1000}
+    meta.update(legacy)
+    meta["cfg"].update(legacy)
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    local_frame(spark, [("get", 0, 0.5)],
+                "term STRING, min_doc_id BIGINT, block_max_wnorm DOUBLE") \
+        .write.parquet(os.path.join(out, "blocks"))
+    local_frame(spark, [("zzz_legacy_stub", 0.5)],
+                "term STRING, term_max_wnorm DOUBLE") \
+        .write.parquet(os.path.join(out, "term_max"))
+
+    assert answers(load_index(spark, out)) == want
+    assert answers(load_live_index(spark, out)) == want
+    compact(spark, out)
+    assert not {"blocks", "term_max"} & set(os.listdir(out))
+    assert answers(load_live_index(spark, out)) == want
+    # pre-round-2 meta: scalar scoring keys only, next to the block keys
+    del meta["cfg"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    assert read_meta(out)[1] == CFG
+
+
 def test_custom_tokenizer_guard(spark, tmp_path):
     """An index built with a custom tokenizer refuses to open without
     one (silent tokenizer mismatch = wrong/empty results)."""
@@ -212,8 +177,7 @@ def test_custom_tokenizer_guard(spark, tmp_path):
     from garamond_jl_spark.operators.build import assign_dense_ids
     docs = assign_dense_ids(corpus_df(spark, 30, seed=11, partitions=2),
                             ["repo", "path", "commit"])
-    cfg = EngineConfig(block_size=64, min_block_df=1)
-    build_persistent(spark, docs, cfg, out, n_buckets=2,
+    build_persistent(spark, docs, CFG, out, n_buckets=2,
                      tokenizer=shouty_tokenizer)
     with pytest.raises(ValueError, match="tokenizer"):
         load_index(spark, out)

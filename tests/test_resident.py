@@ -15,7 +15,7 @@ from garamond_jl_spark.operators.persist import build_persistent, load_index
 from garamond_jl_spark.operators.query import embed_queries, pruned_postings, search
 from garamond_jl_spark.operators.resident import make_resident, release_resident
 
-CFG = EngineConfig(block_size=32, min_block_df=1)
+CFG = EngineConfig()
 N = 200
 
 
@@ -137,8 +137,7 @@ def test_single_request_scans_postings_once(spark, built_tb):
 def test_resident_large_vector_oov_identity(spark):
     """The :large_vector OOV pad path uses the driver-held low-id
     prefixes; scores must stay bit-identical to the lazy plan."""
-    cfg = EngineConfig(block_size=32, min_block_df=1,
-                       oov_policy="large_vector")
+    cfg = EngineConfig(oov_policy="large_vector")
     docs = corpus_df(spark, 80, seed=11, partitions=2)
     docs = assign_dense_ids(docs, ["repo", "path", "commit"])
     # blank out a few docs so all-OOV (doclen=0) rows exist
