@@ -127,7 +127,7 @@ def main() -> None:
     t_build = time.time() - t_build
     ann = _FixedQuerySearcher(dv, qv_rows, candidate_index=idx)
     t_ann = _timed(lambda: ann.sparse_hits(spark, "q").count())
-    n_cand = idx.candidates(qv_rows).count()
+    n_cand = idx.candidates_batch({0: qv_rows}).count()
     results["dense_request"] = {
         "full_scan_rows": n_scan, "full_scan_sec": round(t_scan, 2),
         "lsh_build_sec": round(t_build, 2),

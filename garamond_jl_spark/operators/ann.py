@@ -22,11 +22,13 @@ Spark shape — everything is candidate-set algebra over DataFrames:
 * build time: one assignment pass over the corpus (broadcast the tiny
   quantizer, shuffle by id), output partitioned/bucketable by list id
   so a probe prunes partitions at scale;
-* query time: the query side is DRIVER-side math on one dim-sized
-  vector (bucket bits / centroid distances / ADC tables are all
-  O(dim·K) scalars), turned into an ``isin``/broadcast join against
-  the assignment table — the corpus is touched only on the probed
-  lists, never scanned.
+* query time: one probe per index, ``candidates_batch({query_id:
+  qv_rows})`` (a single query is a batch of one); the query side is
+  DRIVER-side math on each dim-sized query vector (bucket bits /
+  centroid distances / ADC tables are all O(dim·K) scalars), turned
+  into a static ``isin`` over the batch's probed buckets/lists plus a
+  broadcast join against the assignment table — the corpus is touched
+  only on the probed lists, never scanned.
 
 Determinism: hyperplanes and k-means/PQ initialization derive from md5
 of (seed, tag, key) — the repo-wide derandomization trick — so every
@@ -136,10 +138,11 @@ def probe_masks(n_planes: int, radius: int) -> list[int]:
 
 class LSHCandidateIndex:
     """Bucketed candidate generator over a long-form doc-embedding
-    table: ``candidates(qv_rows)`` returns the doc_ids in every bucket
-    within Hamming ``radius`` of the query's bucket.  Query-side cost
-    is driver math (n_planes · dim multiply-adds) + one isin-pruned
-    read of the (doc_id, bucket) table — the corpus is never scanned.
+    table: ``candidates_batch({query_id: qv_rows})`` returns, per
+    query, the doc_ids in every bucket within Hamming ``radius`` of the
+    query's bucket.  Query-side cost is driver math (n_planes · dim
+    multiply-adds per query) + one isin-pruned read of the (doc_id,
+    bucket) table — the corpus is never scanned.
     """
 
     def __init__(self, buckets: DataFrame, n_planes: int, radius: int,
@@ -167,17 +170,15 @@ class LSHCandidateIndex:
                 bucket |= 1 << p
         return bucket
 
-    def candidates(self, qv_rows: list[tuple[int, float]]) -> DataFrame:
-        """(doc_id) — union of the probed buckets."""
-        qb = self.query_bucket(qv_rows)
-        probes = [qb ^ m for m in self._masks]
-        return (self.buckets.where(F.col("bucket").isin(probes))
-                .select("doc_id"))
-
     def candidates_batch(self, qv_map: dict[int, list[tuple[int, float]]]
                          ) -> DataFrame:
-        """Batched probe: {query_id: qv_rows} → (query_id, doc_id) in
-        one broadcast bucket-equality join for the whole batch."""
+        """The probe: {query_id: qv_rows} → (query_id, doc_id), every
+        doc in a bucket within Hamming ``radius`` of the query's bucket
+        (a single query is a batch of one).  A static ``isin`` over the
+        batch's probe buckets prunes a loaded index's scan (a
+        LocalRelation build side gets no dynamic pruning); one
+        broadcast join assigns the pairs, distinct since a doc sits in
+        one bucket."""
         spark = self.buckets.sparkSession
         rows = [(qid, self.query_bucket(qv) ^ m)
                 for qid, qv in qv_map.items() for m in self._masks]
@@ -185,8 +186,9 @@ class LSHCandidateIndex:
             return local_frame(spark, [], "query_id INT, doc_id LONG")
         probes = F.broadcast(local_frame(spark,
             rows, "query_id INT, bucket LONG"))
-        return (probes.join(self.buckets, "bucket")
-                .select("query_id", "doc_id").distinct())
+        return (probes.join(self.buckets.where(F.col("bucket").isin(
+                    sorted({b for _, b in rows}))), "bucket")
+                .select("query_id", "doc_id"))
 
     def extend(self, new_embeddings: DataFrame) -> "LSHCandidateIndex":
         """Index the appended docs' embeddings (the M1 push! analog for
@@ -375,11 +377,12 @@ def assign_lists_arrow(packed: DataFrame, centroids: "list[list[float]]",
 
 class IVFCandidateIndex:
     """IVF inverted lists as a candidate generator: documents are
-    assigned once to their nearest coarse centroid; a query probes its
-    ``n_probe`` nearest centroids (driver-side K·dim math against the
-    collected centroid matrix) and the candidate set is the isin-pruned
-    read of those lists.  At scale the assignment table is written
-    bucketed BY cid, so a probe prunes to n_probe/K of the files."""
+    assigned once to their nearest coarse centroid; each query of a
+    ``candidates_batch`` probes its ``n_probe`` nearest centroids
+    (driver-side K·dim math against the collected centroid matrix) and
+    its candidate set is the isin-pruned read of those lists.  A saved
+    index writes the assignment table partitioned BY cid, so a probe
+    reads only the probed lists' files."""
 
     def __init__(self, asg: DataFrame, centroids: list[tuple],
                  n_probe: int = 4):
@@ -435,14 +438,13 @@ class IVFCandidateIndex:
         scored.sort()
         return [cid for _, cid in scored[:self.n_probe]]
 
-    def candidates(self, qv_rows: list[tuple[int, float]]) -> DataFrame:
-        return (self.asg.where(F.col("cid").isin(self.probe_cids(qv_rows)))
-                .select("doc_id"))
-
     def candidates_batch(self, qv_map: dict[int, list[tuple[int, float]]]
                          ) -> DataFrame:
-        """Batched probe: {query_id: qv_rows} → (query_id, doc_id) in
-        one broadcast list-id join for the whole batch."""
+        """The probe: {query_id: qv_rows} → (query_id, doc_id), every
+        doc on the query's ``n_probe`` nearest lists (a single query is
+        a batch of one).  A static ``isin`` over the batch's probed cids
+        prunes the assignment scan; one broadcast list-id join assigns
+        the pairs (a doc sits on one list, so they come out distinct)."""
         spark = self.asg.sparkSession
         rows = [(qid, cid) for qid, qv in qv_map.items()
                 for cid in self.probe_cids(qv)]
@@ -450,8 +452,9 @@ class IVFCandidateIndex:
             return local_frame(spark, [], "query_id INT, doc_id LONG")
         probes = F.broadcast(local_frame(spark,
             rows, "query_id INT, cid INT"))
-        return (probes.join(self.asg, "cid")
-                .select("query_id", "doc_id").distinct())
+        return (probes.join(self.asg.where(F.col("cid").isin(
+                    sorted({c for _, c in rows}))), "cid")
+                .select("query_id", "doc_id"))
 
     def extend(self, new_embeddings: DataFrame) -> "IVFCandidateIndex":
         """Index appended docs (M1 push! analog): assign the NEW rows
@@ -729,30 +732,18 @@ class IVFADCIndex:
                 rows.append((cid, sub, code, pd))
         return rows
 
-    def candidates(self, qv_rows: list[tuple[int, float]],
-                   rerank: int = 1000) -> DataFrame:
-        """(doc_id): the ``rerank`` ADC-best candidates from the probed
-        lists — the DenseVectorSearcher candidate-index contract (the
-        reference attaches its semantic searcher to exactly this
-        structure, searcher.jl:120-125 + ivfadc.jl), giving a TIGHTER
-        set than raw IVF lists: the ADC pass orders the probed lists by
-        approximate distance before the searcher's exact rerank."""
-        spark = self.codes.sparkSession
-        cids = self.ivf.probe_cids(qv_rows)
-        adc = F.broadcast(local_frame(spark,
-            self._adc_table(qv_rows, cids),
-            "cid INT, sub INT, code INT, pd DOUBLE"))
-        approx = (self.codes.where(F.col("cid").isin(cids))
-                  .join(adc, ["cid", "sub", "code"])
-                  .groupBy("doc_id").agg(F.sum("pd").alias("ad2")))
-        return (approx.orderBy(F.col("ad2").asc(), F.col("doc_id").asc())
-                .limit(rerank).select("doc_id"))
-
     def candidates_batch(self, qv_map: dict[int, list[tuple[int, float]]],
                          rerank: int = 1000) -> DataFrame:
-        """Batched probe: {query_id: qv_rows} → (query_id, doc_id) —
-        every query's ADC table rides one broadcast join (query_id on
-        the adc side restricts each query to its own probed lists), one
+        """The probe: {query_id: qv_rows} → (query_id, doc_id), the
+        ``rerank`` ADC-best candidates from each query's probed lists —
+        the DenseVectorSearcher candidate-index contract (the reference
+        attaches its semantic searcher to exactly this structure,
+        searcher.jl:120-125 + ivfadc.jl), a TIGHTER set than raw IVF
+        lists: the ADC pass orders the probed lists by approximate
+        distance before the searcher's exact rerank.  A static ``isin``
+        over the batch's probed cids prunes the codes scan; every
+        query's ADC table rides one broadcast join (query_id on the adc
+        side restricts each query to its own probed lists), one
         aggregation, one per-query window cut."""
         spark = self.codes.sparkSession
         rows = [(qid, cid, sub, code, pd)
@@ -763,7 +754,9 @@ class IVFADCIndex:
             return local_frame(spark, [], "query_id INT, doc_id LONG")
         adc = F.broadcast(local_frame(spark,
             rows, "query_id INT, cid INT, sub INT, code INT, pd DOUBLE"))
-        approx = (self.codes.join(adc, ["cid", "sub", "code"])
+        approx = (self.codes.where(F.col("cid").isin(
+                      sorted({r[1] for r in rows})))
+                  .join(adc, ["cid", "sub", "code"])
                   .groupBy("query_id", "doc_id")
                   .agg(F.sum("pd").alias("ad2")))
         w = Window.partitionBy("query_id").orderBy(F.col("ad2").asc(),
@@ -779,7 +772,8 @@ class IVFADCIndex:
         probed lists, exact cosine rerank of the best ``rerank``
         (default 4k) candidates."""
         rerank = 4 * k if rerank is None else rerank
-        cand = self.candidates(qv_rows, rerank=rerank)
+        cand = self.candidates_batch({0: qv_rows},
+                                     rerank=rerank).select("doc_id")
         from garamond_jl_spark.operators.semantic import cosine_topk
         dv = doc_embeddings.join(F.broadcast(cand), "doc_id", "left_semi")
         return cosine_topk(dv, qv_rows, k)
@@ -1103,12 +1097,6 @@ class HNSWCandidateIndex:
 
         return (self.graph.groupBy("shard")
                 .applyInPandas(_search, "query_id INT, doc_id LONG"))
-
-    def candidates(self, qv_rows: list[tuple[int, float]],
-                   ef: int | None = None) -> DataFrame:
-        """(doc_id) — union of the per-shard beam results."""
-        return (self.candidates_batch({0: qv_rows}, ef=ef)
-                .select("doc_id"))
 
     # -- maintenance ---------------------------------------------------------
     def extend(self, new_embeddings: DataFrame,

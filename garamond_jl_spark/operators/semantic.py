@@ -600,11 +600,15 @@ class DenseVectorSearcher:
     186-202) as the classic path, so scores from both searcher kinds
     live on the same scale before aggregation.
 
-    Contract (same as lifecycle's per-index ``sparse_hits``):
+    Contract (the same as the lifecycle's ``classic_hits``):
     * ``sparse_hits(spark, query)`` → (doc_id, score) over every
       EMBEDDED doc, or ``None`` when the query has no in-vocab token
       (per-searcher ``is_embedded`` gate — an OOV searcher contributes
       nothing to the aggregation, dtv.jl:53-58 analog boe.jl:19-24);
+    * ``sparse_hits_batch(spark, queries)`` → the same per query, keyed
+      by ``query_id``, plus the (query_id) frame of the queries that
+      passed the gate.  A single request is a batch of one: both run
+      the same scoring body on the collected query embeddings;
     * ``fill_score()`` → the score of a doc this searcher did not embed
       (dist = 1, the zero-vector convention the classic path uses).
 
@@ -614,15 +618,32 @@ class DenseVectorSearcher:
     for exactly this reason.
 
     ``candidate_index`` (optional) attaches a sublinear ANN index
-    (operators/ann.LSHCandidateIndex / IVFCandidateIndex) — the
-    reference's searcher-owns-an-index design (src/searchable/
-    searcher.jl:120-125 attaching an IVFADC/HNSW index instead of the
-    NaiveIndex corpus scan).  With an index, :meth:`sparse_hits` scores
-    only the exact-reranked CANDIDATE set; non-candidates fall to the
-    lifecycle's fill semantics, so a request touches the probed
-    buckets/lists instead of the corpus.  Without one, the full-scan
-    NaiveIndex semantics (naive.jl:15-32) apply unchanged — that exact
-    path remains the parity default.
+    (operators/ann: LSH / IVF / IVFADC / HNSW) — the reference's
+    searcher-owns-an-index design (src/searchable/searcher.jl:120-125
+    attaching an IVFADC/HNSW index instead of the NaiveIndex corpus
+    scan).  Every index answers one probe, ``candidates_batch({query_id:
+    qv_rows})`` → (query_id, doc_id), and the searcher exact-reranks
+    only those pairs, so a request touches the probed buckets/lists
+    instead of the corpus.  Without one, the full-scan NaiveIndex
+    semantics (naive.jl:15-32) apply unchanged — that exact path
+    remains the parity default.
+
+    What an attached index guarantees (the dense recall contract):
+    * every candidate scores exactly as in the full scan (same
+      expression over the same rows);
+    * a doc the probe misses is NOT scored by this searcher: it falls
+      to the lifecycle's fill (``fill_score()``), which may sit above
+      or below its true score (cosines can be negative);
+    * hence the merged top-k equals the full scan's exactly when the
+      candidate set holds every doc whose full-scan rank reaches the
+      top-k — an HNSW index at exhaustive ``ef`` (≥ shard size) always
+      does; LSH (Hamming ball of ``radius`` around the query bucket),
+      IVF (``n_probe`` nearest lists) and IVFADC (plus its ``rerank``
+      cut) promise no recall.  The parity envs pin it case by case:
+      the LSH env (6 planes, radius 3) reproduces the full scan at
+      sf0.01 for both batched requests, and at sf0.001 its probe ball
+      misses one doc of the second request
+      (tests/test_ann.py::test_dense_recall_contract_lsh_env).
 
     Subclasses supply :meth:`embed_query` → long-form (i, qv) DataFrame,
     or ``None``/empty when the query is OOV for the embedder."""
@@ -749,57 +770,12 @@ class DenseVectorSearcher:
 
     def sparse_hits(self, spark: SparkSession, query: str
                     ) -> DataFrame | None:
-        from garamond_jl_spark.functions.scoring import score_transform_expr
         qv = self.embed_query(spark, query)
         if qv is None:
             return None
-        # the query vector is dim-sized — one collect serves both the
-        # norm and (when an ANN index is attached) the driver-side
-        # bucket/centroid probe math
-        qv_rows = [(int(r["i"]), float(r["qv"])) for r in qv.collect()]
-        nq = sum(v * v for _, v in qv_rows) ** 0.5
-        if nq == 0.0:
-            return None                      # OOV for this searcher
-        if self.packed is not None:
-            src = self.packed
-            if self.candidate_index is not None:
-                src = src.join(self.candidate_index.candidates(qv_rows),
-                               "doc_id", "left_semi")
-            return packed_cosine_scores(src, qv_rows, self.score_alpha,
-                                        metric=self.metric)
-        dv = self.doc_embeddings
-        norms = self._doc_norms()
-        if self.candidate_index is not None:
-            cand = self.candidate_index.candidates(qv_rows)
-            dv = dv.join(cand, "doc_id", "left_semi")
-            norms = norms.join(cand, "doc_id", "left_semi")
-        qvb = F.broadcast(local_frame(spark, qv_rows, "i INT, qv DOUBLE"))
-        dots = (dv.join(qvb, "i")
-                .groupBy("doc_id")
-                .agg(F.sum(F.col("dv") * F.col("qv")).alias("dot")))
-        if self.metric == "euclidean":
-            # BruteTree semantics: every embedded doc has a distance,
-            # including docs whose dot with the query is 0 (no shared
-            # nonzero component) — hence the left join from the norms
-            dist = (norms.join(dots, "doc_id", "left")
-                    .select("doc_id", F.sqrt(F.greatest(
-                        F.lit(0.0),
-                        F.col("nd") * F.col("nd") + F.lit(nq * nq)
-                        - 2.0 * F.coalesce(F.col("dot"), F.lit(0.0))))
-                        .alias("dist")))
-            score = score_transform_expr(F.col("dist"), self.score_alpha)
-            return dist.select("doc_id", score.alias("score"))
-        # zero-norm guard: a zero doc vector must score like the packed
-        # kernel (cos 0 → fill), not 0/0 = NaN, which Spark's
-        # descending sort ranks ABOVE every real hit
-        cosd = (dots.join(norms, "doc_id")
-                .select("doc_id",
-                        F.when(F.col("nd") > 0,
-                               F.col("dot") / (F.col("nd") * F.lit(nq)))
-                        .otherwise(F.lit(0.0)).alias("cos")))
-        score = score_transform_expr(F.lit(1.0) - F.col("cos"),
-                                     self.score_alpha)
-        return cosd.select("doc_id", score.alias("score"))
+        hits, live = self._score_query_rows(
+            spark, [(0, int(r["i"]), float(r["qv"])) for r in qv.collect()])
+        return hits.select("doc_id", "score") if live else None
 
     def sparse_hits_batch(self, spark: SparkSession, queries: list[str]
                           ) -> tuple[DataFrame, DataFrame]:
@@ -807,77 +783,66 @@ class DenseVectorSearcher:
         hits = (query_id, doc_id, score) for the whole batch in ONE
         plan and embedded = (query_id) marks the queries that passed
         this searcher's is_embedded gate (the per-query analog of the
-        single path's ``None``).  The per-request driver loops of the
-        single path (query projection, norm collect) become one
-        local_frame + joins — an N-query batch costs O(1) jobs per
+        single path's ``None``) — an N-query batch costs O(1) jobs per
         searcher, not O(N)."""
+        rows = [(int(r["query_id"]), int(r["i"]), float(r["qv"]))
+                for r in self.embed_queries_df(spark, queries).collect()]
+        hits, live = self._score_query_rows(spark, rows)
+        return hits, local_frame(spark, [(q,) for q in live],
+                                 "query_id INT")
+
+    def _score_query_rows(self, spark: SparkSession,
+                          rows: list[tuple[int, int, float]]
+                          ) -> tuple[DataFrame, list[int]]:
+        """The one scoring body: driver-collected query embeddings
+        (query_id, i, qv) → ((query_id, doc_id, score), live query ids).
+        The query side is |queries|·dim scalars, so the norms, the
+        is_embedded gate (a zero-norm query is OOV for this searcher)
+        and the candidate probes are all driver math on the one collect
+        the caller made — none of them costs a job."""
         from garamond_jl_spark.functions.scoring import score_transform_expr
-        qv = self.embed_queries_df(spark, queries)
+        qv_map: dict[int, list[tuple[int, float]]] = {}
+        for qid, i, v in rows:
+            qv_map.setdefault(qid, []).append((i, v))
+        nq = {q: sum(v * v for _, v in r) ** 0.5 for q, r in qv_map.items()}
+        qv_map = {q: r for q, r in qv_map.items() if nq[q] > 0.0}
+        live = sorted(qv_map)
+        cand = (self.candidate_index.candidates_batch(qv_map)
+                if self.candidate_index is not None and qv_map else None)
         if self.packed is not None:
-            # packed storage: the batch's query vectors collect to one
-            # small matrix (dim × |batch| doubles) feeding the blocked
-            # mapInArrow matmul scorer — same numpy-tanh caveat as the
-            # single packed path (parity envs stay long-form)
-            qv_map: dict[int, list[tuple[int, float]]] = {}
-            for r in qv.collect():
-                qv_map.setdefault(int(r["query_id"]), []).append(
-                    (int(r["i"]), float(r["qv"])))
-            qv_map = {q: rows for q, rows in qv_map.items()
-                      if sum(v * v for _, v in rows) > 0.0}
-            embedded = local_frame(spark,
-                [(q,) for q in sorted(qv_map)], "query_id INT")
-            src = self.packed
-            if self.candidate_index is not None and qv_map:
-                cand = self.candidate_index.candidates_batch(qv_map)
-                # score the UNION of all queries' candidates once, then
-                # keep each query's own pairs — probed work stays
-                # sublinear, the matmul stays one map pass
-                src = src.join(cand.select("doc_id").distinct(),
-                               "doc_id", "left_semi")
-                hits = (packed_cosine_scores_batch(src, qv_map,
-                                                   self.score_alpha,
-                                                   metric=self.metric)
-                        .join(cand, ["query_id", "doc_id"], "left_semi"))
-            else:
-                hits = packed_cosine_scores_batch(src, qv_map,
-                                                  self.score_alpha,
-                                                  metric=self.metric)
-            return hits, embedded
-        # materialize the (tiny: |queries|·dim rows) query embeddings
-        # ONCE: the lazy embed lineage otherwise re-evaluates for the
-        # nqdf aggregate, the dots join, and the candidate-probe
-        # collect — three jobs over the same plan
-        qv_rows = qv.collect()
-        qv = local_frame(spark, qv_rows, qv.schema)
-        nqdf = (qv.groupBy("query_id")
-                .agg(F.sqrt(F.sum(F.col("qv") ** 2)).alias("nq"))
-                .where(F.col("nq") > 0))
+            # packed storage: the batch's query vectors form one small
+            # matrix (dim × |batch| doubles) feeding the blocked
+            # mapInArrow matmul scorer; numpy tanh may differ from the
+            # JVM's in the last ulp, so parity envs stay long-form.
+            # With candidates, score the UNION of all queries'
+            # candidates once, then keep each query's own pairs (with
+            # one query the union IS its candidate set)
+            src = (self.packed if cand is None
+                   else self.packed.join(cand, "doc_id", "left_semi"))
+            hits = packed_cosine_scores_batch(src, qv_map, self.score_alpha,
+                                              metric=self.metric)
+            if cand is not None and len(live) > 1:
+                hits = hits.join(cand, ["query_id", "doc_id"], "left_semi")
+            return hits, live
+        qv = local_frame(spark,
+            [(q, i, v) for q in live for i, v in qv_map[q]],
+            "query_id INT, i INT, qv DOUBLE")
+        nqdf = F.broadcast(local_frame(spark, [(q, nq[q]) for q in live],
+                                       "query_id INT, nq DOUBLE"))
         dv = self.doc_embeddings
-        if self.candidate_index is not None:
-            # probe math is driver-side per query (dim-sized vectors);
-            # the one collect above feeds every probe
-            qv_map: dict[int, list[tuple[int, float]]] = {}
-            for r in qv_rows:
-                qv_map.setdefault(int(r["query_id"]), []).append(
-                    (int(r["i"]), float(r["qv"])))
-            cand = self.candidate_index.candidates_batch(qv_map)
-            dots = (cand.join(dv, "doc_id")
-                    .join(qv, ["query_id", "i"])
-                    .groupBy("query_id", "doc_id")
-                    .agg(F.sum(F.col("dv") * F.col("qv")).alias("dot")))
-        else:
-            dots = (dv.join(F.broadcast(qv), "i")
-                    .groupBy("query_id", "doc_id")
-                    .agg(F.sum(F.col("dv") * F.col("qv")).alias("dot")))
+        pairs = (dv.join(F.broadcast(qv), "i") if cand is None
+                 else cand.join(dv, "doc_id").join(qv, ["query_id", "i"]))
+        dots = (pairs.groupBy("query_id", "doc_id")
+                .agg(F.sum(F.col("dv") * F.col("qv")).alias("dot")))
         if self.metric == "euclidean":
-            # every (live query, embedded doc) pair has a distance —
-            # candidates restrict the pairs when an index is attached,
-            # otherwise the pair set IS the brute full scan
-            if self.candidate_index is not None:
-                base = (cand.join(self._doc_norms(), "doc_id")
-                        .join(F.broadcast(nqdf), "query_id"))
-            else:
-                base = self._doc_norms().crossJoin(F.broadcast(nqdf))
+            # BruteTree semantics: every (live query, embedded doc) pair
+            # has a distance, including docs whose dot with the query is
+            # 0 (no shared nonzero component) — candidates restrict the
+            # pairs when an index is attached, otherwise the pair set IS
+            # the brute full scan
+            base = (self._doc_norms().crossJoin(nqdf) if cand is None
+                    else cand.join(self._doc_norms(), "doc_id")
+                    .join(nqdf, "query_id"))
             dist = (base.join(dots, ["query_id", "doc_id"], "left")
                     .select("query_id", "doc_id", F.sqrt(F.greatest(
                         F.lit(0.0),
@@ -885,19 +850,20 @@ class DenseVectorSearcher:
                         - 2.0 * F.coalesce(F.col("dot"), F.lit(0.0))))
                         .alias("dist")))
             score = score_transform_expr(F.col("dist"), self.score_alpha)
-            return (dist.select("query_id", "doc_id",
-                                score.alias("score")),
-                    nqdf.select("query_id"))
+            return (dist.select("query_id", "doc_id", score.alias("score")),
+                    live)
+        # zero-norm guard: a zero doc vector must score like the packed
+        # kernel (cos 0 → fill), not 0/0 = NaN, which Spark's
+        # descending sort ranks ABOVE every real hit
         cosd = (dots.join(self._doc_norms(), "doc_id")
-                .join(F.broadcast(nqdf), "query_id")
+                .join(nqdf, "query_id")
                 .select("query_id", "doc_id",
                         F.when(F.col("nd") > 0,
                                F.col("dot") / (F.col("nd") * F.col("nq")))
                         .otherwise(F.lit(0.0)).alias("cos")))
         score = score_transform_expr(F.lit(1.0) - F.col("cos"),
                                      self.score_alpha)
-        return (cosd.select("query_id", "doc_id", score.alias("score")),
-                nqdf.select("query_id"))
+        return cosd.select("query_id", "doc_id", score.alias("score")), live
 
 
 class BOESearcher(DenseVectorSearcher):
@@ -1226,15 +1192,15 @@ def pack_doc_embeddings(dv: DataFrame, dim: int) -> DataFrame:
     — the dense storage variant: the long form is join-friendly (every
     scorer above is an equi-join + groupBy) but carries dim rows per
     doc; the packed form is ONE row per doc and scores through one
-    mapInArrow pass (:func:`packed_cosine_scores`) — no per-component
-    join rows, no shuffle.  On-disk parquet sizes are nearly equal
-    (columnar RLE already compresses the long form's repeated keys —
-    measured 137 vs 133 MB at 1M×16, BENCH.md r4); the win is the
-    16× row-count reduction in the scorer's input and the map-only
-    plan (1.24 s vs 1.64 s per request at 1M).  Missing components (a
-    dim never
-    touched by the doc's terms) pack as 0 — the same value the long
-    form's absent row contributes to every aggregation."""
+    mapInArrow pass (:func:`packed_cosine_scores_batch`, for a single
+    query or a batch) — no per-component join rows, no shuffle.
+    On-disk parquet sizes are nearly equal (columnar RLE already
+    compresses the long form's repeated keys — measured 137 vs 133 MB
+    at 1M×16, BENCH.md r4); the win is the 16× row-count reduction in
+    the scorer's input and the map-only plan (1.24 s vs 1.64 s per
+    request at 1M).  Missing components (a dim never touched by the
+    doc's terms) pack as 0 — the same value the long form's absent row
+    contributes to every aggregation."""
     ent = (dv.groupBy("doc_id")
            .agg(F.map_from_entries(
                F.array_sort(F.collect_list(F.struct("i", "dv"))))
@@ -1244,75 +1210,22 @@ def pack_doc_embeddings(dv: DataFrame, dim: int) -> DataFrame:
     return ent.select("doc_id", emb.alias("emb"))
 
 
-def packed_cosine_scores(packed: DataFrame,
-                         qv_rows: list[tuple[int, float]],
-                         score_alpha: float,
-                         metric: str = "cosine") -> DataFrame:
-    """(doc_id, score) over a packed embedding table: one mapInArrow
-    pass computing dot/norm/transform as a blocked numpy matvec — no
-    per-component join rows, no shuffle (the scorer is a map).  The
-    query side is the usual dim-sized driver vector.  ``metric``
-    matches :meth:`DenseVectorSearcher.with_metric`: cosine keeps the
-    NaiveIndex dist = 1 − cos; euclidean the BruteTree L2."""
-    import numpy as np
-    from garamond_jl_spark.functions.scoring import score_transform_np
-    import pyarrow as pa
-
-    dim = max(i for i, _ in qv_rows) if qv_rows else 0
-    q = np.zeros(dim)
-    for i, v in qv_rows:
-        q[i - 1] = v
-    nq = float(np.linalg.norm(q))
-    alpha = float(score_alpha)
-    euclid = metric == "euclidean"
-
-    def _score(batches):
-        for b in batches:
-            ids = b.column(b.schema.get_field_index("doc_id"))
-            vecs = b.column(b.schema.get_field_index("emb"))
-            if len(vecs) == 0:
-                continue
-            flat = vecs.flatten().to_numpy(zero_copy_only=False)
-            X = np.asarray(flat, dtype=np.float64).reshape(len(vecs), -1)
-            qb = q
-            if X.shape[1] != qb.shape[0]:
-                # a sparse query embedding may omit trailing zero dims
-                qb = np.zeros(X.shape[1])
-                qb[:min(len(q), len(qb))] = q[:len(qb)]
-            nd = np.linalg.norm(X, axis=1)
-            if euclid:
-                d = np.sqrt(np.maximum(
-                    nd * nd + nq * nq - 2.0 * (X @ qb), 0.0))
-            else:
-                nd[nd == 0.0] = np.inf        # zero vector → cos 0
-                d = 1.0 - (X @ qb) / (nd * nq)
-            score = score_transform_np(d, alpha)
-            # cast ids to the declared LONG — a packed table built from
-            # an INT doc_id column would otherwise fail the Arrow
-            # schema check (the sibling kernels cast the same way)
-            out_ids = np.asarray(ids.to_numpy(zero_copy_only=False),
-                                 dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, type=pa.int64()),
-                 pa.array(score, type=pa.float64())],
-                names=["doc_id", "score"])
-
-    return (packed.select("doc_id", "emb")
-            .mapInArrow(_score, "doc_id LONG, score DOUBLE"))
-
-
 def packed_cosine_scores_batch(packed: DataFrame,
                                qv_map: dict[int, list[tuple[int, float]]],
                                score_alpha: float,
                                metric: str = "cosine") -> DataFrame:
     """(query_id, doc_id, score) over a packed embedding table for a
-    WHOLE query batch: one mapInArrow pass computing the docs×queries
-    score block as a numpy matmul — the batch twin of
-    :func:`packed_cosine_scores` (same width-pad rule for narrow query
-    embeddings, same zero-doc-vector → cos 0 convention).  Queries with
-    zero norm are dropped here exactly as the long-form batch path's
-    ``nq > 0`` filter drops them.  Row blocking keeps every docs×queries
-    tile under ~4M elements (measured alloc-pressure ceiling)."""
+    query batch (a single request is a batch of one): one mapInArrow
+    pass computing dot/norm/transform for the docs×queries block as a
+    numpy matmul — no per-component join rows, no shuffle (the scorer
+    is a map).  ``metric`` matches
+    :meth:`DenseVectorSearcher.with_metric`: cosine keeps the NaiveIndex
+    dist = 1 − cos, euclidean the BruteTree L2.  A narrow query
+    embedding (trailing zero dims omitted) pads to the stored width; a
+    zero doc vector scores cos 0.  Queries with zero norm are dropped,
+    as the long-form scorer drops them.  Row blocking keeps every
+    docs×queries tile under ~4M elements (measured alloc-pressure
+    ceiling)."""
     import numpy as np
     from garamond_jl_spark.functions.scoring import score_transform_np
     import pyarrow as pa

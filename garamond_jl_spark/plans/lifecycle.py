@@ -65,13 +65,17 @@ class SearchEnv:
     different embeddable fields / weighting configs share one data
     table and their results aggregate, src/search/results.jl:54-145).
     ``index`` is searcher 0 with weight ``score_weight``.  A searcher is
-    either an :class:`InvertedIndex` (classic BM25) or any object with
-    the ``sparse_hits(spark, query) -> DataFrame|None`` /
+    either an :class:`InvertedIndex` (classic BM25, whose hits come from
+    :func:`classic_hits`) or any object with the
+    ``sparse_hits(spark, query) -> DataFrame|None`` /
+    ``sparse_hits_batch(spark, queries) -> (hits, embedded)`` /
     ``fill_score() -> float`` interface — e.g.
     :class:`~garamond_jl_spark.operators.semantic.BOESearcher`, giving
     the reference's HETEROGENEOUS config-2 env (a classic searcher and
     a Word2Vec/BOE searcher under one ``id_aggregation``,
-    test/configs/configgenerator.jl:54-116).
+    test/configs/configgenerator.jl:54-116).  Either kind scores a
+    single request and a batch with one implementation: a single
+    request is a batch of one whose ``query_id`` is dropped.
 
     ``id_key`` names the id column of the RAW loaded data (env.jl:41
     db_check_id_key); the index's docs table is always addressed as
@@ -121,6 +125,30 @@ def _linear_scores(ranked: DataFrame) -> DataFrame:
         "doc_id",
         (F.lit(1.0) - (F.col("rank") - 1) / F.lit(denom)).alias("score"),
         "rank")
+
+
+def classic_hits(index: InvertedIndex, qt: DataFrame) -> DataFrame:
+    """The classic searcher's sparse hit set: embedded queries ``qt``
+    (``embed_queries`` output) → (query_id, doc_id, score) for every
+    doc sharing a term with its query.  :func:`search` runs it on one
+    query and drops the id; the batched merge keeps it on every key.
+
+    Under ``oov_policy="large_vector"`` (E8, dtv.jl:53-58) the all-OOV
+    documents are REAL hits at the per-query constant-fill-vector
+    score transform(1 − Σqw/√|V|); that score is ≥ the :none fill, so
+    the pad invariants are unchanged."""
+    h = score_all(index, qt)
+    if index.cfg.oov_policy == "large_vector":
+        from garamond_jl_spark.functions.scoring import score_transform_expr
+        n_terms = float(index.meta.get("n_terms") or index.terms.count())
+        s_oov = (qt.groupBy("query_id")
+                 .agg(score_transform_expr(
+                     F.lit(1.0) - F.sum("qw") / F.lit(n_terms ** 0.5),
+                     index.cfg.score_alpha).alias("score")))
+        oov = s_oov.crossJoin(index.docs.where(F.col("doclen") == 0)
+                              .select("doc_id"))
+        h = h.unionByName(oov.select("query_id", "doc_id", "score"))
+    return h
 
 
 def search(env: SearchEnv, request: InternalRequest,
@@ -211,31 +239,12 @@ def search(env: SearchEnv, request: InternalRequest,
         """None ⇔ the query is OOV for this searcher (is_embedded gate);
         an embedded query with zero (filtered) matches returns an EMPTY
         frame — downstream it still yields fill-scored docs, exactly as
-        the reference's dense scan would.
-
-        Under ``oov_policy="large_vector"`` (E8, dtv.jl:53-58) the
-        all-OOV documents are REAL hits at the constant-fill-vector
-        score transform(1 − Σqw/√|V|) — appended here so both the
-        single- and multi-searcher branches inherit the semantics; that
-        score is ≥ the :none fill, so the pad invariants are
-        unchanged."""
+        the reference's dense scan would."""
         qt = embed_queries(env.spark, index, [parsed.search],
                            isregex=(request.search_method == "regex"))
-        rows = qt.collect()                 # |query terms| rows — tiny
-        if not rows:
+        if not qt.collect():                # |query terms| rows — tiny
             return None
-        h = score_all(index, qt).drop("query_id")  # single request query
-        if index.cfg.oov_policy == "large_vector":
-            import math
-            from garamond_jl_spark.functions.scoring import score_transform
-            n_terms = float(index.meta.get("n_terms")
-                            or index.terms.count())
-            cos_oov = sum(r["qw"] for r in rows) / math.sqrt(n_terms)
-            s_oov = score_transform(1.0 - cos_oov, index.cfg.score_alpha)
-            oov = (index.docs.where(F.col("doclen") == 0)
-                   .select("doc_id")
-                   .withColumn("score", F.lit(s_oov)))
-            h = h.unionByName(oov)
+        h = classic_hits(index, qt).drop("query_id")
         return h.join(ids, "doc_id", "left_semi") if has_filter else h
 
     pool = docs.select("doc_id") if ids is None else ids
@@ -440,33 +449,14 @@ def _search_many_multi(env: SearchEnv, queries: list[str], k: int,
     densify + per-query fill, strategy aggregation, per-query pad from
     the lowest non-candidate ids, one ranking window."""
     from garamond_jl_spark.operators.aggregate import strategy_agg
-    from garamond_jl_spark.operators.query import score_all
     spark = env.spark
 
-    def classic_set(index: InvertedIndex, wgt: float):
-        qt = embed_queries(spark, index, queries)
-        emb = qt.select("query_id").distinct()
-        h = score_all(index, qt)
-        if index.cfg.oov_policy == "large_vector":
-            # E8 batch form: per-query constant-fill-vector score for
-            # the all-OOV docs (same math as the single path's s_oov)
-            from garamond_jl_spark.functions.scoring import \
-                score_transform_expr
-            n_terms = float(index.meta.get("n_terms")
-                            or index.terms.count())
-            s_oov = (qt.groupBy("query_id")
-                     .agg(score_transform_expr(
-                         F.lit(1.0) - F.sum("qw") / F.lit(n_terms ** 0.5),
-                         index.cfg.score_alpha).alias("score")))
-            oov = s_oov.crossJoin(index.docs.where(F.col("doclen") == 0)
-                                  .select("doc_id"))
-            h = h.unionByName(oov.select("query_id", "doc_id", "score"))
-        return h, emb, wgt, fill_score(index.cfg)
-
-    sets = [classic_set(env.index, env.score_weight)]
-    for s, wgt in env.searchers:
+    sets = []
+    for s, wgt in [(env.index, env.score_weight), *env.searchers]:
         if isinstance(s, InvertedIndex):
-            sets.append(classic_set(s, wgt))
+            qt = embed_queries(spark, s, queries)
+            sets.append((classic_hits(s, qt), qt.select("query_id").distinct(),
+                         wgt, fill_score(s.cfg)))
         else:
             h, emb = s.sparse_hits_batch(spark, queries)
             sets.append((h, emb, wgt, s.fill_score()))

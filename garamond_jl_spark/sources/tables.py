@@ -44,26 +44,6 @@ def write_table(df: DataFrame, name: str, mode: str = "overwrite",
         w.saveAsTable(name)
 
 
-def table_exists(spark: SparkSession, name: str,
-                 allow_unmarked: bool = False) -> bool:
-    """Path-based tables need a completion marker: _SUCCESS (batch
-    writes) or _spark_metadata (streaming file sinks).  A directory
-    with bare data files but NO marker is most likely a crashed
-    mid-write — resume-style callers must not treat it as complete.
-    ``allow_unmarked=True`` opts into bare-file detection for tables
-    written with the success-marker disabled
-    (mapreduce.fileoutputcommitter.marksuccessfuljobs=false)."""
-    if is_path(name):
-        if not os.path.isdir(name):
-            return False
-        entries = os.listdir(name)
-        if any(e in ("_SUCCESS", "_spark_metadata") for e in entries):
-            return True
-        return allow_unmarked and any(not e.startswith(("_", "."))
-                                      for e in entries)
-    return spark.catalog.tableExists(name)
-
-
 def load_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Load one driver-provided testdata table (TESTDATA.md)."""
     return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))

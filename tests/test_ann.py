@@ -33,6 +33,12 @@ def _long(spark, mat):
     return spark.createDataFrame(rows, "doc_id LONG, i INT, dv DOUBLE")
 
 
+def _cand(idx, qv, **kw):
+    """doc_ids of one query's probe (a batch of one)."""
+    return {r["doc_id"]
+            for r in idx.candidates_batch({0: qv}, **kw).collect()}
+
+
 def _exact_topk(mat, qid, k):
     norm = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     cos = norm @ norm[qid]
@@ -71,7 +77,7 @@ def test_kmeans_sample_ratio_trains(spark):
     # candidate recall of the exact top-10 stays high
     q = 0
     qv = [(i + 1, float(v)) for i, v in enumerate(mat[q])]
-    cand = {r["doc_id"] for r in ivf.candidates(qv).collect()}
+    cand = _cand(ivf, qv)
     want = set(_exact_topk(mat, q, 10))
     assert len(want & cand) / 10 >= 0.9
 
@@ -84,7 +90,7 @@ def test_lsh_candidate_index_sublinear(spark):
     idx = LSHCandidateIndex.build(dv, n_planes=6, radius=1, seed=0)
     q = 5
     qv = [(i + 1, float(v)) for i, v in enumerate(mat[q])]
-    cand = {r["doc_id"] for r in idx.candidates(qv).collect()}
+    cand = _cand(idx, qv)
     n = mat.shape[0]
     assert len(cand) < n * 0.8              # sublinear candidate set
     want = set(_exact_topk(mat, q, 10))
@@ -102,7 +108,7 @@ def test_ivf_candidate_recall_trained(spark):
     recalls, sizes = [], []
     for q in (0, 30, 65, 150):
         qv = [(i + 1, float(v)) for i, v in enumerate(mat[q])]
-        cand = {r["doc_id"] for r in ivf.candidates(qv).collect()}
+        cand = _cand(ivf, qv)
         want = set(_exact_topk(mat, q, 10))
         recalls.append(len(want & cand) / 10)
         sizes.append(len(cand))
@@ -196,7 +202,7 @@ def test_dense_searcher_ann_backed_matches_exact(spark):
     # and the candidate set really is a strict subset of the corpus
     qv = ann.embed_query(spark, "spark join data")
     qv_rows = [(int(r["i"]), float(r["qv"])) for r in qv.collect()]
-    n_cand = ann.candidate_index.candidates(qv_rows).count()
+    n_cand = ann.candidate_index.candidates_batch({0: qv_rows}).count()
     n_docs = docs.count()
     assert 0 < n_cand < n_docs
 
@@ -298,16 +304,14 @@ def test_ann_index_save_load_roundtrip(spark, tmp_path):
     lsh = LSHCandidateIndex.build(dv, n_planes=6, radius=1, seed=0)
     lsh.save(str(tmp_path / "lsh"))
     lsh2 = LSHCandidateIndex.load(spark, str(tmp_path / "lsh"))
-    assert {r["doc_id"] for r in lsh2.candidates(qv).collect()} == \
-        {r["doc_id"] for r in lsh.candidates(qv).collect()}
+    assert _cand(lsh2, qv) == _cand(lsh, qv)
 
     ivf = IVFCandidateIndex.build(dv, n_centroids=8, n_probe=2,
                                   n_iter=3, seed=0)
     ivf.save(str(tmp_path / "ivf"))
     ivf2 = IVFCandidateIndex.load(spark, str(tmp_path / "ivf"))
     assert ivf2.probe_cids(qv) == ivf.probe_cids(qv)
-    assert {r["doc_id"] for r in ivf2.candidates(qv).collect()} == \
-        {r["doc_id"] for r in ivf.candidates(qv).collect()}
+    assert _cand(ivf2, qv) == _cand(ivf, qv)
 
     adc = IVFADCIndex.build(dv, dim=16, n_centroids=8, m=4, n_codes=16,
                             n_probe=2, n_iter=3, seed=0)
@@ -322,6 +326,110 @@ def test_ann_index_save_load_roundtrip(spark, tmp_path):
 
     with pytest.raises(ValueError, match="holds a"):
         IVFCandidateIndex.load(spark, str(tmp_path / "lsh"))
+
+
+def test_loaded_index_batch_probe_prunes_partitions(spark, tmp_path):
+    """A loaded LSH / IVF / IVFADC index reads only the probed
+    partitions: the batch probe cuts its bucket / list table with a
+    static ``isin`` before the broadcast join, so the executed plan's
+    FileScan carries an ``IN`` partition filter over exactly the
+    batch's probed buckets / cids (Spark plans no dynamic pruning
+    against a LocalRelation build side, so without the cut every file
+    is scanned)."""
+    import re
+    _, mat = _clustered(per=12)
+    dv = _long(spark, mat)
+    qv_map = {0: [(i + 1, float(v)) for i, v in enumerate(mat[4])],
+              1: [(i + 1, float(v)) for i, v in enumerate(mat[60])]}
+
+    def partition_in_list(df, col):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        filters = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+        assert filters, plan
+        # Spark prints IN (…) for short lists and INSET … above 10 values
+        lists = {tuple(sorted(int(v) for v in re.findall(r"-?\d+",
+                                                         m[0] or m[1])))
+                 for f in filters
+                 for m in re.findall(col + r"#\d+L? (?:IN \(([^)]*)\)"
+                                     r"|INSET ((?:-?\d+(?:, )?)+))", f)}
+        assert len(lists) == 1, filters
+        return list(lists.pop())
+
+    lsh = LSHCandidateIndex.build(dv, n_planes=6, radius=1, seed=0)
+    lsh.save(str(tmp_path / "lsh"))
+    lsh2 = LSHCandidateIndex.load(spark, str(tmp_path / "lsh"))
+    want = sorted({lsh2.query_bucket(qv) ^ m for qv in qv_map.values()
+                   for m in lsh2._masks})
+    assert partition_in_list(lsh2.candidates_batch(qv_map),
+                             "bucket") == want
+
+    ivf = IVFCandidateIndex.build(dv, n_centroids=8, n_probe=2,
+                                  n_iter=3, seed=0)
+    ivf.save(str(tmp_path / "ivf"))
+    ivf2 = IVFCandidateIndex.load(spark, str(tmp_path / "ivf"))
+    want = sorted({c for qv in qv_map.values()
+                   for c in ivf2.probe_cids(qv)})
+    assert len(want) < 8                    # the cut really prunes
+    assert partition_in_list(ivf2.candidates_batch(qv_map), "cid") == want
+
+    adc = IVFADCIndex.build(dv, dim=16, n_centroids=8, m=4, n_codes=16,
+                            n_probe=2, n_iter=3, seed=0)
+    adc.save(str(tmp_path / "adc"))
+    adc2 = IVFADCIndex.load(spark, str(tmp_path / "adc"))
+    want = sorted({c for qv in qv_map.values()
+                   for c in adc2.ivf.probe_cids(qv)})
+    assert partition_in_list(adc2.candidates_batch(qv_map, rerank=20),
+                             "cid") == want
+
+
+def test_dense_recall_contract_lsh_env(spark, sf_dir):
+    """The dense recall contract (DenseVectorSearcher docstring) on the
+    LSH-backed parity env: every candidate scores as in the full scan,
+    so the merged ranking equals the full-scan env's wherever the probe
+    ball holds the full-scan top-k — at sf0.01, for both batched
+    requests.  At sf0.001 it does not: the ball of request 1 misses
+    doc 325, the full scan's rank 1, which falls to the fill; the rest
+    move up one rank and doc 319 enters at rank 7.  A change to the
+    probe ball or to candidate scoring moves this pin."""
+    import copy
+    import os
+
+    from garamond_jl_spark.plans.lifecycle import (InternalRequest,
+                                                   SearchEnv, search_many)
+    from garamond_jl_spark.plans.testdata_queries import (_SM_REQS,
+                                                          _mixed_boe_env)
+    reqs = [InternalRequest(query=q, max_matches=k, tiebreak_round=6)
+            for q, k in _SM_REQS]
+
+    def ranks(env):
+        out: dict = {}
+        for r in search_many(env, reqs).collect():
+            out.setdefault(r["request_id"], []).append(
+                (r["rank"], r["doc_id"]))
+        return {q: sorted(v) for q, v in out.items()}
+
+    def lsh_and_full(sf):
+        env = _mixed_boe_env(spark, os.path.join(os.path.dirname(sf_dir),
+                                                 sf))
+        ann = env.searchers[0][0]
+        full = copy.copy(ann)
+        full.candidate_index = None
+        env_full = SearchEnv(spark=spark, index=env.index, score_weight=0.8,
+                             searchers=[(full, 0.8)], aggregation="mean")
+        return ranks(env), ranks(env_full), ann
+
+    got, want, _ = lsh_and_full("sf0.01")
+    assert sorted(want) == [0, 1]
+    assert got == want
+
+    got, want, ann = lsh_and_full("sf0.001")
+    assert got[0] == want[0]
+    assert want[1][0] == (1, 325)
+    assert got[1] == [(r - 1, d) for r, d in want[1][1:]] + [(7, 319)]
+    qv = [(int(r["i"]), float(r["qv"]))
+          for r in ann.embed_query(spark, _SM_REQS[1][0]).collect()]
+    assert 325 not in _cand(ann.candidate_index, qv)
 
 
 def test_candidate_index_extend(spark):
@@ -342,8 +450,7 @@ def test_candidate_index_extend(spark):
                                        seed=0)
     lsh_ext = LSHCandidateIndex.build(dv_a, n_planes=6, radius=1,
                                       seed=0).extend(dv_b)
-    assert {r["doc_id"] for r in lsh_ext.candidates(qv).collect()} == \
-        {r["doc_id"] for r in lsh_full.candidates(qv).collect()}
+    assert _cand(lsh_ext, qv) == _cand(lsh_full, qv)
 
     ivf_a = IVFCandidateIndex.build(dv_a, n_centroids=4, n_probe=2,
                                     n_iter=3, seed=0)
@@ -353,8 +460,7 @@ def test_candidate_index_extend(spark):
     ivf_full = IVFCandidateIndex.build(dv_full, centroids=cent_df,
                                        n_probe=2)
     ivf_ext = ivf_a.extend(dv_b)
-    assert {r["doc_id"] for r in ivf_ext.candidates(qv).collect()} == \
-        {r["doc_id"] for r in ivf_full.candidates(qv).collect()}
+    assert _cand(ivf_ext, qv) == _cand(ivf_full, qv)
 
 
 def test_packed_batch_matches_long_form_batch(spark):
@@ -458,7 +564,8 @@ def test_dense_searcher_ivfadc_backed_matches_exact(spark):
     IVFADC structure attached (coarse lists + PQ/ADC ordering before
     the exact rerank — searcher.jl:120-125 + ivfadc.jl) answers the
     mixed-env request identically to the full-scan searcher, single
-    and batched; candidates_batch agrees with per-query candidates."""
+    and batched; a query's candidates do not depend on its
+    batch-mates."""
     from garamond_jl_spark.config import EngineConfig
     from garamond_jl_spark.operators.build import build_index
     from garamond_jl_spark.operators.semantic import (
@@ -504,14 +611,18 @@ def test_dense_searcher_ivfadc_backed_matches_exact(spark):
             if r["request_id"] == 0}
     assert got0 == single0
 
-    # candidates_batch ≡ per-query candidates at the same rerank
-    qv = ann.embed_query(spark, "spark join data")
-    qv_rows = [(int(r["i"]), float(r["qv"])) for r in qv.collect()]
-    solo = {r["doc_id"] for r in
-            ann.candidate_index.candidates(qv_rows, rerank=50).collect()}
+    # a query's candidates do not depend on its batch-mates: the
+    # per-query rerank cut of a two-query batch ≡ the batch of one
+    qv_rows, qv_other = (
+        [(int(r["i"]), float(r["qv"]))
+         for r in ann.embed_query(spark, q).collect()]
+        for q in ("spark join data", "window merge"))
+    solo = _cand(ann.candidate_index, qv_rows, rerank=50)
     batch = {r["doc_id"] for r in
-             ann.candidate_index.candidates_batch({0: qv_rows},
-                                                  rerank=50).collect()}
+             ann.candidate_index.candidates_batch({0: qv_rows, 1: qv_other},
+                                                  rerank=50).collect()
+             if r["query_id"] == 0}
+    assert len(solo) == 50
     assert batch == solo
 
 

@@ -32,6 +32,12 @@ def _long(spark, mat):
     return spark.createDataFrame(rows, "doc_id LONG, i INT, dv DOUBLE")
 
 
+def _cand(idx, qv, **kw):
+    """doc_ids of one query's probe (a batch of one)."""
+    return {r["doc_id"]
+            for r in idx.candidates_batch({0: qv}, **kw).collect()}
+
+
 def _exact_cos_topk(mat, q, k, exclude=None):
     norm = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     qn = q / np.linalg.norm(q)
@@ -176,7 +182,7 @@ def test_hnsw_candidate_index_recall_sublinear(spark):
     recalls, sizes = [], []
     for q in (0, 30, 65, 150):
         qv = [(i + 1, float(v)) for i, v in enumerate(mat[q])]
-        cand = {r["doc_id"] for r in idx.candidates(qv).collect()}
+        cand = _cand(idx, qv)
         want = set(_exact_cos_topk(mat, mat[q], 10))
         recalls.append(len(want & cand) / 10)
         sizes.append(len(cand))
@@ -195,7 +201,7 @@ def test_hnsw_candidates_batch_matches_single(spark):
     for r in batch:
         got.setdefault(r["query_id"], set()).add(r["doc_id"])
     for q, qv in qv_map.items():
-        single = {r["doc_id"] for r in idx.candidates(qv).collect()}
+        single = _cand(idx, qv)
         assert got[q] == single
 
 
@@ -300,8 +306,7 @@ def test_hnsw_save_load_roundtrip(spark, tmp_path):
     idx2 = HNSWCandidateIndex.load(spark, str(tmp_path / "hnsw"))
     assert (idx2.dim, idx2.M, idx2.ef, idx2.shard_hi) == \
         (idx.dim, idx.M, idx.ef, idx.shard_hi)
-    assert {r["doc_id"] for r in idx2.candidates(qv).collect()} == \
-        {r["doc_id"] for r in idx.candidates(qv).collect()}
+    assert _cand(idx2, qv) == _cand(idx, qv)
 
     from garamond_jl_spark.operators.ann import IVFCandidateIndex
     with pytest.raises(ValueError, match="holds a"):
@@ -360,10 +365,10 @@ def test_hnsw_extend_appends_segments(spark):
     # a query ON an appended vector finds it (exhaustive ef per shard)
     q = half + 3
     qv = [(i + 1, float(v)) for i, v in enumerate(mat[q])]
-    cand_ext = {r["doc_id"] for r in ext.candidates(qv, ef=half).collect()}
+    cand_ext = _cand(ext, qv, ef=half)
     assert q in cand_ext
     # old segment results are a subset of the extended index's
-    cand_base = {r["doc_id"] for r in base.candidates(qv, ef=half).collect()}
+    cand_base = _cand(base, qv, ef=half)
     assert cand_base <= cand_ext
 
 
