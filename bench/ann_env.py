@@ -188,7 +188,7 @@ def main() -> None:
             + 0.1 * rng.normal(size=dim)
         qv = [(i + 1, float(v)) for i, v in enumerate(qc)]
         want = {r["doc_id"]
-                for r in cosine_topk(dv, qv, 10).collect()}
+                for r in cosine_topk(dv, {0: qv}, 10).collect()}
         t0 = time.time()
         got = {r["doc_id"]
                for r in adc.search(dv, qv, k=10,

@@ -132,7 +132,7 @@ def main() -> None:
     # recall@10 of the exact-reranked candidates vs the exact scorer
     # (exact sets computed once; the ef sweep below reuses them)
     exact_sets = {qi: {r["doc_id"]
-                       for r in cosine_topk(dv, qv, 10).collect()}
+                       for r in cosine_topk(dv, {0: qv}, 10).collect()}
                   for qi, qv in qs.items()}
     recalls = []
     cand = idx.candidates_batch(qs).persist()
@@ -140,7 +140,8 @@ def main() -> None:
     for qi, qv in qs.items():
         sub = dv.join(cand.where(F.col("query_id") == qi).select("doc_id"),
                       "doc_id", "left_semi")
-        got = {r["doc_id"] for r in cosine_topk(sub, qv, 10).collect()}
+        got = {r["doc_id"]
+               for r in cosine_topk(sub, {0: qv}, 10).collect()}
         recalls.append(len(exact_sets[qi] & got) / 10)
     results["recall_at_10"] = round(sum(recalls) / len(recalls), 3)
     cand.unpersist()
@@ -156,7 +157,8 @@ def main() -> None:
             for qi, qv in qs.items():
                 sub = dv.join(cand.where(F.col("query_id") == qi)
                               .select("doc_id"), "doc_id", "left_semi")
-                got = {r["doc_id"] for r in cosine_topk(sub, qv, 10).collect()}
+                got = {r["doc_id"]
+               for r in cosine_topk(sub, {0: qv}, 10).collect()}
                 recs.append(len(exact_sets[qi] & got) / 10)
             cand.unpersist()
             sweep.append({"ef": ef, "batch_sec": round(t_ef, 2),

@@ -53,6 +53,11 @@ def score_transform_expr(dist: Column, alpha: float) -> Column:
     return F.lit(1.0) - F.tanh(F.lit(alpha) * dist)
 
 
+def e6(col: Column) -> Column:
+    """round(x·10⁶) as BIGINT: a float score in hash-stable units."""
+    return F.round(col * F.lit(1e6), 0).cast("long")
+
+
 def score_transform(dist: float, alpha: float) -> float:
     """Scalar twin of :func:`score_transform_expr` — the ONE definition
     every driver-side fill/certificate computation must route through so

@@ -49,6 +49,10 @@ from itertools import combinations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from garamond_jl_spark.functions.scoring import e6
+from garamond_jl_spark.operators.semantic import (cosine_scores, cosine_topk,
+                                                  pack_doc_embeddings,
+                                                  query_norms)
 from garamond_jl_spark.session import local_frame
 
 _HEX_HIGH = set("89abcdef")
@@ -69,10 +73,12 @@ def _read_meta(out_dir: str) -> dict:
 # Hyperplane LSH candidate index
 # ---------------------------------------------------------------------------
 
-def lsh_sign(p: int, i: int, seed: int = 0) -> float:
+def lsh_sign(p: int, i: int, seed: int | None = 0) -> float:
     """Scalar (driver-side) hyperplane entry: ±1 from the high bit of
-    md5('{seed}:L:{p}:{i}')."""
-    h = hashlib.md5(f"{seed}:L:{p}:{i}".encode()).hexdigest()
+    md5('{seed}:L:{p}:{i}'), or of md5('{p}:{i}') with ``seed=None``
+    (the parity key, :func:`lsh_buckets`)."""
+    key = f"{p}:{i}" if seed is None else f"{seed}:L:{p}:{i}"
+    h = hashlib.md5(key.encode()).hexdigest()
     return 1.0 if h[0] in _HEX_HIGH else -1.0
 
 
@@ -142,15 +148,16 @@ class LSHCandidateIndex:
     query, the doc_ids in every bucket within Hamming ``radius`` of the
     query's bucket.  Query-side cost is driver math (n_planes · dim
     multiply-adds per query) + one isin-pruned read of the (doc_id,
-    bucket) table — the corpus is never scanned.
+    bucket) table — the corpus is never scanned.  ``seed=None`` hashes
+    the parity planes (:func:`lsh_buckets`).
     """
 
     def __init__(self, buckets: DataFrame, n_planes: int, radius: int,
-                 seed: int = 0):
+                 seed: int | None = 0):
         self.buckets = buckets
         self.n_planes = int(n_planes)
         self.radius = int(radius)
-        self.seed = int(seed)
+        self.seed = seed
         self._masks = probe_masks(self.n_planes, self.radius)
 
     @classmethod
@@ -337,8 +344,9 @@ def assign_lists_arrow(packed: DataFrame, centroids: "list[list[float]]",
     ``mapInArrow`` pass over packed array vectors computing the L2
     argmin against the broadcast centroid matrix as a blocked matmul —
     the intermediate is a batch×K numpy block, never a |corpus|×K
-    shuffle (the round-3 finding on ``ann_ivf_search``'s join-shaped
-    assignment; that plan stays as the small-K/parity path).  Cost per
+    shuffle (the round-3 finding on the join-shaped assignment of
+    :func:`ann_ivf_search` below, which keeps it as the small-K/parity
+    path and takes this map through its ``asg``).  Cost per
     row is O(dim·K) flops and independent of Spark's shuffle machinery,
     so it holds at the 10⁴-centroid scale a 10⁹-vector IVF needs."""
     import numpy as np
@@ -768,15 +776,14 @@ class IVFADCIndex:
     def search(self, doc_embeddings: DataFrame,
                qv_rows: list[tuple[int, float]], k: int,
                rerank: int | None = None) -> DataFrame:
-        """(doc_id, score[cosine], rank): ADC-approximate scan of the
-        probed lists, exact cosine rerank of the best ``rerank``
-        (default 4k) candidates."""
+        """(query_id = 0, doc_id, score[cosine], rank): ADC-approximate
+        scan of the probed lists, exact cosine rerank of the best
+        ``rerank`` (default 4k) candidates."""
         rerank = 4 * k if rerank is None else rerank
         cand = self.candidates_batch({0: qv_rows},
                                      rerank=rerank).select("doc_id")
-        from garamond_jl_spark.operators.semantic import cosine_topk
         dv = doc_embeddings.join(F.broadcast(cand), "doc_id", "left_semi")
-        return cosine_topk(dv, qv_rows, k)
+        return cosine_topk(dv, {0: qv_rows}, k)
 
     def extend(self, new_embeddings: DataFrame,
                packed: DataFrame | None = None) -> "IVFADCIndex":
@@ -860,11 +867,6 @@ class IVFADCIndex:
 # ---------------------------------------------------------------------------
 # Sharded HNSW candidate index (the real src/index/hnsw.jl counterpart)
 # ---------------------------------------------------------------------------
-
-def _hnsw_pack(doc_embeddings: DataFrame, dim: int) -> DataFrame:
-    from garamond_jl_spark.operators.semantic import pack_doc_embeddings
-    return pack_doc_embeddings(doc_embeddings, dim)
-
 
 _HNSW_GRAPH_SCHEMA = ("shard INT, doc_id LONG, level INT, "
                       "nbrs ARRAY<ARRAY<BIGINT>>, emb ARRAY<DOUBLE>")
@@ -999,7 +1001,7 @@ class HNSWCandidateIndex:
         if dim is None:
             dim = int(doc_embeddings.agg(F.max("i")).first()[0])
         if packed is None:
-            packed = _hnsw_pack(doc_embeddings, dim)
+            packed = pack_doc_embeddings(doc_embeddings, dim)
         sharded = packed.withColumn(
             "shard", F.pmod(F.xxhash64("doc_id", F.lit(seed)),
                             F.lit(n_shards)).cast("int"))
@@ -1105,7 +1107,7 @@ class HNSWCandidateIndex:
         — O(batch) graph builds, existing shards untouched (the same
         frozen-structure append as the IVF/LSH extend; a full rebuild
         re-balances).  Queries search appendix shards alongside."""
-        packed = _hnsw_pack(new_embeddings, self.dim)
+        packed = pack_doc_embeddings(new_embeddings, self.dim)
         sharded = packed.withColumn(
             "shard", (F.lit(self.shard_hi)
                       + F.pmod(F.xxhash64("doc_id", F.lit(self.seed)),
@@ -1150,3 +1152,164 @@ class HNSWCandidateIndex:
                    m["seed"], m["normalize"], m["shard_hi"],
                    m.get("select", "heuristic"),
                    graph_dir=out_dir if resident else None)
+
+
+# ---------------------------------------------------------------------------
+# End-to-end ANN search over a long-form vector table: collect the
+# |queries|·dim query rows once, probe, drop self pairs, exact cosine
+# top-k (semantic.cosine_topk) over the candidates only
+# ---------------------------------------------------------------------------
+
+ANN_PLANES = 6        # LSH search: fewer, wider buckets
+ANN_PROBE_RADIUS = 2  # multiprobe: all buckets within Hamming ≤ 2
+IVF_CENTROIDS = 16
+IVF_PROBE = 4
+
+
+def _vectors(rows: DataFrame) -> dict[int, list[tuple[int, float]]]:
+    """Long-form (id, i, v) rows → {id: [(i, v)]} on the driver, dims
+    ascending so every driver-side sum has one order."""
+    out: dict[int, list[tuple[int, float]]] = {}
+    for key, i, v in sorted(rows.collect()):
+        out.setdefault(int(key), []).append((int(i), float(v)))
+    return out
+
+
+def _rerank(dv: DataFrame, qv_map: dict[int, list[tuple[int, float]]],
+            cand: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k of a probe's (query_id, doc_id) pairs, self
+    pairs dropped → (query_id, vec_id, cos_e6, rnk), ties by vec_id."""
+    cand = cand.where(F.col("doc_id") != F.col("query_id"))
+    return (cosine_topk(dv, qv_map, k, tiebreak_round=6, cand=cand)
+            .select(F.col("query_id").cast("long").alias("query_id"),
+                    F.col("doc_id").alias("vec_id"),
+                    e6(F.col("score")).alias("cos_e6"),
+                    F.col("rank").cast("long").alias("rnk")))
+
+
+def ann_lsh_search(u: DataFrame, query_ids: list[int], k: int,
+                   n_planes: int = ANN_PLANES,
+                   radius: int = ANN_PROBE_RADIUS,
+                   dim: int | None = None) -> DataFrame:
+    """END-TO-END bucketed ANN search (the capability of
+    reference/src/index/hnsw.jl:28-45 / ivfadc.jl:22-39 in the
+    Spark-native idiom): hyperplane bucket → multiprobe candidates
+    (every bucket within Hamming ``radius`` of the query's bucket) →
+    exact cosine rerank of candidates only → top-k.
+
+    ``u`` is the long-form embedding table (vec_id, i, v).  The probe
+    is :meth:`LSHCandidateIndex.candidates_batch` over the parity
+    planes (``seed=None``): query buckets are driver math on the
+    collected query rows, so the bucket table has one consumer (the
+    isin-pruned candidate join) and is neither checkpointed nor
+    cached.  The rerank cost is |candidates|·dim, not |corpus|·dim.
+    Recall depends on corpus structure — clustered real-world
+    embeddings keep high recall at small probe counts
+    (test_ann_clustered_recall); uniform-random vectors (the parity
+    testdata) are the adversarial case and need wide probes (figures
+    in BENCH.md)."""
+    dv = u.toDF("doc_id", "i", "dv")
+    qv_map = _vectors(dv.where(F.col("doc_id").isin(*query_ids)))
+    idx = LSHCandidateIndex(lsh_buckets(dv, n_planes, seed=None, dim=dim),
+                            n_planes, radius, seed=None)
+    return _rerank(dv, qv_map, idx.candidates_batch(qv_map), k)
+
+
+def ann_ivf_search(u: DataFrame, query_ids: list[int], k: int,
+                   n_centroids: int = IVF_CENTROIDS,
+                   n_probe: int = IVF_PROBE,
+                   centroids: DataFrame | None = None,
+                   asg: DataFrame | None = None) -> DataFrame:
+    """END-TO-END IVF (inverted-file) ANN search — the coarse-quantizer
+    half of reference/src/index/ivfadc.jl:22-39 in the Spark-native
+    idiom, and the second scale path of the build brief ("an IVF or
+    LSH-bucketed variant") next to :func:`ann_lsh_search`:
+
+    1. every vector is ASSIGNED to its nearest centroid by cosine (the
+       collected k·dim centroid table scored by
+       :func:`semantic.cosine_scores` + an argmax window) — the
+       inverted lists;
+    2. a query probes its ``n_probe`` nearest centroids and scans only
+       those lists (a centroid-id equi-join — at scale the assignment
+       table is bucketed/partitioned by cid so a probe touches 1/k of
+       the corpus per list);
+    3. exact cosine rerank of the candidates, top-k.
+
+    The probe ranks centroids by COSINE (the parity quantizer), which
+    is why it is a plan here and not :class:`IVFCandidateIndex`, whose
+    lists are L2-nearest.
+
+    ``centroids`` (cid, i, cv): the coarse quantizer.  Real deployments
+    train it offline (k-means) and pass it in; the DEFAULT is the
+    deterministic fixed quantizer "embeddings of the ``n_centroids``
+    lowest vec_ids" so the whole plan is reproducible and
+    DuckDB-parity-checkable (same trick as the md5 hyperplanes — swap
+    the one table for trained centroids, every downstream plan
+    unchanged).
+
+    ``asg`` (vec_id, cid): optional precomputed assignment table.  The
+    default join-shaped assignment below materializes |corpus|×K rows
+    before the argmax — fine at parity K, but at the 10⁴-centroid scale
+    a 10⁹-vector IVF needs, pass the output of
+    :func:`assign_lists_arrow` (one mapInArrow blocked-matmul pass over
+    packed vectors, cost independent of K — figures in BENCH.md).  Any
+    consistent nearest-centroid map is a valid list structure (the
+    rerank is exact either way); note the default here assigns by
+    cosine for DuckDB parity while assign_lists_arrow uses the IVFADC
+    L2 convention.  With ``asg`` supplied, the corpus never enters the
+    centroid-cosine stage — only the query ids' rows are ranked for
+    probing."""
+    dv = u.toDF("doc_id", "i", "dv")
+    qv_map = _vectors(dv.where(F.col("doc_id").isin(*query_ids)))
+    if centroids is None:
+        centroids = (u.where(F.col("vec_id") < n_centroids)
+                     .select(F.col("vec_id").alias("cid"), "i",
+                             F.col("v").alias("cv")))
+    cent = _vectors(centroids.select("cid", "i", "cv"))
+    # with a precomputed assignment, centroid cosines are needed for the
+    # QUERY vectors only (the probe ranking) — never the corpus
+    base = dv if asg is None else dv.where(F.col("doc_id").isin(*query_ids))
+    ccos = cosine_scores(base, cent, query_norms(cent)).toDF("cid", "vec_id",
+                                                             "c")
+    wa = Window.partitionBy("vec_id").orderBy(
+        F.round(F.col("c"), 6).desc(), F.col("cid").asc())
+    ranked = ccos.withColumn("_r", F.row_number().over(wa))
+    if asg is None:
+        asg = ranked.where(F.col("_r") == 1).select("vec_id", "cid")
+    probes = (ranked.where(F.col("_r") <= n_probe)
+              .where(F.col("vec_id").isin(*query_ids))
+              .select(F.col("vec_id").alias("query_id"), "cid"))
+    cand = (F.broadcast(probes).join(asg, "cid")
+            .select("query_id", F.col("vec_id").alias("doc_id")))
+    return _rerank(dv, qv_map, cand, k)
+
+
+def ann_hnsw_search(u: DataFrame, query_ids: list[int], k: int,
+                    n_shards: int = 4, M: int = 8,
+                    ef_construction: int = 100,
+                    ef: int | None = None, seed: int = 0) -> DataFrame:
+    """END-TO-END sharded-HNSW ANN search — the reference's DEFAULT
+    million-scale index (src/index/hnsw.jl:14-45; "Million-scale
+    indexing using hnsw", docs/src/index.md) in the Spark-native idiom
+    (:class:`HNSWCandidateIndex` over per-shard Malkov-Yashunin
+    graphs):
+
+    1. hash-shard the corpus, build one graph per shard (a single
+       applyInPandas pass; shards are independent — machines add
+       shards);
+    2. every shard beam-searches the query batch in parallel, the
+       union of per-shard top-``ef`` is the candidate set;
+    3. exact cosine rerank of the candidates, top-k.
+
+    ``ef=None`` runs the beam exhaustive (ef ≥ every shard), so the
+    candidates provably contain the exact top-k — the DuckDB-parity
+    mode, same "swap one knob" trick as the fixed IVF quantizer;
+    production ``ef`` recall is pytest/bench-measured
+    (tests/test_hnsw.py, BENCH.md)."""
+    dv = u.toDF("doc_id", "i", "dv")
+    qv_map = _vectors(dv.where(F.col("doc_id").isin(*query_ids)))
+    idx = HNSWCandidateIndex.build(dv, M=M, ef_construction=ef_construction,
+                                   ef=ef if ef is not None else (1 << 30),
+                                   n_shards=n_shards, seed=seed,
+                                   normalize=True, persist=False)
+    return _rerank(dv, qv_map, idx.candidates_batch(qv_map), k)

@@ -399,6 +399,23 @@ def zero_pad(index: InvertedIndex, qterms: DataFrame, k: int,
             .withColumn("c", F.lit(0.0)))
 
 
+def oov_cosines(index: InvertedIndex, qterms: DataFrame) -> DataFrame:
+    """E8 :large_vector (dtv.jl:53-58 + defaults.jl:26-27): an all-OOV
+    document embeds as the constant DEFAULT_OOV_VAL vector over the
+    |V|-term space; L2-normalized that is 1/√|V| in every component, so
+    against the normalized query it scores cos = Σ qw / √|V| — a
+    per-query scalar → (query_id, cos).  Summed on the driver from the
+    query-term rows: ``qterms`` is :func:`embed_queries`' LocalRelation,
+    so its collect launches no job."""
+    n_terms = float(index.meta.get("n_terms") or index.terms.count())
+    sums: dict[int, float] = {}
+    for r in qterms.collect():
+        sums[r["query_id"]] = sums.get(r["query_id"], 0.0) + r["qw"]
+    return local_frame(qterms.sparkSession,
+        [(q, w / n_terms ** 0.5) for q, w in sums.items()],
+        "query_id LONG, cos DOUBLE")
+
+
 # phase-1 salt fan-out for the two-phase top-k window (see topk_plan):
 # bounds any single ranking task at ~hits/TOPK_SALTS rows
 TOPK_SALTS = 32
@@ -440,20 +457,12 @@ def topk_plan(index: InvertedIndex, qterms: DataFrame, k: int,
             index, qterms, k, positive_only=cfg.oov_policy == "large_vector"))
     hits = contrib.groupBy("query_id", "doc_id").agg(F.sum("c").alias("cos"))
     if cfg.oov_policy == "large_vector":
-        # E8 :large_vector (dtv.jl:53-58 + defaults.jl:26-27): an
-        # all-OOV document embeds as the constant DEFAULT_OOV_VAL
-        # vector over the |V|-term space; L2-normalized that is
-        # 1/√|V| in every component, so against the normalized query
-        # it scores cos = Σ qw / √|V| — a per-query scalar.  These
-        # docs are REAL hits (score strictly above the cos=0 fill), so
-        # they are appended regardless of ``pad_to_k``.  They tie among
-        # themselves (doc_id asc), so the 2k lowest all-OOV ids cover
-        # every slot they could take.
-        n_terms = float(index.meta.get("n_terms")
-                        or index.terms.count())
-        oov_cos = (qterms.groupBy("query_id")
-                   .agg((F.sum("qw") / F.lit(n_terms ** 0.5))
-                        .alias("cos")))
+        # the all-OOV docs (:func:`oov_cosines`) are REAL hits (score
+        # strictly above the cos=0 fill), so they are appended
+        # regardless of ``pad_to_k``.  They tie among themselves
+        # (doc_id asc), so the 2k lowest all-OOV ids cover every slot
+        # they could take.
+        oov_cos = oov_cosines(index, qterms)
         res = index.resident
         if res is not None and k <= res.pad_k:
             # warm posture: the 2k lowest all-OOV ids are driver-held

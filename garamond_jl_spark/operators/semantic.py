@@ -31,6 +31,7 @@ query embedding touches only the query's own terms.
 from __future__ import annotations
 
 import hashlib
+import math
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -325,7 +326,6 @@ def borep_projection(dim_in: int, dim_out: int, seed: int = 0) -> list[tuple]:
     """Deterministic BOREP heuristic-init projection R (borep.jl:25-27):
     entries ±1/sqrt(d) with the sign from md5(seed:out:in)'s high bit —
     the same derandomization as the LSH hyperplanes."""
-    import math
     rows = []
     inv = 1.0 / math.sqrt(dim_in)
     for o in range(1, dim_out + 1):
@@ -760,8 +760,7 @@ class DenseVectorSearcher:
 
     def _doc_norms(self) -> DataFrame:
         if self._norms is None:
-            self._norms = (self.doc_embeddings.groupBy("doc_id")
-                           .agg(F.sqrt(F.sum(F.col("dv") ** 2)).alias("nd")))
+            self._norms = doc_norms(self.doc_embeddings)
         return self._norms
 
     def fill_score(self) -> float:
@@ -799,14 +798,16 @@ class DenseVectorSearcher:
         The query side is |queries|·dim scalars, so the norms, the
         is_embedded gate (a zero-norm query is OOV for this searcher)
         and the candidate probes are all driver math on the one collect
-        the caller made — none of them costs a job."""
+        the caller made — none of them costs a job.  The long-form
+        cosine is :func:`cosine_scores`, the scorer every cosine top-k
+        shares."""
         from garamond_jl_spark.functions.scoring import score_transform_expr
         qv_map: dict[int, list[tuple[int, float]]] = {}
         for qid, i, v in rows:
             qv_map.setdefault(qid, []).append((i, v))
-        nq = {q: sum(v * v for _, v in r) ** 0.5 for q, r in qv_map.items()}
-        qv_map = {q: r for q, r in qv_map.items() if nq[q] > 0.0}
-        live = sorted(qv_map)
+        nq = query_norms(qv_map)
+        live = sorted(nq)
+        qv_map = {q: qv_map[q] for q in live}
         cand = (self.candidate_index.candidates_batch(qv_map)
                 if self.candidate_index is not None and qv_map else None)
         if self.packed is not None:
@@ -824,26 +825,20 @@ class DenseVectorSearcher:
             if cand is not None and len(live) > 1:
                 hits = hits.join(cand, ["query_id", "doc_id"], "left_semi")
             return hits, live
-        qv = local_frame(spark,
-            [(q, i, v) for q in live for i, v in qv_map[q]],
-            "query_id INT, i INT, qv DOUBLE")
-        nqdf = F.broadcast(local_frame(spark, [(q, nq[q]) for q in live],
-                                       "query_id INT, nq DOUBLE"))
         dv = self.doc_embeddings
-        pairs = (dv.join(F.broadcast(qv), "i") if cand is None
-                 else cand.join(dv, "doc_id").join(qv, ["query_id", "i"]))
-        dots = (pairs.groupBy("query_id", "doc_id")
-                .agg(F.sum(F.col("dv") * F.col("qv")).alias("dot")))
         if self.metric == "euclidean":
             # BruteTree semantics: every (live query, embedded doc) pair
             # has a distance, including docs whose dot with the query is
             # 0 (no shared nonzero component) — candidates restrict the
             # pairs when an index is attached, otherwise the pair set IS
             # the brute full scan
+            nqdf = F.broadcast(local_frame(spark, sorted(nq.items()),
+                                           "query_id INT, nq DOUBLE"))
             base = (self._doc_norms().crossJoin(nqdf) if cand is None
                     else cand.join(self._doc_norms(), "doc_id")
                     .join(nqdf, "query_id"))
-            dist = (base.join(dots, ["query_id", "doc_id"], "left")
+            dist = (base.join(_query_dots(dv, qv_map, nq, cand),
+                              ["query_id", "nq", "doc_id"], "left")
                     .select("query_id", "doc_id", F.sqrt(F.greatest(
                         F.lit(0.0),
                         F.col("nd") * F.col("nd") + F.col("nq") * F.col("nq")
@@ -852,15 +847,7 @@ class DenseVectorSearcher:
             score = score_transform_expr(F.col("dist"), self.score_alpha)
             return (dist.select("query_id", "doc_id", score.alias("score")),
                     live)
-        # zero-norm guard: a zero doc vector must score like the packed
-        # kernel (cos 0 → fill), not 0/0 = NaN, which Spark's
-        # descending sort ranks ABOVE every real hit
-        cosd = (dots.join(self._doc_norms(), "doc_id")
-                .join(nqdf, "query_id")
-                .select("query_id", "doc_id",
-                        F.when(F.col("nd") > 0,
-                               F.col("dot") / (F.col("nd") * F.col("nq")))
-                        .otherwise(F.lit(0.0)).alias("cos")))
+        cosd = cosine_scores(dv, qv_map, nq, cand, self._doc_norms())
         score = score_transform_expr(F.lit(1.0) - F.col("cos"),
                                      self.score_alpha)
         return cosd.select("query_id", "doc_id", score.alias("score")), live
@@ -1287,43 +1274,108 @@ def packed_cosine_scores_batch(packed: DataFrame,
             .mapInArrow(_score, out_schema))
 
 
-def cosine_topk(dv: DataFrame, qv_rows: list[tuple[int, float]], k: int,
-                tiebreak_round: int | None = None) -> DataFrame:
-    """Generic cosine top-k of a long-form doc-embedding table against
-    one query vector [(i, qv)] — shared tail for every embedder."""
-    spark = dv.sparkSession
-    import math
-    nq = math.sqrt(sum(v * v for _, v in qv_rows))
-    if nq == 0.0 or not qv_rows:
-        return local_frame(spark, [], "doc_id LONG, score DOUBLE, rank INT")
-    qv = F.broadcast(local_frame(spark, qv_rows, "i INT, qv DOUBLE"))
-    dn = dv.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("dv") ** 2)).alias("nd"))
-    dots = (dv.join(qv, "i")
-            .groupBy("doc_id").agg(F.sum(F.col("dv") * F.col("qv")).alias("dot")))
-    cosd = (dots.join(dn, "doc_id")
-            .select("doc_id",
+def doc_norms(dv: DataFrame) -> DataFrame:
+    """(doc_id, nd): the L2 norm of every long-form vector."""
+    return dv.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("dv") ** 2))
+                                    .alias("nd"))
+
+
+def query_norms(qv_map: dict[int, list[tuple[int, float]]]
+                ) -> dict[int, float]:
+    """{query_id: ‖q‖} over the LIVE queries of a driver-collected
+    batch: a zero-norm query has no embedded component, so it is OOV
+    for a cosine scorer (the is_embedded gate, at no job's cost)."""
+    nq = {q: math.sqrt(sum(v * v for _, v in r)) for q, r in qv_map.items()}
+    return {q: n for q, n in nq.items() if n > 0.0}
+
+
+def _query_dots(dv: DataFrame,
+                qv_map: dict[int, list[tuple[int, float]]],
+                nq: dict[int, float],
+                cand: DataFrame | None = None) -> DataFrame:
+    """(query_id, nq, doc_id, dot) of the collected query vectors of
+    the queries in ``nq`` against a long-form table (doc_id, i, dv):
+    every doc sharing a component with a query, or with ``cand``
+    (query_id, doc_id) only each query's candidate pairs.  The query
+    norm rides the query rows as a group key, so no norm table is
+    joined (or broadcast) afterwards."""
+    qv = local_frame(dv.sparkSession,
+        [(q, i, v, nq[q]) for q in sorted(nq) for i, v in qv_map[q]],
+        "query_id INT, i INT, qv DOUBLE, nq DOUBLE")
+    pairs = (dv.join(F.broadcast(qv), "i") if cand is None
+             else cand.join(dv, "doc_id").join(qv, ["query_id", "i"]))
+    return (pairs.groupBy("query_id", "nq", "doc_id")
+            .agg(F.sum(F.col("dv") * F.col("qv")).alias("dot")))
+
+
+def cosine_scores(dv: DataFrame, qv_map: dict[int, list[tuple[int, float]]],
+                  nq: dict[int, float], cand: DataFrame | None = None,
+                  norms: DataFrame | None = None) -> DataFrame:
+    """The one long-form cosine scorer: driver-collected query vectors
+    ``qv_map`` {query_id: [(i, qv)]} with their norms ``nq``
+    (:func:`query_norms`; only its queries are scored) against the
+    long-form table ``dv`` → (query_id, doc_id, cos), over ``cand``'s
+    (query_id, doc_id) pairs when given (an ANN probe's output).
+    ``norms`` is :func:`doc_norms` of ``dv`` (computed when omitted).
+
+    Zero-norm guard: a zero doc vector scores cos 0 like the packed
+    kernel, not 0/0 = NaN, which Spark's descending sort ranks ABOVE
+    every real hit."""
+    if norms is None:
+        norms = doc_norms(dv)
+    return (_query_dots(dv, qv_map, nq, cand).join(norms, "doc_id")
+            .select("query_id", "doc_id",
                     F.when(F.col("nd") > 0,
-                           F.col("dot") / (F.col("nd") * F.lit(nq)))
-                    .otherwise(F.lit(0.0)).alias("score")))
+                           F.col("dot") / (F.col("nd") * F.col("nq")))
+                    .otherwise(F.lit(0.0)).alias("cos")))
+
+
+def cosine_topk(dv: DataFrame, qv_map: dict[int, list[tuple[int, float]]],
+                k: int, tiebreak_round: int | None = None,
+                cand: DataFrame | None = None) -> DataFrame:
+    """Cosine top-k of a long-form doc-embedding table (doc_id, i, dv)
+    for a batch of driver-collected query vectors {query_id: [(i, qv)]}
+    → (query_id, doc_id, score = cos, rank): :func:`cosine_scores`
+    plus the rank tail shared by every embedder and the ANN searches
+    (``operators.ann.ann_*_search`` pass their probe's pairs as
+    ``cand``).  Ties break on round(score, ``tiebreak_round``), then
+    doc_id.  A zero-norm query returns no rows.
+
+    A single query is a batch of one and ranks with orderBy + limit
+    (TakeOrderedAndProject: per-partition top-k merged on the driver,
+    no ranking exchange); a larger batch ranks with a per-query
+    window."""
+    nq = query_norms(qv_map)
+    if not nq:
+        return local_frame(dv.sparkSession, [],
+                           "query_id INT, doc_id LONG, score DOUBLE, rank INT")
+    cosd = cosine_scores(dv, qv_map, nq, cand).withColumnRenamed("cos",
+                                                                 "score")
     rank_on = (F.round(F.col("score"), tiebreak_round)
                if tiebreak_round is not None else F.col("score"))
-    top = cosd.orderBy(rank_on.desc(), F.col("doc_id").asc()).limit(k)
-    w = Window.orderBy(rank_on.desc(), F.col("doc_id").asc())
-    return (top.withColumn("rank", F.row_number().over(w))
-            .select("doc_id", "score", "rank"))
+    order = [rank_on.desc(), F.col("doc_id").asc()]
+    if len(nq) == 1:
+        top = cosd.orderBy(*order).limit(k)
+        ranked = top.withColumn("rank",
+                                F.row_number().over(Window.orderBy(*order)))
+    else:
+        w = Window.partitionBy("query_id").orderBy(*order)
+        ranked = (cosd.withColumn("rank", F.row_number().over(w))
+                  .where(F.col("rank") <= k))
+    return ranked.select("query_id", "doc_id", "score", "rank")
 
 
 def boe_topk(spark: SparkSession, tokens: DataFrame,
              word_vectors: DataFrame, query: str, k: int = 10,
              tiebreak_round: int | None = None) -> DataFrame:
-    """BOE cosine top-k: (doc_id, score, rank).  Brute-force over the
-    doc-embedding table (the NaiveIndex analog, naive.jl:15-32); the
-    LSH multiprobe path (plans.pipeline_queries.ann_lsh_search) is the
-    sublinear variant over the same long-form embeddings.  The ranking
-    tail is :func:`cosine_topk` — one shared definition of the
-    round(score, r) + doc_id convention."""
+    """BOE cosine top-k for one query: (query_id = 0, doc_id, score,
+    rank).  Brute-force over the doc-embedding table (the NaiveIndex
+    analog, naive.jl:15-32); :func:`operators.ann.ann_lsh_search` is
+    the sublinear variant over the same long-form embeddings.  The
+    scorer and ranking tail are :func:`cosine_topk` — one shared
+    definition of the round(score, r) + doc_id convention."""
     dv = boe_doc_embeddings(tokens, word_vectors)
     qv_rows = [(int(r["i"]), float(r["qv"]))
                for r in boe_embed_query(spark, query,
                                         word_vectors).collect()]
-    return cosine_topk(dv, qv_rows, k, tiebreak_round)
+    return cosine_topk(dv, {0: qv_rows}, k, tiebreak_round)

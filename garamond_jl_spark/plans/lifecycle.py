@@ -28,7 +28,8 @@ from garamond_jl_spark.functions.query_parser import parse_input
 from garamond_jl_spark.operators.build import InvertedIndex
 from garamond_jl_spark.operators.filters import filter_predicate, indexfilter
 from garamond_jl_spark.operators.query import (embed_queries, fill_score,
-                                               score_all, topk_plan)
+                                               oov_cosines, score_all,
+                                               topk_plan)
 from garamond_jl_spark.plugins import get_ranker, get_recommender
 from garamond_jl_spark.session import local_frame
 
@@ -140,11 +141,10 @@ def classic_hits(index: InvertedIndex, qt: DataFrame) -> DataFrame:
     h = score_all(index, qt)
     if index.cfg.oov_policy == "large_vector":
         from garamond_jl_spark.functions.scoring import score_transform_expr
-        n_terms = float(index.meta.get("n_terms") or index.terms.count())
-        s_oov = (qt.groupBy("query_id")
-                 .agg(score_transform_expr(
-                     F.lit(1.0) - F.sum("qw") / F.lit(n_terms ** 0.5),
-                     index.cfg.score_alpha).alias("score")))
+        s_oov = oov_cosines(index, qt).select(
+            "query_id", score_transform_expr(F.lit(1.0) - F.col("cos"),
+                                             index.cfg.score_alpha)
+            .alias("score"))
         oov = s_oov.crossJoin(index.docs.where(F.col("doclen") == 0)
                               .select("doc_id"))
         h = h.unionByName(oov.select("query_id", "doc_id", "score"))

@@ -24,8 +24,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from garamond_jl_spark.config import EngineConfig
 from garamond_jl_spark.operators import semantic as _SEM
-from garamond_jl_spark.operators.ann import lsh_buckets, probe_masks
+from garamond_jl_spark.operators.ann import (ANN_PLANES, ANN_PROBE_RADIUS,
+                                             IVF_CENTROIDS, IVF_PROBE,
+                                             ann_hnsw_search, ann_ivf_search,
+                                             ann_lsh_search, lsh_buckets,
+                                             probe_masks)
+from garamond_jl_spark.operators.build import InvertedIndex, build_index
 from garamond_jl_spark.plans.testdata_queries import ORACLES, QUERIES, e6, q
 from garamond_jl_spark.session import local_frame
 from garamond_jl_spark.sources.tables import load_testdata
@@ -121,7 +127,6 @@ def _jaccard_pairs(shd: DataFrame,
     verified over ALL shingles.  The cap bounds the self-join's per-key
     fan-out (a shingle with df=d yields d² pair rows — unbounded on
     boilerplate without the cap)."""
-    ssz = shd.groupBy("doc_id").agg(F.count("*").alias("n"))
     sdf = shd.groupBy("s").agg(F.count("*").alias("df"))
     capped = (shd.join(sdf.where(F.col("df") <= max_shingle_df)
                        .select("s"), "s"))
@@ -132,18 +137,25 @@ def _jaccard_pairs(shd: DataFrame,
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"))
             .distinct())
+    return _jaccard_verify(cand, shd)
+
+
+def _jaccard_verify(cand: DataFrame, shd: DataFrame) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b) → (doc_a, doc_b, jacc): the exact
+    Jaccard over ALL of ``shd``'s (doc_id, s) shingles, one integer
+    division of the intersection and the two set sizes."""
     x = shd.select(F.col("doc_id").alias("doc_a"), "s")
     y = shd.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s2"))
     inter = (cand.join(x, "doc_a").join(y, "doc_b")
              .where(F.col("s") == F.col("s2"))
              .groupBy("doc_a", "doc_b").agg(F.count("*").alias("i")))
-    jacc = (inter
+    ssz = shd.groupBy("doc_id").agg(F.count("*").alias("n"))
+    return (inter
             .join(ssz.select(F.col("doc_id").alias("doc_a"),
                              F.col("n").alias("na")), "doc_a")
             .join(ssz.select(F.col("doc_id").alias("doc_b"),
                              F.col("n").alias("nb")), "doc_b")
             .withColumn("jacc", F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))))
-    return jacc
 
 
 # --------------------------------------------------------------------------
@@ -298,18 +310,7 @@ def minhash_lsh_pairs(shd: DataFrame, n_bands: int = N_BANDS,
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"))
             .distinct())
-    x = shd.select(F.col("doc_id").alias("doc_a"), "s")
-    y = shd.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s2"))
-    inter = (cand.join(x, "doc_a").join(y, "doc_b")
-             .where(F.col("s") == F.col("s2"))
-             .groupBy("doc_a", "doc_b").agg(F.count("*").alias("i")))
-    ssz = shd.groupBy("doc_id").agg(F.count("*").alias("n"))
-    return (inter
-            .join(ssz.select(F.col("doc_id").alias("doc_a"),
-                             F.col("n").alias("na")), "doc_a")
-            .join(ssz.select(F.col("doc_id").alias("doc_b"),
-                             F.col("n").alias("nb")), "doc_b")
-            .withColumn("jacc", F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))))
+    return _jaccard_verify(cand, shd)
 
 
 def _simhash_sql() -> str:
@@ -402,8 +403,8 @@ def _simhash64_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     The previous relational plan paid two full-token shuffles
     (``groupBy(doc_id, term)`` then ``groupBy(doc_id)``) and its 64
     conditional sum aggregates ran on Catalyst's interpreted path (the
-    >100-field projection disables whole-stage codegen;
-    plans/r06/dedup_simhash64_before.txt has no codegen span at all).
+    >100-field projection disables whole-stage codegen; the r6 plan
+    had no codegen span at all, OPTIMIZATION_r06.md "dedup_simhash64").
     Vote math here is vectorized NumPy: one ±1 sign matrix row per
     distinct term (memoized per task — Zipf head terms hash once), one
     integer matvec per document.  Integer-exact and engine-identical:
@@ -520,10 +521,11 @@ def dedup_simhash_pairs(spark, sf_dir):
 
     Plan note (r6, guide §2.4): ``sh`` feeds FOUR consumers (both sides
     of the band self-join + both verify joins); lazily that evaluated
-    the whole tokenize→md5→64-vote lineage four times in one plan
-    (plans/r06/dedup_simhash64_before.txt: 4 identical scan+agg
-    subtrees).  ``localCheckpoint`` materializes the 3-column/n_docs-row
-    signature table once; every consumer reads the tiny checkpoint.  At
+    the whole tokenize→md5→64-vote lineage four times in one plan (4
+    identical scan+agg subtrees, OPTIMIZATION_r06.md
+    "dedup_simhash64").  ``localCheckpoint`` materializes the
+    3-column/n_docs-row signature table once; every consumer reads the
+    tiny checkpoint.  At
     100 TB the signature table is ~24 B/doc — the cost model only
     improves with corpus size."""
     sh = _simhash64_df(spark, sf_dir).localCheckpoint(eager=True)
@@ -571,8 +573,6 @@ nrm AS (SELECT vec_id, sqrt(sum(v * v)) AS nv FROM u GROUP BY 1)
 """
 
 N_PLANES = 8          # bucket-assignment query (256 buckets)
-ANN_PLANES = 6        # end-to-end search: fewer, wider buckets
-ANN_PROBE_RADIUS = 2  # multiprobe: all buckets within Hamming ≤ 2
 ANN_QUERY_IDS = (0, 1, 2)
 ANN_K = 10
 
@@ -628,40 +628,6 @@ def _emb_long(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("i", F.col("i") + 1))
 
 
-def _vec_norms(u: DataFrame) -> DataFrame:
-    """(vec_id, nv): the L2 norm of every long-form vector."""
-    return u.groupBy("vec_id").agg(
-        F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nv"))
-
-
-def _cosine_rerank(u: DataFrame, cand: DataFrame, nrm: DataFrame,
-                   query_ids: list[int], k: int) -> DataFrame:
-    """Exact cosine rerank of (query_id, vec_id) candidates → top-k
-    (query_id, vec_id, cos_e6, rnk) per query, ties by vec_id.  ``nrm``
-    is :func:`_vec_norms` of ``u``; only the QUERIES' norms broadcast
-    (|query_ids| rows) — the unfiltered table is corpus-sized and would
-    ship to every executor."""
-    uq = u.select(F.col("vec_id").alias("query_id"), "i",
-                  F.col("v").alias("qv"))
-    dots = (cand.join(u, "vec_id")
-            .join(uq, ["query_id", "i"])
-            .groupBy("query_id", "vec_id")
-            .agg(F.sum(F.col("v") * F.col("qv")).alias("dot")))
-    nq = (nrm.where(F.col("vec_id").isin(*query_ids))
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("nv").alias("nq")))
-    cosd = (dots.join(nrm, "vec_id").join(F.broadcast(nq), "query_id")
-            .select("query_id", "vec_id",
-                    (F.col("dot") / (F.col("nv") * F.col("nq")))
-                    .alias("c")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("c"), 6).desc(), F.col("vec_id").asc())
-    return (cosd.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .where(F.col("rnk") <= k)
-            .select("query_id", "vec_id", e6(F.col("c")).alias("cos_e6"),
-                    "rnk"))
-
-
 @q("ann_cosine_topk", f"""
 WITH {EMB_NORM_CTE},
 qv AS (SELECT i, v FROM u WHERE vec_id = 0),
@@ -713,46 +679,6 @@ def ann_lsh_buckets(spark, sf_dir):
                        N_PLANES, seed=None).toDF("vec_id", "bucket")
 
 
-def ann_lsh_search(u: DataFrame, query_ids: list[int], k: int,
-                   n_planes: int = ANN_PLANES,
-                   radius: int = ANN_PROBE_RADIUS,
-                   dim: int | None = None) -> DataFrame:
-    """END-TO-END bucketed ANN search (the capability of
-    reference/src/index/hnsw.jl:28-45 / ivfadc.jl:22-39 in the
-    Spark-native idiom): hyperplane bucket → multiprobe candidates
-    (every bucket within Hamming ``radius`` of the query's bucket) →
-    exact cosine rerank of candidates only → top-k.
-
-    ``u`` is the long-form embedding table (vec_id, i, v).  At scale
-    nothing touches the full corpus after bucketing: the probe list is
-    |queries|·|masks| rows broadcast into a bucket-equality join, and
-    the rerank cost is |candidates|·dim, not |corpus|·dim.  Recall
-    depends on corpus structure — clustered real-world embeddings keep
-    high recall at small probe counts (test_ann_clustered_recall);
-    uniform-random vectors (the parity testdata) are the adversarial
-    case and need wide probes (figures in BENCH.md)."""
-    spark = u.sparkSession
-    # the bucket table feeds TWO consumers (the query-side filter and
-    # the candidate join) — checkpoint the tiny (vec_id, bucket) table
-    # once instead of re-deriving the projection+bucket aggregation per
-    # consumer (r6, guide §2.4; ~16 B/vector at any corpus size)
-    bkt = lsh_buckets(u.toDF("doc_id", "i", "dv"), n_planes, seed=None,
-                      dim=dim).toDF("vec_id", "bucket") \
-        .localCheckpoint(eager=True)
-    qb = (bkt.where(F.col("vec_id").isin(*query_ids))
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("bucket").alias("qbkt")))
-    masks = local_frame(spark,
-        [(m,) for m in probe_masks(n_planes, radius)], "m LONG")
-    probes = (qb.crossJoin(F.broadcast(masks))
-              .select("query_id", F.expr("qbkt ^ m").alias("pbkt")))
-    cand = (F.broadcast(probes)
-            .join(bkt, bkt["bucket"] == probes["pbkt"])
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "vec_id").distinct())
-    return _cosine_rerank(u, cand, _vec_norms(u), query_ids, k)
-
-
 _ANN_MASK_VALUES = ", ".join(
     f"({m})" for m in probe_masks(ANN_PLANES, ANN_PROBE_RADIUS))
 
@@ -788,10 +714,10 @@ FROM cosd QUALIFY rnk <= {ANN_K}
 """)
 def ann_lsh_topk(spark, sf_dir):
     """Parity wrapper: multiprobe LSH ANN over the embeddings table
-    (see :func:`ann_lsh_search`).  The embedding width comes from one
-    min/max agg over the array sizes, which also rejects ragged
-    widths (a plane table sized by one row would silently drop the
-    dimensions of longer vectors)."""
+    (see :func:`operators.ann.ann_lsh_search`).  The embedding width
+    comes from one min/max agg over the array sizes, which also
+    rejects ragged widths (a plane table sized by one row would
+    silently drop the dimensions of longer vectors)."""
     e = load_testdata(spark, sf_dir, "embeddings")
     lo, hi = e.agg(F.min(F.size("embedding")),
                    F.max(F.size("embedding"))).first()
@@ -800,80 +726,6 @@ def ann_lsh_topk(spark, sf_dir):
     dim = int(hi or 0)
     return ann_lsh_search(_emb_long(spark, sf_dir),
                           list(ANN_QUERY_IDS), ANN_K, dim=dim)
-
-
-IVF_CENTROIDS = 16
-IVF_PROBE = 4
-
-
-def ann_ivf_search(u: DataFrame, query_ids: list[int], k: int,
-                   n_centroids: int = IVF_CENTROIDS,
-                   n_probe: int = IVF_PROBE,
-                   centroids: DataFrame | None = None,
-                   asg: DataFrame | None = None) -> DataFrame:
-    """END-TO-END IVF (inverted-file) ANN search — the coarse-quantizer
-    half of reference/src/index/ivfadc.jl:22-39 in the Spark-native
-    idiom, and the second scale path of the build brief ("an IVF or
-    LSH-bucketed variant") next to :func:`ann_lsh_search`:
-
-    1. every vector is ASSIGNED to its nearest centroid by cosine (one
-       broadcast join against the k·dim centroid table + an argmax
-       window) — the inverted lists;
-    2. a query probes its ``n_probe`` nearest centroids and scans only
-       those lists (a centroid-id equi-join — at scale the assignment
-       table is bucketed/partitioned by cid so a probe touches 1/k of
-       the corpus per list);
-    3. exact cosine rerank of the candidates, top-k.
-
-    ``centroids`` (cid, i, cv): the coarse quantizer.  Real deployments
-    train it offline (k-means) and pass it in; the DEFAULT is the
-    deterministic fixed quantizer "embeddings of the ``n_centroids``
-    lowest vec_ids" so the whole plan is reproducible and
-    DuckDB-parity-checkable (same trick as the md5 hyperplanes — swap
-    the one table for trained centroids, every downstream plan
-    unchanged).
-
-    ``asg`` (vec_id, cid): optional precomputed assignment table.  The
-    default join-shaped assignment below materializes |corpus|×K rows
-    before the argmax — fine at parity K, but at the 10⁴-centroid scale
-    a 10⁹-vector IVF needs, pass the output of
-    ``operators.ann.assign_lists_arrow`` (one mapInArrow blocked-matmul
-    pass over packed vectors, cost independent of K — figures in
-    BENCH.md).  Any consistent nearest-centroid map is a valid list
-    structure (the rerank is exact either way); note the default here
-    assigns by cosine for DuckDB parity while assign_lists_arrow uses
-    the IVFADC L2 convention.  With ``asg`` supplied, the corpus never
-    enters the centroid-cosine stage — only the query ids' rows are
-    ranked for probing."""
-    if centroids is None:
-        centroids = (u.where(F.col("vec_id") < n_centroids)
-                     .select(F.col("vec_id").alias("cid"), "i",
-                             F.col("v").alias("cv")))
-    nrm = _vec_norms(u)
-    cnrm = centroids.groupBy("cid").agg(
-        F.sqrt(F.sum(F.col("cv") * F.col("cv"))).alias("nc"))
-    # with a precomputed assignment, centroid cosines are needed for the
-    # QUERY vectors only (the probe ranking) — never the corpus
-    ubase = u if asg is None else u.where(F.col("vec_id").isin(*query_ids))
-    cdots = (ubase.join(F.broadcast(centroids), "i")
-             .groupBy("vec_id", "cid")
-             .agg(F.sum(F.col("v") * F.col("cv")).alias("dot")))
-    ccos = (cdots.join(nrm, "vec_id").join(F.broadcast(cnrm), "cid")
-            .select("vec_id", "cid",
-                    (F.col("dot") / (F.col("nv") * F.col("nc")))
-                    .alias("c")))
-    wa = Window.partitionBy("vec_id").orderBy(
-        F.round(F.col("c"), 6).desc(), F.col("cid").asc())
-    ranked = ccos.withColumn("_r", F.row_number().over(wa))
-    if asg is None:
-        asg = ranked.where(F.col("_r") == 1).select("vec_id", "cid")
-    probes = (ranked.where(F.col("_r") <= n_probe)
-              .where(F.col("vec_id").isin(*query_ids))
-              .select(F.col("vec_id").alias("query_id"), "cid"))
-    cand = (F.broadcast(probes).join(asg, "cid")
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "vec_id").distinct())
-    return _cosine_rerank(u, cand, nrm, query_ids, k)
 
 
 _IVF_QUERY_VALUES = ", ".join(f"({q})" for q in ANN_QUERY_IDS)
@@ -928,50 +780,9 @@ FROM cosd QUALIFY rnk <= {ANN_K}
 """)
 def ann_ivf_topk(spark, sf_dir):
     """Parity wrapper: IVF coarse-quantizer ANN over the embeddings
-    table (see :func:`ann_ivf_search`)."""
+    table (see :func:`operators.ann.ann_ivf_search`)."""
     return ann_ivf_search(_emb_long(spark, sf_dir),
                           list(ANN_QUERY_IDS), ANN_K)
-
-
-def ann_hnsw_search(u: DataFrame, query_ids: list[int], k: int,
-                    n_shards: int = 4, M: int = 8,
-                    ef_construction: int = 100,
-                    ef: int | None = None, seed: int = 0) -> DataFrame:
-    """END-TO-END sharded-HNSW ANN search — the reference's DEFAULT
-    million-scale index (src/index/hnsw.jl:14-45; "Million-scale
-    indexing using hnsw", docs/src/index.md) in the Spark-native idiom
-    (operators/ann.HNSWCandidateIndex over per-shard Malkov-Yashunin
-    graphs):
-
-    1. hash-shard the corpus, build one graph per shard (a single
-       applyInPandas pass; shards are independent — machines add
-       shards);
-    2. every shard beam-searches the query batch in parallel, the
-       union of per-shard top-``ef`` is the candidate set;
-    3. exact cosine rerank of the candidates, top-k.
-
-    ``ef=None`` runs the beam exhaustive (ef ≥ every shard), so the
-    candidates provably contain the exact top-k — the DuckDB-parity
-    mode, same "swap one knob" trick as the fixed IVF quantizer;
-    production ``ef`` recall is pytest/bench-measured
-    (tests/test_hnsw.py, BENCH.md)."""
-    from garamond_jl_spark.operators.ann import HNSWCandidateIndex
-
-    dv = u.select(F.col("vec_id").alias("doc_id"), "i",
-                  F.col("v").alias("dv"))
-    idx = HNSWCandidateIndex.build(dv, M=M, ef_construction=ef_construction,
-                                   ef=ef if ef is not None else (1 << 30),
-                                   n_shards=n_shards, seed=seed,
-                                   normalize=True, persist=False)
-    qv_map = {}
-    for r in u.where(F.col("vec_id").isin(*query_ids)).collect():
-        qv_map.setdefault(int(r["vec_id"]), []).append(
-            (int(r["i"]), float(r["v"])))
-    cand = (idx.candidates_batch(qv_map)
-            .select(F.col("query_id").cast("long").alias("query_id"),
-                    F.col("doc_id").alias("vec_id"))
-            .where(F.col("vec_id") != F.col("query_id")))
-    return _cosine_rerank(u, cand, _vec_norms(u), query_ids, k)
 
 
 @q("ann_hnsw_topk", f"""
@@ -994,9 +805,9 @@ FROM cosd QUALIFY rnk <= {ANN_K}
 """)
 def ann_hnsw_topk(spark, sf_dir):
     """Parity wrapper: sharded-HNSW ANN over the embeddings table in
-    the exhaustive-ef mode (see :func:`ann_hnsw_search`) — the oracle
-    is the exact per-query cosine top-k, which the graph candidates
-    provably contain."""
+    the exhaustive-ef mode (see :func:`operators.ann.ann_hnsw_search`)
+    — the oracle is the exact per-query cosine top-k, which the graph
+    candidates provably contain."""
     return ann_hnsw_search(_emb_long(spark, sf_dir),
                            list(ANN_QUERY_IDS), ANN_K)
 
@@ -1009,6 +820,28 @@ BOE_DIM = 16
 BOE_SEED = 0
 BOE_QUERY = "spark join data"
 BOE_K = 10
+
+
+def _boe_inputs(spark: SparkSession, sf_dir: str
+                ) -> tuple[DataFrame, DataFrame]:
+    """documents → whitespace-token counts (doc_id, term, tf) and the
+    deterministic word vectors over their vocabulary: what every
+    BOE-family row embeds (the oracle's ``_BOE_WV_CTE``)."""
+    d = load_testdata(spark, sf_dir, "documents")
+    tok = (d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
+           .where(F.col("term") != ""))
+    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
+    return tf, _SEM.synthetic_word_vectors(tf.select("term"), dim=BOE_DIM,
+                                           seed=BOE_SEED)
+
+
+def _cosine_rows(dv: DataFrame, qv_rows: list[tuple[int, float]]
+                 ) -> DataFrame:
+    """Cosine top-``BOE_K`` of one query vector as parity rows
+    (doc_id, cos_e6, rnk)."""
+    hits = _SEM.cosine_topk(dv, {0: qv_rows}, k=BOE_K, tiebreak_round=6)
+    return hits.select("doc_id", e6(F.col("score")).alias("cos_e6"),
+                       F.col("rank").cast("long").alias("rnk"))
 
 
 def _boe_query_values() -> str:
@@ -1055,14 +888,8 @@ def semantic_boe_topk(spark, sf_dir):
     (reference boe.jl:1-27 + wordvectors.jl:101-187; synthetic vectors
     stand in for the pretrained files absent from the sandbox — see
     operators/semantic.py)."""
-    from garamond_jl_spark.operators.semantic import (boe_topk,
-                                                      synthetic_word_vectors)
-    d = load_testdata(spark, sf_dir, "documents")
-    tok = (d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-           .where(F.col("term") != ""))
-    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    wv = synthetic_word_vectors(tf.select("term"), dim=BOE_DIM, seed=BOE_SEED)
-    hits = boe_topk(spark, tf, wv, BOE_QUERY, k=BOE_K, tiebreak_round=6)
+    tf, wv = _boe_inputs(spark, sf_dir)
+    hits = _SEM.boe_topk(spark, tf, wv, BOE_QUERY, k=BOE_K, tiebreak_round=6)
     return hits.select("doc_id", e6(F.col("score")).alias("cos_e6"),
                        F.col("rank").cast("long").alias("rnk"))
 
@@ -1116,15 +943,8 @@ def semantic_boe_euclid_topk(spark, sf_dir):
     score = 1 − tanh(α·‖q − d‖₂), top-k on (round(score,6) desc,
     doc_id asc).  The oracle writes 1 − tanh(y) as 2/(e^{2y}+1)
     (DuckDB 1.0 has no tanh)."""
-    from garamond_jl_spark.operators.semantic import (
-        BOESearcher, synthetic_word_vectors)
-    d = load_testdata(spark, sf_dir, "documents")
-    tok = (d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-           .where(F.col("term") != ""))
-    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    wv = synthetic_word_vectors(tf.select("term"), dim=BOE_DIM,
-                                seed=BOE_SEED)
-    s = (BOESearcher.from_tokens(tf, wv, score_alpha=BOE_EUCLID_ALPHA)
+    tf, wv = _boe_inputs(spark, sf_dir)
+    s = (_SEM.BOESearcher.from_tokens(tf, wv, score_alpha=BOE_EUCLID_ALPHA)
          .with_metric("euclidean"))
     hits = s.sparse_hits(spark, BOE_QUERY)
     w = Window.orderBy(F.round(F.col("score"), 6).desc(),
@@ -1231,15 +1051,9 @@ def semantic_cpmean_topk(spark, sf_dir):
     """E4 CPMean cosine top-k (cpmean.jl:49-89) — concatenated
     min/geomean/mean/max power means, z-normalized per block, query
     embedded the same way."""
-    from garamond_jl_spark.operators.semantic import (cosine_topk,
-                                                      cpmean_doc_embeddings,
-                                                      synthetic_word_vectors,
+    from garamond_jl_spark.operators.semantic import (cpmean_doc_embeddings,
                                                       word_vector_component)
-    d = load_testdata(spark, sf_dir, "documents")
-    tok = (d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-           .where(F.col("term") != ""))
-    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    wv = synthetic_word_vectors(tf.select("term"), dim=BOE_DIM, seed=BOE_SEED)
+    tf, wv = _boe_inputs(spark, sf_dir)
     dv = cpmean_doc_embeddings(tf, wv, dim=BOE_DIM, znorm=True)
     # query vector via the identical NumPy-side power means over only
     # the query's own (in-corpus-vocab) terms
@@ -1265,9 +1079,7 @@ def semantic_cpmean_topk(spark, sf_dir):
         zb = (b - b.mean()) / (b.std(ddof=1) + 1e-16)
         qv_rows.extend([(bi * BOE_DIM + i + 1, float(zb[i]))
                         for i in range(BOE_DIM)])
-    hits = cosine_topk(dv, qv_rows, k=BOE_K, tiebreak_round=6)
-    return hits.select("doc_id", e6(F.col("score")).alias("cos_e6"),
-                       F.col("rank").cast("long").alias("rnk"))
+    return _cosine_rows(dv, qv_rows)
 
 
 
@@ -1294,20 +1106,13 @@ def lifecycle_grouped_dense_cpmean(spark, sf_dir):
     over every document (docs outside the searcher's hit set take the
     cos=0 fill), top-10.  Exercises the round-4 doc2vec_method=cpmean
     env searcher + the grouped-search path end-to-end against SQL."""
-    from garamond_jl_spark.operators.semantic import (
-        CPMeanSearcher, synthetic_word_vectors)
     from garamond_jl_spark.plans.lifecycle import InternalRequest
     from garamond_jl_spark.plans.lifecycle import SearchEnv as LSE
     from garamond_jl_spark.plans.lifecycle import search_grouped
     from garamond_jl_spark.plans.testdata_queries import _ft_index
     idx = _ft_index(spark, sf_dir)
-    d = load_testdata(spark, sf_dir, "documents")
-    tok = (d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-           .where(F.col("term") != ""))
-    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    wv = synthetic_word_vectors(tf.select("term"), dim=BOE_DIM,
-                                seed=BOE_SEED)
-    cpm = CPMeanSearcher.from_tokens(tf, wv, dim=BOE_DIM, score_alpha=0.4)
+    tf, wv = _boe_inputs(spark, sf_dir)
+    cpm = _SEM.CPMeanSearcher.from_tokens(tf, wv, dim=BOE_DIM, score_alpha=0.4)
     env = LSE(spark=spark, index=idx, score_weight=1.0,
               searchers=[(cpm, 0.8)], aggregation="mean",
               agg_ids=["classic", "dense"])
@@ -1358,16 +1163,10 @@ def semantic_borep_topk(spark, sf_dir):
     random projection of BOE sums (sum pooling commutes with R)."""
     from garamond_jl_spark.operators.semantic import (borep_doc_embeddings,
                                                       borep_projection,
-                                                      cosine_topk,
-                                                      synthetic_word_vectors,
                                                       word_vector_component)
     from collections import Counter
     import numpy as np
-    d = load_testdata(spark, sf_dir, "documents")
-    tok = (d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-           .where(F.col("term") != ""))
-    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    wv = synthetic_word_vectors(tf.select("term"), dim=BOE_DIM, seed=BOE_SEED)
+    tf, wv = _boe_inputs(spark, sf_dir)
     dv = borep_doc_embeddings(tf, wv, dim_in=BOE_DIM, dim_out=BOREP_OUT,
                               pooling="sum", seed=BOE_SEED)
     vocab = _vocab_hits(wv, BOE_QUERY.split())
@@ -1383,9 +1182,7 @@ def semantic_borep_topk(spark, sf_dir):
         R[o - 1, i - 1] = r
     qp = R @ qboe
     qv_rows = [(o + 1, float(qp[o])) for o in range(BOREP_OUT)]
-    hits = cosine_topk(dv, qv_rows, k=BOE_K, tiebreak_round=6)
-    return hits.select("doc_id", e6(F.col("score")).alias("cos_e6"),
-                       F.col("rank").cast("long").alias("rnk"))
+    return _cosine_rows(dv, qv_rows)
 
 
 @q("semantic_sif_topk")  # PC removal is an eigen-decomposition —
@@ -1394,17 +1191,11 @@ def semantic_sif_topk(spark, sf_dir):
     """E2 SIF cosine top-k (sif.jl:53-81): frequency-weighted BOE with
     corpus-level principal-component removal; query embedded without PC
     removal (its single vector would vanish under its own projector)."""
-    from garamond_jl_spark.operators.semantic import (cosine_topk,
-                                                      sif_doc_embeddings,
-                                                      synthetic_word_vectors,
+    from garamond_jl_spark.operators.semantic import (sif_doc_embeddings,
                                                       word_vector_component)
     from collections import Counter
     import numpy as np
-    d = load_testdata(spark, sf_dir, "documents")
-    tok = (d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-           .where(F.col("term") != ""))
-    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    wv = synthetic_word_vectors(tf.select("term"), dim=BOE_DIM, seed=BOE_SEED)
+    tf, wv = _boe_inputs(spark, sf_dir)
     lex = tf.groupBy("term").agg(F.sum("tf").alias("count"))
     dv = sif_doc_embeddings(tf, wv, lex)
     # query embedding needs counts for the QUERY's ~4 terms plus the
@@ -1429,9 +1220,7 @@ def semantic_sif_topk(spark, sf_dir):
         q_arr += c * SIF_ALPHA / (SIF_ALPHA + p) * v
     q_arr /= w_total
     qv_rows = [(i + 1, float(q_arr[i])) for i in range(BOE_DIM)]
-    hits = cosine_topk(dv, qv_rows, k=BOE_K, tiebreak_round=6)
-    return hits.select("doc_id", e6(F.col("score")).alias("cos_e6"),
-                       F.col("rank").cast("long").alias("rnk"))
+    return _cosine_rows(dv, qv_rows)
 
 
 def _disc_query_values() -> str:
@@ -1498,8 +1287,7 @@ FROM cosd QUALIFY rnk <= {BOE_K}
 def semantic_disc_topk(spark, sf_dir):
     """E5 DisC cosine top-k (disc.jl:49-90): concatenated k-gram
     product-sum blocks (k=1,2) over ordered tokens."""
-    from garamond_jl_spark.operators.semantic import (cosine_topk,
-                                                      disc_doc_embeddings,
+    from garamond_jl_spark.operators.semantic import (disc_doc_embeddings,
                                                       synthetic_word_vectors,
                                                       word_vector_component)
     import numpy as np
@@ -1522,9 +1310,7 @@ def semantic_disc_topk(spark, sf_dir):
         q2 = np.sum([vecs[j] * vecs[j + 1]
                      for j in range(len(vecs) - 1)], axis=0) / 2.0
         qv_rows += [(BOE_DIM + i + 1, float(q2[i])) for i in range(BOE_DIM)]
-    hits = cosine_topk(dv, qv_rows, k=BOE_K, tiebreak_round=6)
-    return hits.select("doc_id", e6(F.col("score")).alias("cos_e6"),
-                       F.col("rank").cast("long").alias("rnk"))
+    return _cosine_rows(dv, qv_rows)
 
 
 RP_OUT = 64                       # ±1/√64 = ±0.125, exact in IEEE doubles
@@ -1533,6 +1319,29 @@ _RP_CASE = (f"CASE WHEN substring(md5('{{seed}}:RP:' || {{term}} || ':' || "
             f"cast(dims.o AS VARCHAR)), 1, 1) IN "
             f"('8','9','a','b','c','d','e','f') "
             f"THEN {_RP_INV} ELSE -{_RP_INV} END")
+
+
+def _tfidf_query(spark: SparkSession, sf_dir: str
+                 ) -> tuple[InvertedIndex, dict[str, float]]:
+    """The whitespace-token tfidf index over documents, and BOE_QUERY's
+    dtv pseudo-document weights {term: qw} over its in-vocab terms
+    (in-vocab qlen, the pinned convention; empty when none is)."""
+    import math
+    from collections import Counter
+
+    docs = load_testdata(spark, sf_dir, "documents")
+    idx = build_index(spark, docs, EngineConfig(weighting="tfidf"),
+                      id_col="doc_id", text_col="text",
+                      tokenizer=lambda s: [t for t in (s or "").split(" ")
+                                           if t])
+    qc = Counter(BOE_QUERY.split())
+    dfs = {r["term"]: r["df"] for r in
+           idx.terms.where(F.col("term").isin(*qc)).select("term", "df")
+           .collect()}
+    n_docs = float(idx.meta["n_docs"])
+    ql = float(sum(c for t, c in qc.items() if t in dfs))
+    return idx, {t: math.sqrt(qc[t] / ql)
+                 * (math.log(n_docs / (dfs[t] + 1.0)) + 1.0) for t in dfs}
 
 
 @q("semantic_rp_topk", f"""
@@ -1583,37 +1392,17 @@ def semantic_rp_topk(spark, sf_dir):
     through the same dtv pseudo-document path (in-vocab qlen, pinned
     convention) and projects through the same R — computed driver-side
     (|q|·m scalars)."""
-    import math
-
-    from garamond_jl_spark.config import EngineConfig
-    from garamond_jl_spark.operators.build import build_index
-    from garamond_jl_spark.operators.semantic import (cosine_topk,
-                                                      rp_doc_embeddings,
+    from garamond_jl_spark.operators.semantic import (rp_doc_embeddings,
                                                       rp_sign)
-    from collections import Counter
-    docs = load_testdata(spark, sf_dir, "documents")
-    cfg = EngineConfig(weighting="tfidf")
-    idx = build_index(spark, docs, cfg, id_col="doc_id", text_col="text",
-                      tokenizer=lambda s: [t for t in (s or "").split(" ")
-                                           if t])
-    dv = rp_doc_embeddings(idx.postings, dim_out=RP_OUT, seed=BOE_SEED)
-    qc = Counter(BOE_QUERY.split())
-    dfs = {r["term"]: r["df"] for r in
-           idx.terms.where(F.col("term").isin(*qc)).select("term", "df")
-           .collect()}
-    if not dfs:
+    idx, qw = _tfidf_query(spark, sf_dir)
+    if not qw:
         return local_frame(spark, [], "doc_id LONG, cos_e6 LONG, rnk LONG")
-    n_docs = float(idx.meta["n_docs"])
-    ql = float(sum(c for t, c in qc.items() if t in dfs))
+    dv = rp_doc_embeddings(idx.postings, dim_out=RP_OUT, seed=BOE_SEED)
     inv = 1.0 / RP_OUT ** 0.5
-    qw = {t: math.sqrt(qc[t] / ql) * (math.log(n_docs / (dfs[t] + 1.0)) + 1.0)
-          for t in dfs}
     qv_rows = [(o, sum(qw[t] * (rp_sign(t, o, BOE_SEED) * inv) for t in
                        sorted(qw)))
                for o in range(1, RP_OUT + 1)]
-    hits = cosine_topk(dv, qv_rows, k=BOE_K, tiebreak_round=6)
-    return hits.select("doc_id", e6(F.col("score")).alias("cos_e6"),
-                       F.col("rank").cast("long").alias("rnk"))
+    return _cosine_rows(dv, qv_rows)
 
 
 @q("semantic_lsa_topk")  # truncated SVD — rows-only driver check;
@@ -1623,41 +1412,20 @@ def semantic_lsa_topk(spark, sf_dir):
     ARPACK), docs and query folded in through Vᵀ, cosine top-k
     (embedder/interface.jl:86; latent cosines are sign-flip invariant,
     see operators/semantic.lsa_projection)."""
-    import math
-
-    from collections import Counter
-
-    from garamond_jl_spark.config import EngineConfig
-    from garamond_jl_spark.operators.build import build_index
     from garamond_jl_spark.operators.semantic import (LSA_DIM_OUT,
-                                                      cosine_topk,
                                                       lsa_projection,
                                                       project_dtv)
-    docs = load_testdata(spark, sf_dir, "documents")
-    cfg = EngineConfig(weighting="tfidf")
-    idx = build_index(spark, docs, cfg, id_col="doc_id", text_col="text",
-                      tokenizer=lambda s: [t for t in (s or "").split(" ")
-                                           if t])
+    idx, qw = _tfidf_query(spark, sf_dir)
+    if not qw:
+        return local_frame(spark, [], "doc_id LONG, cos_e6 LONG, rnk LONG")
     v_table, _ = lsa_projection(idx.postings, dim_out=LSA_DIM_OUT)
     dv = project_dtv(idx.postings, v_table)
-    qc = Counter(BOE_QUERY.split())
-    dfs = {r["term"]: r["df"] for r in
-           idx.terms.where(F.col("term").isin(*qc)).select("term", "df")
-           .collect()}
-    if not dfs:
-        return local_frame(spark, [], "doc_id LONG, cos_e6 LONG, rnk LONG")
-    n_docs = float(idx.meta["n_docs"])
-    ql = float(sum(c for t, c in qc.items() if t in dfs))
-    qw = {t: math.sqrt(qc[t] / ql) * (math.log(n_docs / (dfs[t] + 1.0)) + 1.0)
-          for t in dfs}
     vq = (v_table.where(F.col("term").isin(*qw))
           .select("term", "i", "v").collect())
     acc: dict[int, float] = {}
     for r in vq:
         acc[r["i"]] = acc.get(r["i"], 0.0) + qw[r["term"]] * r["v"]
-    hits = cosine_topk(dv, sorted(acc.items()), k=BOE_K, tiebreak_round=6)
-    return hits.select("doc_id", e6(F.col("score")).alias("cos_e6"),
-                       F.col("rank").cast("long").alias("rnk"))
+    return _cosine_rows(dv, sorted(acc.items()))
 
 
 # --------------------------------------------------------------------------
@@ -1720,7 +1488,7 @@ def embedding_cosine_pairs(u: DataFrame, threshold: float = DEDUP_COS_T,
     all-pairs.  Injected-near-dup recall at τ=0.95 is asserted ≥0.99 in
     test_pipeline_ops."""
     # both sides of the bucket equi-join read the same tiny bucket
-    # table — checkpoint it once (r6, same reuse fix as ann_lsh_search)
+    # table — checkpoint it once (r6)
     bkt = lsh_buckets(u.toDF("doc_id", "i", "dv"), n_planes, seed=None) \
         .toDF("vec_id", "bucket").localCheckpoint(eager=True)
     masks = F.explode(F.array(*[
@@ -1737,9 +1505,9 @@ def embedding_cosine_pairs(u: DataFrame, threshold: float = DEDUP_COS_T,
     dots = (cand.join(x, "vec_a").join(y, ["vec_b", "i"])
             .groupBy("vec_a", "vec_b")
             .agg(F.sum(F.col("va") * F.col("vb")).alias("dot")))
-    nrm = _vec_norms(u)
-    na = nrm.select(F.col("vec_id").alias("vec_a"), F.col("nv").alias("na"))
-    nb = nrm.select(F.col("vec_id").alias("vec_b"), F.col("nv").alias("nb"))
+    nrm = _SEM.doc_norms(u.toDF("doc_id", "i", "dv"))
+    na = nrm.select(F.col("doc_id").alias("vec_a"), F.col("nd").alias("na"))
+    nb = nrm.select(F.col("doc_id").alias("vec_b"), F.col("nd").alias("nb"))
     return (dots.join(na, "vec_a").join(nb, "vec_b")
             .select("vec_a", "vec_b",
                     (F.col("dot") / (F.col("na") * F.col("nb"))).alias("c"))

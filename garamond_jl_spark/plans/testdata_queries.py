@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from garamond_jl_spark.config import EngineConfig
+from garamond_jl_spark.functions.scoring import e6
 from garamond_jl_spark.operators.build import build_index
 from garamond_jl_spark.operators.query import search
 from garamond_jl_spark.session import local_frame
@@ -46,10 +47,6 @@ def q(name: str, sql: str | None = None):
             ORACLES[name] = sql
         return fn
     return reg
-
-
-def e6(col: Column) -> Column:
-    return F.round(col * F.lit(1e6), 0).cast("long")
 
 
 def cents(col: Column) -> Column:

@@ -16,7 +16,7 @@ from garamond_jl_spark.operators.ann import (IVFADCIndex,
                                              LSHCandidateIndex,
                                              _assign_join,
                                              assign_lists_arrow,
-                                             train_kmeans)
+                                             lsh_buckets, train_kmeans)
 
 
 def _clustered(seed=7, n_clusters=8, per=30, dim=16, spread=0.25):
@@ -211,7 +211,7 @@ def test_ivf_search_with_arrow_assignment(spark):
     """ann_ivf_search accepts a precomputed (arrow-path) assignment:
     the parity plan's K-fanout assignment stage is skipped, results
     keep high recall on clustered data (exact rerank either way)."""
-    from garamond_jl_spark.plans.pipeline_queries import ann_ivf_search
+    from garamond_jl_spark.operators.ann import ann_ivf_search
     centers, mat = _clustered()
     u = spark.createDataFrame(
         [(int(d), int(i) + 1, float(v))
@@ -296,7 +296,7 @@ def test_ann_index_save_load_roundtrip(spark, tmp_path):
     """The S4 env-cache analog for ANN structures: LSH / IVF / IVFADC
     persist (bucket/list-partitioned parquet + meta) and reload to
     identical candidate sets and search results."""
-    from garamond_jl_spark.plans.pipeline_queries import ann_ivf_search  # noqa: F401
+    from garamond_jl_spark.operators.ann import ann_ivf_search  # noqa: F401
     centers, mat = _clustered(per=12)
     dv = _long(spark, mat)
     qv = [(i + 1, float(v)) for i, v in enumerate(mat[4])]
@@ -678,6 +678,24 @@ def test_lsh_bucket_exact_past_double_precision(spark):
         assert got[d] == idx.query_bucket(qv)
     with pytest.raises(ValueError, match="n_planes"):
         LSHCandidateIndex.build(dv, n_planes=63, persist=False)
+
+
+def test_lsh_parity_key_query_bucket_matches_table(spark):
+    """Under the parity key (``seed=None``, md5('{p}:{i}')) the
+    driver-side query bucket equals ``lsh_buckets``' Spark-side bucket
+    for every vector — the agreement ann_lsh_search's probe rests on
+    (its query buckets are driver math, its doc buckets a plan)."""
+    _, mat = _clustered(per=10)
+    dv = _long(spark, mat)
+    for n_planes in (6, 8):
+        idx = LSHCandidateIndex(lsh_buckets(dv, n_planes, seed=None),
+                                n_planes, radius=0, seed=None)
+        got = {r["doc_id"]: r["bucket"] for r in idx.buckets.collect()}
+        want = {d: idx.query_bucket([(i + 1, float(v))
+                                     for i, v in enumerate(vec)])
+                for d, vec in enumerate(mat)}
+        assert got == want
+        assert len(set(got.values())) > 1
 
 
 def test_cent_matrix_explicit_dim_beats_inference():

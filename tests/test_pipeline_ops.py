@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from garamond_jl_spark.plans.pipeline_queries import ann_lsh_search
+from garamond_jl_spark.operators.ann import ann_lsh_search
 
 
 def _long_form(spark, mat):
@@ -46,7 +46,7 @@ def test_ivf_clustered_recall(spark):
     """IVF ANN (trained-quantizer path): with the true cluster centers
     as the coarse quantizer and 2 probes, recall on clustered
     embeddings stays high while scanning ~2/20 of the lists."""
-    from garamond_jl_spark.plans.pipeline_queries import ann_ivf_search
+    from garamond_jl_spark.operators.ann import ann_ivf_search
     rng = np.random.default_rng(7)
     n_clusters, per, dim = 20, 25, 16
     centers = rng.normal(size=(n_clusters, dim)) * 3.0
@@ -117,6 +117,26 @@ def test_ann_search_rank_matches_exact_on_candidates(spark):
         expect = float(norm[3] @ norm[r["vec_id"]])
         assert abs(r["cos_e6"] / 1e6 - expect) < 2e-6
     assert [r["rnk"] for r in got] == list(range(1, len(got) + 1))
+
+
+def test_ann_lsh_search_needs_no_checkpoint(spark):
+    """The LSH probe is driver math on the collected query rows, so the
+    bucket table has one consumer: after collect() the analyzed plan
+    holds no LogicalRDD leaf (what a localCheckpoint leaves behind)
+    and the call persisted no RDD."""
+    from garamond_jl_spark.session import local_frame
+    rng = np.random.default_rng(5)
+    rows = [(int(vid), int(i) + 1, float(v))
+            for vid, vec in enumerate(rng.normal(size=(60, 8)))
+            for i, v in enumerate(vec)]
+    u = local_frame(spark, rows, "vec_id LONG, i INT, v DOUBLE")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    out = ann_lsh_search(u, [0, 1], 5)
+    assert len(out.collect()) == 10
+    assert "LogicalRDD" not in out._jdf.queryExecution().analyzed() \
+        .toString()
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
 
 
 def test_lang_id_accuracy_multilingual(spark):

@@ -147,7 +147,8 @@ def test_cosine_topk_ranks(spark, corpus):
     dv = boe_doc_embeddings(tf, wv)
     q = vecs["red"]
     qv_rows = [(i + 1, float(q[i])) for i in range(DIM)]
-    got = sorted(cosine_topk(dv, qv_rows, k=3, tiebreak_round=9).collect(),
+    got = sorted(cosine_topk(dv, {0: qv_rows}, k=3,
+                             tiebreak_round=9).collect(),
                  key=lambda r: r["rank"])
     mats = {d: np.sum([vecs[t] for t in text.split()], axis=0)
             for d, (_, text) in enumerate(DOCS)}
@@ -156,6 +157,37 @@ def test_cosine_topk_ranks(spark, corpus):
          for d, m in mats.items()),
         key=lambda x: (-round(x[1], 9), x[0]))[:3]
     assert [r["doc_id"] for r in got] == [d for d, _ in scored]
+
+
+def test_cosine_topk_batch_matches_batches_of_one(spark, corpus):
+    """A two-query cosine_topk batch (per-query window) ranks exactly
+    as two batches of one (TakeOrderedAndProject)."""
+    _, _, tf, wv, vecs = corpus
+    from garamond_jl_spark.operators.semantic import boe_doc_embeddings
+    dv = boe_doc_embeddings(tf, wv)
+    qs = {q: [(i + 1, float(vecs[t][i])) for i in range(DIM)]
+          for q, t in ((0, "red"), (1, "yellow"))}
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def rows(df):
+        return sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
+                      for r in df.collect())
+
+    batch = cosine_topk(dv, qs, k=3, tiebreak_round=9)
+    assert "Window" in plan(batch)
+    assert "TakeOrderedAndProject" not in plan(batch)
+    want = []
+    for q, qv in qs.items():
+        one = cosine_topk(dv, {q: qv}, k=3, tiebreak_round=9)
+        assert "TakeOrderedAndProject" in plan(one)
+        want += rows(one)
+    got = rows(batch)
+    assert len(got) == 6
+    assert [r[:3] for r in got] == [r[:3] for r in sorted(want)]
+    for a, b in zip(got, sorted(want)):
+        assert a[3] == pytest.approx(b[3], abs=1e-12)
 
 
 def test_rp_matches_numpy(spark, corpus):
@@ -247,7 +279,7 @@ def test_lsa_rank_matches_numpy(spark, corpus):
     acc = {}
     for r in vq:
         acc[r["i"]] = acc.get(r["i"], 0.0) + qw[r["term"]] * r["v"]
-    got = sorted(cosine_topk(dv, sorted(acc.items()), k=3,
+    got = sorted(cosine_topk(dv, {0: sorted(acc.items())}, k=3,
                              tiebreak_round=6).collect(),
                  key=lambda r: r["rank"])
     assert [r["doc_id"] for r in got] == [d for d, _ in expect]
@@ -463,7 +495,7 @@ def test_query_as_doc_sparse_hits_rank(spark, corpus):
         qv_rows = [(r["i"], r["qv"])
                    for r in s.embed_query(spark, QUERY).collect()]
         want = [r["doc_id"] for r in
-                cosine_topk(s.doc_embeddings, qv_rows, k=5,
+                cosine_topk(s.doc_embeddings, {0: qv_rows}, k=5,
                             tiebreak_round=9).collect()]
         hits = s.sparse_hits(spark, QUERY)
         got = [r["doc_id"] for r in
