@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from garamond_jl_spark.functions.scoring import score_transform_expr
 from garamond_jl_spark.operators.build import InvertedIndex
 from garamond_jl_spark.operators.query import embed_queries, topk_plan
+from garamond_jl_spark.session import local_frame
 
 DEFAULT_P = 1024
 CERT_MARGIN = 1e-9   # float-summation safety on the B_q bound
@@ -98,7 +99,9 @@ def impact_topk(spark: SparkSession, index: InvertedIndex,
                 stats: dict | None = None) -> DataFrame:
     """Top-k identical to ``topk_plan`` (certificate-guaranteed), built
     from champion candidates when possible, exact fallback otherwise.
-    Returns (query_id, doc_id, score, rank)."""
+    Returns (query_id, doc_id, score, rank): a ``LocalRelation`` of at
+    most |queries|·k rows, built by one action, that holds no executor
+    storage (an empty batch returns the exact plan, lazily)."""
     qterms = embed_queries(spark, index, queries)
     qt_rows = qterms.collect()          # driver-built rows (tiny)
     if not qt_rows:
@@ -249,7 +252,6 @@ def _certify_and_assemble(index: InvertedIndex, qterms: DataFrame,
     out = parts[0]
     for pt in parts[1:]:
         out = out.unionByName(pt)
-    # materialize the ≤ |queries|·k result so the caller's finally
-    # blocks can release the cached frames (unpersist happens in
-    # impact_topk even on exceptions)
-    return out.localCheckpoint(eager=True)
+    # one action over the ≤ |queries|·k result, before the callers'
+    # finally blocks release the cached frames it reads
+    return local_frame(out.sparkSession, out.collect(), out.schema)

@@ -242,20 +242,15 @@ def dedup_minhash_lsh(spark, sf_dir):
     """MinHash+LSH near-dup: shingle → per-band min-md5 signature →
     band-bucket join for candidates → exact Jaccard verification.
     The scale path: candidate generation is |bands|·|docs| rows, the
-    quadratic verify only touches bucket-colliding pairs."""
-    shd = _shingles(spark, sf_dir).persist()
+    quadratic verify only touches bucket-colliding pairs.  The plan is
+    returned lazily: the shingle exchange is evaluated once per action
+    and reused by the signature, verify and size consumers."""
     # legacy md5/r=1 knobs passed explicitly: this wrapper exists for
     # DuckDB hash parity only (see minhash_lsh_pairs docstring)
-    jacc = minhash_lsh_pairs(shd, int_hash=False, n_rows=1,
-                             bucket_cap=None)
-    out = (jacc.where(F.col("jacc") >= JACCARD_T)
-           .select("doc_a", "doc_b", e6(F.col("jacc")).alias("jacc_e6")))
-    # materialize the (small) pair set and release the shingle cache —
-    # each gate/bench invocation otherwise pinned a full shingle table
-    # in executor storage for the session's lifetime
-    out = out.localCheckpoint(eager=True)
-    shd.unpersist()
-    return out
+    jacc = minhash_lsh_pairs(_shingles(spark, sf_dir), int_hash=False,
+                             n_rows=1, bucket_cap=None)
+    return (jacc.where(F.col("jacc") >= JACCARD_T)
+            .select("doc_a", "doc_b", e6(F.col("jacc")).alias("jacc_e6")))
 
 
 def minhash_lsh_pairs(shd: DataFrame, n_bands: int = N_BANDS,
@@ -519,16 +514,12 @@ def dedup_simhash_pairs(spark, sf_dir):
     exact popcount verify.  No all-pairs join anywhere — the quadratic
     term is bounded per 16-bit band bucket.
 
-    Plan note (r6, guide §2.4): ``sh`` feeds FOUR consumers (both sides
-    of the band self-join + both verify joins); lazily that evaluated
-    the whole tokenize→md5→64-vote lineage four times in one plan (4
-    identical scan+agg subtrees, OPTIMIZATION_r06.md
-    "dedup_simhash64").  ``localCheckpoint`` materializes the
-    3-column/n_docs-row signature table once; every consumer reads the
-    tiny checkpoint.  At
-    100 TB the signature table is ~24 B/doc — the cost model only
-    improves with corpus size."""
-    sh = _simhash64_df(spark, sf_dir).localCheckpoint(eager=True)
+    Plan note: the signature is read once.  Each band row carries its
+    document's ``sh_hi``/``sh_lo``, so the band self-join computes the
+    Hamming distance on the joined row and no verify join reads the
+    signature again.  The ``repartition`` on the join key is the one
+    exchange both sides read (the second side is a ``ReusedExchange``),
+    so the ``mapInArrow`` SimHash pass is evaluated once per action."""
     band_structs = [
         F.struct(F.lit(0).alias("band"),
                  F.expr("sh_lo & 65535").alias("chunk")),
@@ -539,24 +530,22 @@ def dedup_simhash_pairs(spark, sf_dir):
         F.struct(F.lit(3).alias("band"),
                  F.expr("shiftright(sh_hi, 16) & 65535").alias("chunk")),
     ]
-    bands = (sh.select("doc_id", F.explode(F.array(*band_structs)).alias("bc"))
-             .select("doc_id", "bc.band", "bc.chunk"))
+    bands = (_simhash64_df(spark, sf_dir)
+             .select("doc_id", "sh_hi", "sh_lo",
+                     F.explode(F.array(*band_structs)).alias("bc"))
+             .select("doc_id", "sh_hi", "sh_lo", "bc.band", "bc.chunk")
+             .repartition("band", "chunk"))
     a, b = bands.alias("a"), bands.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
+    ham = F.expr("bit_count(a.sh_lo ^ b.sh_lo)"
+                 " + bit_count(a.sh_hi ^ b.sh_hi)")
+    return (a.join(b, (F.col("a.band") == F.col("b.band"))
                    & (F.col("a.chunk") == F.col("b.chunk"))
                    & (F.col("a.doc_id") < F.col("b.doc_id")))
             .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
-    x = sh.select(F.col("doc_id").alias("doc_a"),
-                  F.col("sh_hi").alias("hi_a"), F.col("sh_lo").alias("lo_a"))
-    y = sh.select(F.col("doc_id").alias("doc_b"),
-                  F.col("sh_hi").alias("hi_b"), F.col("sh_lo").alias("lo_b"))
-    ham = F.expr("bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b)")
-    return (cand.join(x, "doc_a").join(y, "doc_b")
-            .withColumn("ham", ham.cast("long"))
+                    F.col("b.doc_id").alias("doc_b"),
+                    ham.cast("long").alias("ham"))
             .where(F.col("ham") <= SIMHASH_HAM_T)
-            .select("doc_a", "doc_b", "ham"))
+            .distinct())
 
 
 # --------------------------------------------------------------------------
@@ -1487,10 +1476,10 @@ def embedding_cosine_pairs(u: DataFrame, threshold: float = DEDUP_COS_T,
     (radius 1 ⇒ n_planes+1 masks), still an equi-join — never
     all-pairs.  Injected-near-dup recall at τ=0.95 is asserted ≥0.99 in
     test_pipeline_ops."""
-    # both sides of the bucket equi-join read the same tiny bucket
-    # table — checkpoint it once (r6)
+    # both sides of the bucket equi-join read the lsh_buckets
+    # aggregation's exchange, evaluated once per action and reused
     bkt = lsh_buckets(u.toDF("doc_id", "i", "dv"), n_planes, seed=None) \
-        .toDF("vec_id", "bucket").localCheckpoint(eager=True)
+        .toDF("vec_id", "bucket")
     masks = F.explode(F.array(*[
         F.lit(m) for m in probe_masks(n_planes, probe_radius)])).alias("m")
     a = (bkt.select(F.col("vec_id").alias("vec_a"), "bucket", masks)

@@ -22,3 +22,9 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def tiny_sf_dir():
+    """The sf0.001 fixture, beside the configured scale factor."""
+    return os.path.join(os.path.dirname(SF_DIR), "sf0.001")

@@ -4,7 +4,8 @@ The helper must return exactly what ``spark.createDataFrame(rows,
 schema)`` returns, while its plan leaf is a ``LocalRelation`` whose
 collect runs no Spark job (``createDataFrame(<list>)`` plans a
 ``LogicalRDD`` that re-runs Python-worker tasks in every job reading
-it).  The AST guard keeps it the only way driver lists become frames.
+it).  An AST guard keeps it the only way driver lists become frames;
+a second keeps ``localCheckpoint``/``checkpoint`` out of the package.
 """
 
 import ast
@@ -76,28 +77,40 @@ def test_local_frame_rejects_lossy_rows(spark, rows, schema):
         local_frame(spark, rows, schema)
 
 
-def _create_dataframe_sites(node, rel, fn="<module>"):
-    """(module, enclosing function, line) of every ``*.createDataFrame(``
-    call under ``node``."""
+def _call_sites(node, rel, attrs, fn="<module>"):
+    """(module, enclosing function, line) of every ``*.<attr>(`` call
+    under ``node`` with ``attr`` in ``attrs``."""
     for child in ast.iter_child_nodes(node):
         if isinstance(child, ast.Call) and \
                 isinstance(child.func, ast.Attribute) and \
-                child.func.attr == "createDataFrame":
+                child.func.attr in attrs:
             yield rel, fn, child.lineno
         inner = child.name if isinstance(
             child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
-        yield from _create_dataframe_sites(child, rel, inner)
+        yield from _call_sites(child, rel, attrs, inner)
+
+
+def _package_call_sites(*attrs):
+    return [site for path in sorted(PKG.rglob("*.py"))
+            for site in _call_sites(ast.parse(path.read_text()),
+                                    path.relative_to(PKG).as_posix(),
+                                    attrs)]
 
 
 def test_driver_rows_only_enter_plans_through_local_frame():
     """Every createDataFrame call in the package is either the helper
     itself or a named non-list input; a new ``createDataFrame(<list>)``
     would bring back a Python-worker stage per job reading it."""
-    sites = [site for path in sorted(PKG.rglob("*.py"))
-             for site in _create_dataframe_sites(
-                 ast.parse(path.read_text()),
-                 path.relative_to(PKG).as_posix())]
+    sites = _package_call_sites("createDataFrame")
     stray = [s for s in sites if s[:2] not in CREATE_DATAFRAME_ALLOWED]
     assert stray == [], f"route these through session.local_frame: {stray}"
     # the allow-list names live sites only
     assert {s[:2] for s in sites} == CREATE_DATAFRAME_ALLOWED
+
+
+def test_operators_never_checkpoint():
+    """An operator returns a lazy plan or a ``local_frame``: a
+    ``localCheckpoint``/``checkpoint`` pins executor blocks its caller
+    never releases and hides the operator's plan behind a scan."""
+    sites = _package_call_sites("localCheckpoint", "checkpoint")
+    assert sites == [], f"return the plan or a local_frame: {sites}"

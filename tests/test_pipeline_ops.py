@@ -119,24 +119,64 @@ def test_ann_search_rank_matches_exact_on_candidates(spark):
     assert [r["rnk"] for r in got] == list(range(1, len(got) + 1))
 
 
-def test_ann_lsh_search_needs_no_checkpoint(spark):
-    """The LSH probe is driver math on the collected query rows, so the
-    bucket table has one consumer: after collect() the analyzed plan
-    holds no LogicalRDD leaf (what a localCheckpoint leaves behind)
-    and the call persisted no RDD."""
+def _needs_no_checkpoint_call(spark, sf, op):
+    """A zero-argument call of ``op``; its inputs (an index build
+    persists tables) are made before the call is measured."""
+    from garamond_jl_spark.config import EngineConfig
+    from garamond_jl_spark.corpus import corpus_df
+    from garamond_jl_spark.operators.build import build_index
+    from garamond_jl_spark.operators.query import search
+    from garamond_jl_spark.plans import pipeline_queries as P
     from garamond_jl_spark.session import local_frame
     rng = np.random.default_rng(5)
     rows = [(int(vid), int(i) + 1, float(v))
             for vid, vec in enumerate(rng.normal(size=(60, 8)))
             for i, v in enumerate(vec)]
     u = local_frame(spark, rows, "vec_id LONG, i INT, v DOUBLE")
+    if op == "ann_lsh_search":
+        return lambda: ann_lsh_search(u, [0, 1], 5)
+    if op == "embedding_cosine_pairs":
+        return lambda: P.embedding_cosine_pairs(u)
+    if op == "search_impact":
+        idx = build_index(spark, corpus_df(spark, 300, seed=42,
+                                           partitions=4),
+                          EngineConfig(), id_col=None)
+        idx.postings.count()        # fills the build's lazy caches
+        return lambda: search(spark, idx, ["main run", "free_4 decode_7"],
+                              k=5, plan="impact")
+    return lambda: getattr(P, op)(spark, sf)
+
+
+# operator → result rows on its inputs in _needs_no_checkpoint_call
+NO_CHECKPOINT_ROWS = {"ann_lsh_search": 10, "dedup_minhash_lsh": 28,
+                      "dedup_simhash_pairs": 24,
+                      "embedding_cosine_pairs": 80, "search_impact": 10}
+
+
+@pytest.mark.parametrize("op", list(NO_CHECKPOINT_ROWS))
+def test_operator_needs_no_checkpoint(spark, tiny_sf_dir, op):
+    """An operator returns a lazy plan or a ``local_frame``: after
+    collect() its analyzed plan holds no LogicalRDD leaf (what a
+    localCheckpoint leaves behind) and the call persisted no RDD."""
+    call = _needs_no_checkpoint_call(spark, tiny_sf_dir, op)
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet().toArray())
-    out = ann_lsh_search(u, [0, 1], 5)
-    assert len(out.collect()) == 10
+    out = call()
+    assert len(out.collect()) == NO_CHECKPOINT_ROWS[op]
     assert "LogicalRDD" not in out._jdf.queryExecution().analyzed() \
         .toString()
     assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
+
+
+def test_simhash_pairs_evaluates_signature_once(spark, tiny_sf_dir):
+    """Both sides of the band self-join read one exchange, so the
+    executed plan runs the mapInArrow SimHash pass once."""
+    from garamond_jl_spark.plans.pipeline_queries import dedup_simhash_pairs
+    out = dedup_simhash_pairs(spark, tiny_sf_dir)
+    out.collect()
+    final = out._jdf.queryExecution().executedPlan().toString() \
+        .split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow") == 1, final
 
 
 def test_lang_id_accuracy_multilingual(spark):

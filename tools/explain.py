@@ -3,7 +3,7 @@
 Builds the leaf's DataFrame from the ``queries()`` registry (the same
 programs the oracle gate runs) and prints ``explain("formatted")`` —
 building a leaf may run the jobs it needs to plan (collects of query
-vectors, checkpoints), but the leaf itself is not executed.  Diff two
+vectors), but the leaf itself is not executed.  Diff two
 trees' output, with expression ids stripped (``sed -E 's/#[0-9]+//g'``),
 to check that a refactor kept a plan operator-identical.
 
