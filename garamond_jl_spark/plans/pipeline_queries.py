@@ -243,8 +243,9 @@ def dedup_minhash_lsh(spark, sf_dir):
     band-bucket join for candidates → exact Jaccard verification.
     The scale path: candidate generation is |bands|·|docs| rows, the
     quadratic verify only touches bucket-colliding pairs.  The plan is
-    returned lazily: the shingle exchange is evaluated once per action
-    and reused by the signature, verify and size consumers."""
+    returned lazily: the shingle table is evaluated once per action
+    (one Window) into an exchange that the signature, verify and size
+    consumers all read (see :func:`minhash_lsh_pairs`)."""
     # legacy md5/r=1 knobs passed explicitly: this wrapper exists for
     # DuckDB hash parity only (see minhash_lsh_pairs docstring)
     jacc = minhash_lsh_pairs(_shingles(spark, sf_dir), int_hash=False,
@@ -281,6 +282,13 @@ def minhash_lsh_pairs(shd: DataFrame, n_bands: int = N_BANDS,
     legacy md5/r=1/no-cap values EXPLICITLY because its oracle shares
     that arithmetic — no non-parity caller should inherit the shape the
     bench proved dies at 1M docs."""
+    # five consumers read shd: the signature, the two verify sides and
+    # the two set sizes.  The shingle Window's doc_id partitioning
+    # already satisfies the distinct, so no exchange sits above the
+    # shingles and each consumer's stage re-ran Window + distinct.  One
+    # exchange here is the subtree they all read (a ReusedExchange).
+    # Both columns: a bare doc_id is planned away as already satisfied
+    shd = shd.repartition("doc_id", "s")
     bands = F.explode(F.array(*[F.lit(i) for i in range(n_bands)])).alias("band")
     base = shd.select("doc_id", "s", bands)
     mh_cols = []
@@ -610,7 +618,11 @@ LSH_BUCKET_CTE = _lsh_bucket_cte(N_PLANES)
 def _emb_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings → long form (vec_id, i, v) with 1-based dims, matching
     DuckDB's generate_subscripts."""
-    e = load_testdata(spark, sf_dir, "embeddings")
+    return _long_form(load_testdata(spark, sf_dir, "embeddings"))
+
+
+def _long_form(e: DataFrame) -> DataFrame:
+    """(vec_id, embedding) → (vec_id, i, v), 1-based ``i``."""
     return (e.select("vec_id",
                      F.posexplode(F.col("embedding").cast("array<double>"))
                      .alias("i", "v"))
@@ -706,15 +718,15 @@ def ann_lsh_topk(spark, sf_dir):
     (see :func:`operators.ann.ann_lsh_search`).  The embedding width
     comes from one min/max agg over the array sizes, which also
     rejects ragged widths (a plane table sized by one row would
-    silently drop the dimensions of longer vectors)."""
+    silently drop the dimensions of longer vectors); the long form is
+    built from the same read of the table."""
     e = load_testdata(spark, sf_dir, "embeddings")
     lo, hi = e.agg(F.min(F.size("embedding")),
                    F.max(F.size("embedding"))).first()
     if lo != hi:
         raise ValueError(f"ragged embeddings: widths range {lo}..{hi}")
     dim = int(hi or 0)
-    return ann_lsh_search(_emb_long(spark, sf_dir),
-                          list(ANN_QUERY_IDS), ANN_K, dim=dim)
+    return ann_lsh_search(_long_form(e), list(ANN_QUERY_IDS), ANN_K, dim=dim)
 
 
 _IVF_QUERY_VALUES = ", ".join(f"({q})" for q in ANN_QUERY_IDS)

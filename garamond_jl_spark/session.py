@@ -96,6 +96,20 @@ def get_spark(app: str = "garamond-spark", cpus: int | None = None,
                 os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # generated-class cache sized to the working set, so a warm
+        # repeat of a plan compiles nothing.  Spark's default keeps 100
+        # classes, LRU: one warm near_dup pass needs ~145, so under it
+        # every warm call missed on every class.  One cold pass of the
+        # 69 queries() leaves compiles 1431 distinct classes (sf0.01,
+        # local[8]), and a warm pass ~230 more it had not seen; 2000
+        # holds both.  Static: it only takes effect here
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # the cache key is the generated source, and by default the
+        # class name carries the whole-stage codegen id, which AQE
+        # assigns in the order it creates query stages: the same plan
+        # numbered the other way round compiled again (4 classes in 1
+        # of 15 warm ann_lsh_topk calls, sf0.001; 0 in 24 without ids)
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .getOrCreate()
     )
 

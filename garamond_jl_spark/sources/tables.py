@@ -18,9 +18,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TESTDATA_TABLES = ("region nation customer supplier part orders lineitem "
                    "events documents embeddings").split()
+
+# file identity → inferred schema.  Inference runs a footer-reading job
+# on every ``spark.read.parquet``; a read given the schema runs none, and
+# a warm leaf re-reads the same few files.  Bounded: a long-lived
+# session may be pointed at many files
+SCHEMA_MEMO_CAP = 256
+_schema_memo: dict[tuple, StructType] = {}
 
 
 def is_path(name: str) -> bool:
@@ -45,5 +53,19 @@ def write_table(df: DataFrame, name: str, mode: str = "overwrite",
 
 
 def load_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Load one driver-provided testdata table (TESTDATA.md)."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+    """Load one driver-provided testdata table (TESTDATA.md).
+
+    The schema is inferred once per file: it is memoized under the
+    file's identity (absolute path, mtime, size, inode), so a file
+    rewritten at the same path is inferred again, and later reads pass
+    it to ``spark.read.schema`` and run no job."""
+    path = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size, st.st_ino)
+    schema = _schema_memo.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        while len(_schema_memo) >= SCHEMA_MEMO_CAP:
+            _schema_memo.pop(next(iter(_schema_memo)), None)
+        _schema_memo[key] = schema
+    return spark.read.schema(schema).parquet(path)

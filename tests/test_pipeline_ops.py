@@ -168,15 +168,50 @@ def test_operator_needs_no_checkpoint(spark, tiny_sf_dir, op):
     assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
 
 
+def _collected_final_plan(df) -> str:
+    """``df.collect()``, then its AQE-final physical plan as text."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString() \
+        .split("== Initial Plan ==")[0]
+
+
 def test_simhash_pairs_evaluates_signature_once(spark, tiny_sf_dir):
     """Both sides of the band self-join read one exchange, so the
     executed plan runs the mapInArrow SimHash pass once."""
     from garamond_jl_spark.plans.pipeline_queries import dedup_simhash_pairs
-    out = dedup_simhash_pairs(spark, tiny_sf_dir)
-    out.collect()
-    final = out._jdf.queryExecution().executedPlan().toString() \
-        .split("== Initial Plan ==")[0]
+    final = _collected_final_plan(dedup_simhash_pairs(spark, tiny_sf_dir))
     assert final.count("MapInArrow") == 1, final
+
+
+def test_minhash_lsh_evaluates_shingles_once(spark, tiny_sf_dir):
+    """The signature, the two verify sides and the two set sizes read
+    one exchange above the distinct shingles, so the executed plan
+    runs the shingle Window once (once per consumer without it)."""
+    from garamond_jl_spark.plans.pipeline_queries import dedup_minhash_lsh
+    final = _collected_final_plan(dedup_minhash_lsh(spark, tiny_sf_dir))
+    assert final.count("Window [") == 1, final
+
+
+def _classes_compiled(spark) -> int:
+    """Generated classes this JVM has compiled so far (codegen cache
+    misses)."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_calls_compile_nothing(spark, tiny_sf_dir):
+    """A repeated round of near-dup operators finds every generated
+    class in the codegen cache: the cache holds the working set rather
+    than cycling it through an LRU smaller than one round."""
+    from garamond_jl_spark.plans import pipeline_queries as P
+    ops = (P.dedup_minhash_lsh, P.dedup_simhash_pairs, P.ann_lsh_topk)
+    compiled = []
+    for _ in range(2):
+        before = _classes_compiled(spark)
+        for op in ops:
+            assert op(spark, tiny_sf_dir).collect()
+        compiled.append(_classes_compiled(spark) - before)
+    assert compiled[1] == 0, compiled
 
 
 def test_lang_id_accuracy_multilingual(spark):

@@ -5,7 +5,8 @@ Ten rounds of exact and impact ``search``, ``ann_lsh_search`` and
 (the AppStatusStore's RDDs with stored blocks) and the index's
 driver-side df memos at the level the first round left them: an
 operator that materialized a result without releasing it would grow
-the storage level by one RDD a round.
+the storage level by one RDD a round.  The table-schema memo is held
+to the same rule: re-reading the same files adds no entry.
 """
 
 import os
@@ -16,18 +17,21 @@ from garamond_jl_spark.operators.build import build_index
 from garamond_jl_spark.operators.query import search
 from garamond_jl_spark.plans.pipeline_queries import (_emb_long,
                                                       dedup_simhash_pairs)
+from garamond_jl_spark.sources import tables
 
 ROUNDS = 10
 QUERIES = ["spark window zzqx_oov"]
 
 
 def _levels(spark, idx):
-    """(RDDs holding executor storage, df memo size, absent memo size),
-    read after the listener bus has delivered every event so far."""
+    """(RDDs holding executor storage, df memo size, absent memo size,
+    table schema memo size), read after the listener bus has delivered
+    every event so far."""
     sc = spark.sparkContext._jsc.sc()
     sc.listenerBus().waitUntilEmpty()
     return (int(sc.statusStore().rddList(True).size()),
-            len(idx.meta["_df_memo"]), len(idx.meta["_df_memo_absent"]))
+            len(idx.meta["_df_memo"]), len(idx.meta["_df_memo_absent"]),
+            len(tables._schema_memo))
 
 
 def test_repeated_calls_keep_storage_and_memos_flat(spark, tiny_sf_dir):
