@@ -7,29 +7,26 @@ reduced by one of {mean, min, max, median, product}; zero-score docs
 dropped; re-sorted descending; trimmed to max_matches.  Default strategy
 :mean (src/config/defaults.jl:29).
 
-Spark mapping: union of per-index hit DataFrames → groupBy(doc_id) with
-the strategy's aggregate.  Median uses exact ``percentile`` (hit sets
-are k-bounded); product uses Spark's exact ``product`` aggregate (an
-exp(sum(log)) rewrite silently DROPPED zero/negative factors — Spark's
-log of a non-positive value is NULL and sum skips NULLs, so a muted
-searcher's 0.0 never zeroed the product).
+Spark mapping: the lifecycle merge (plans/lifecycle.merge) unions the
+per-searcher weighted scores and groups them by (query_id, doc_id)
+with the strategy's aggregate.  Median uses exact ``percentile`` (hit
+sets are k-bounded); product uses Spark's exact ``product`` aggregate
+(an exp(sum(log)) rewrite silently DROPPED zero/negative factors —
+Spark's log of a non-positive value is NULL and sum skips NULLs, so a
+muted searcher's 0.0 never zeroed the product).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-STRATEGIES = ("mean", "min", "max", "median", "product")
 
 
 def strategy_agg(grouped, strategy: str) -> DataFrame:
     """THE A6 reduction as a grouped aggregate over long-format
     (..., wscore) rows — the one Spark-side definition of the five
-    strategy formulas, shared by :func:`aggregate_results` and the
-    batched lifecycle path (plans/lifecycle.search_many).  Unknown
-    strategies reduce as :mean, the reference default
-    (defaults.jl:29)."""
+    strategy formulas (plans/lifecycle.merge).  Unknown strategies
+    reduce as :mean, the reference default (defaults.jl:29)."""
     if strategy == "min":
         return grouped.agg(F.min("wscore").alias("score"))
     if strategy == "max":
@@ -44,10 +41,11 @@ def strategy_agg(grouped, strategy: str) -> DataFrame:
 
 
 def strategy_scalar(values: list[float], strategy: str) -> float:
-    """Scalar twin of :func:`strategy_agg` for driver-side reductions
-    (the lifecycle pad score over per-searcher fills) — change only
-    together.  Empty input is a caller error for EVERY strategy (the
-    product identity 1.0 would silently out-rank real scores)."""
+    """Scalar twin of :func:`strategy_agg`: the lifecycle merge's pad
+    score (per query, over the live searchers' weighted fills) for
+    every batch size — change only together.  Empty input is a caller
+    error for EVERY strategy (the product identity 1.0 would silently
+    out-rank real scores)."""
     if not values:
         raise ValueError("strategy_scalar needs at least one value")
     if strategy == "min":
@@ -61,57 +59,3 @@ def strategy_scalar(values: list[float], strategy: str) -> float:
         from functools import reduce
         return reduce(lambda a, b: a * b, values, 1.0)
     return sum(values) / len(values)                       # mean default
-
-
-def aggregate_results(hit_sets: list[tuple[DataFrame, float]],
-                      strategy: str = "mean", max_matches: int = 1000,
-                      custom_weights: dict[int, float] | None = None,
-                      ranked: bool = True) -> DataFrame:
-    """hit_sets: [(hits(query_id?, doc_id, score), score_weight)] — one
-    per searcher sharing an id_aggregation (results.jl:54-66).
-    Returns (doc_id, score, rank); with ``ranked=False`` returns the
-    unranked (doc_id, score) aggregate after the zero-score drop, so a
-    caller can merge in dense-knn fill rows before its own top-k (the
-    lifecycle sparse path)."""
-    if strategy not in STRATEGIES:
-        strategy = "mean"
-    if not hit_sets:
-        raise ValueError("aggregate_results needs at least one hit set")
-    custom_weights = custom_weights or {}
-    # per-query frames must aggregate per query: silently dropping a
-    # query_id column would average different queries' scores together.
-    # Every frame must agree — a doc-only first frame followed by a
-    # per-query one would otherwise silently drop query_id and merge
-    # different queries' scores (the reverse mix fails loudly in select)
-    has_qid = ["query_id" in hits.columns for hits, _ in hit_sets]
-    if any(has_qid) and not all(has_qid):
-        raise ValueError(
-            "aggregate_results: hit sets disagree on query_id presence "
-            f"(per-frame: {has_qid}) — merge would mix queries' scores")
-    by = ["query_id", "doc_id"] if has_qid[0] else ["doc_id"]
-    parts = []
-    for i, (hits, weight) in enumerate(hit_sets):
-        w = weight * custom_weights.get(i, 1.0)
-        parts.append(hits.select(
-            *by, (F.col("score") * F.lit(w)).alias("wscore")))
-    unioned = parts[0]
-    for p in parts[1:]:
-        unioned = unioned.unionByName(p)
-    agg = strategy_agg(unioned.groupBy(*by), strategy)
-    dropped = agg.where(F.col("score") > 0)       # zero-score drop
-    if not ranked:
-        return dropped.select(*by, "score")
-    # distributed top-k (TakeOrdered) before the ≤max_matches ranking
-    # window — keeps the global sort off a single partition
-    if by == ["doc_id"]:
-        trimmed = (dropped
-                   .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                   .limit(max_matches))           # trim (results.jl:137-144)
-        w = Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return (trimmed.withColumn("rank", F.row_number().over(w))
-                .select("doc_id", "score", "rank"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc())
-    return (dropped.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= max_matches)
-            .select(*by, "score", "rank"))

@@ -876,14 +876,18 @@ class BOESearcher(DenseVectorSearcher):
     def embed_queries_df(self, spark: SparkSession,
                          queries: list[str]) -> DataFrame:
         """All queries' token counts in one tiny table joined once
-        against the word-vector table (boe.jl's sum, batch form)."""
+        against the word-vector table (boe.jl's sum, batch form), with
+        the vectors prefiltered to the batch's tokens as
+        :func:`boe_embed_query` does."""
         rows = query_token_rows(queries)
         if not rows:
             return local_frame(spark,
                 [], "query_id INT, i INT, qv DOUBLE")
         qt = F.broadcast(local_frame(spark,
             rows, "query_id INT, term STRING, qtf INT"))
-        return (qt.join(self.word_vectors, "term")
+        wv = self.word_vectors.where(
+            F.col("term").isin(sorted({t for _, t, _ in rows})))
+        return (qt.join(wv, "term")
                 .groupBy("query_id", "i")
                 .agg(F.sum(F.col("qtf") * F.col("v")).alias("qv")))
 

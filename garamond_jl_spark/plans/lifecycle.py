@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from garamond_jl_spark.functions.query_parser import parse_input
+from garamond_jl_spark.operators.aggregate import strategy_agg, strategy_scalar
 from garamond_jl_spark.operators.build import InvertedIndex
 from garamond_jl_spark.operators.filters import filter_predicate, indexfilter
 from garamond_jl_spark.operators.query import (embed_queries, fill_score,
@@ -68,15 +69,14 @@ class SearchEnv:
     ``index`` is searcher 0 with weight ``score_weight``.  A searcher is
     either an :class:`InvertedIndex` (classic BM25, whose hits come from
     :func:`classic_hits`) or any object with the
-    ``sparse_hits(spark, query) -> DataFrame|None`` /
     ``sparse_hits_batch(spark, queries) -> (hits, embedded)`` /
     ``fill_score() -> float`` interface — e.g.
     :class:`~garamond_jl_spark.operators.semantic.BOESearcher`, giving
     the reference's HETEROGENEOUS config-2 env (a classic searcher and
     a Word2Vec/BOE searcher under one ``id_aggregation``,
-    test/configs/configgenerator.jl:54-116).  Either kind scores a
-    single request and a batch with one implementation: a single
-    request is a batch of one whose ``query_id`` is dropped.
+    test/configs/configgenerator.jl:54-116).  Every kind goes through
+    one merge (:func:`merge`), where a single request is a batch of
+    one.
 
     ``id_key`` names the id column of the RAW loaded data (env.jl:41
     db_check_id_key); the index's docs table is always addressed as
@@ -119,20 +119,20 @@ class SearchEnv:
 
 def _linear_scores(ranked: DataFrame) -> DataFrame:
     """results.jl:35-39: linear descending scores range(1, 0) over the
-    ranked id list."""
-    cnt = ranked.count()
-    denom = max(cnt - 1, 1)
+    ranked id list.  The length comes from a window count over the
+    (≤ k) ranked rows, so building the plan runs no job."""
+    denom = F.greatest(F.count("*").over(Window.partitionBy()) - 1,
+                       F.lit(1))
     return ranked.select(
-        "doc_id",
-        (F.lit(1.0) - (F.col("rank") - 1) / F.lit(denom)).alias("score"),
+        "doc_id", (F.lit(1.0) - (F.col("rank") - 1) / denom).alias("score"),
         "rank")
 
 
 def classic_hits(index: InvertedIndex, qt: DataFrame) -> DataFrame:
     """The classic searcher's sparse hit set: embedded queries ``qt``
     (``embed_queries`` output) → (query_id, doc_id, score) for every
-    doc sharing a term with its query.  :func:`search` runs it on one
-    query and drops the id; the batched merge keeps it on every key.
+    doc sharing a term with its query, as :func:`merge` reads every
+    searcher's hits.
 
     Under ``oov_policy="large_vector"`` (E8, dtv.jl:53-58) the all-OOV
     documents are REAL hits at the per-query constant-fill-vector
@@ -210,118 +210,133 @@ def search(env: SearchEnv, request: InternalRequest,
             for p, (s, w) in enumerate(all_sets)]
     chosen = (all_sets if _searcher_subset is None
               else [all_sets[p] for p in _searcher_subset])
+    isregex = request.search_method == "regex"
     primary = chosen[0][0]
-    multi = (len(chosen) > 1
-             or not isinstance(primary, InvertedIndex))
-    if not multi and not has_filter:
-        # search-only, single classic searcher: standard batched top-k
-        qt = embed_queries(env.spark, primary, [parsed.search],
-                           isregex=(request.search_method == "regex"))
-        return topk_plan(primary, qt, k,
-                         tiebreak_round=request.tiebreak_round,
-                         pad_to_k=True,
-                         n_queries=1).select("doc_id", "score", "rank")
-
-    # --- sparse "full result set" paths (combined / multi-searcher) ---
-    # Round-1's full=True plan scored the WHOLE corpus per query (a
-    # 2·n_docs cross-join pad + a single-partition corpus window whose
-    # rank was immediately dropped).  Sparse replacement: score only
-    # docs sharing a term with the query (score_all), intersect the P10
-    # filter BEFORE top-k (per-doc agg commutes with the semi-join), and
-    # append dense-knn fill rows only from the (filtered) 2k lowest
-    # doc_ids — since cosine ≥ 0, every match outranks every fill row,
-    # so ≤ k fill candidates can ever be displaced.  PLANS.md §round-2
-    # records the .explain() audit.
+    if len(chosen) == 1 and isinstance(primary, InvertedIndex):
+        if not has_filter:
+            # search-only, single classic searcher: standard top-k
+            qt = embed_queries(env.spark, primary, [parsed.search],
+                               isregex=isregex)
+            return topk_plan(primary, qt, k,
+                             tiebreak_round=request.tiebreak_round,
+                             pad_to_k=True,
+                             n_queries=1).select("doc_id", "score", "rank")
+        # a lone classic searcher merges unweighted (no aggregation
+        # happens in the reference either)
+        chosen = [(primary, 1.0)]
     ids = indexfilter(docs, parsed.filter, id_key="doc_id") \
         if has_filter else None
+    return merge(env, chosen, [parsed.search], k, request.tiebreak_round,
+                 ids=ids, isregex=isregex).select("doc_id", "score", "rank")
 
-    def sparse_hits(index: InvertedIndex) -> DataFrame | None:
-        """None ⇔ the query is OOV for this searcher (is_embedded gate);
-        an embedded query with zero (filtered) matches returns an EMPTY
-        frame — downstream it still yields fill-scored docs, exactly as
-        the reference's dense scan would."""
-        qt = embed_queries(env.spark, index, [parsed.search],
-                           isregex=(request.search_method == "regex"))
-        if not qt.collect():                # |query terms| rows — tiny
-            return None
-        h = classic_hits(index, qt).drop("query_id")
-        return h.join(ids, "doc_id", "left_semi") if has_filter else h
 
-    pool = docs.select("doc_id") if ids is None else ids
+def merge(env: SearchEnv, chosen: list[tuple[object, float]],
+          queries: list[str], k: int, tiebreak_round: int | None,
+          ids: DataFrame | None = None, isregex: bool = False
+          ) -> DataFrame:
+    """The multi-searcher merge (results.jl:54-145 ``aggregate!``) of a
+    batch of queries → (query_id, doc_id, score, rank ≤ k).  A single
+    request is a batch of one.
 
-    def searcher_hits(s) -> tuple[DataFrame | None, float]:
-        """Uniform (sparse hits, fill) over both searcher kinds: a
-        classic InvertedIndex or any sparse_hits/fill_score object
-        (e.g. semantic.BOESearcher)."""
+    ``chosen``: the (searcher, weight) pairs to merge, custom weights
+    applied; ``ids``: an optional (doc_id) filter frame (P10) that the
+    hits and the pad are restricted to.  Per searcher, the sparse hits
+    carry ``query_id`` on every key, and a query OOV for the searcher
+    contributes nothing (is_embedded gate).  Each query's candidates
+    (docs some searcher hit) are densified: a searcher that embedded
+    the query but missed the doc scores it its fill.  The weighted
+    scores reduce by the env strategy (A6), zero scores drop, and the
+    docs no searcher hit — one constant pad score per query — enter as
+    that query's k lowest non-candidate ids."""
+    spark = env.spark
+    sets = []                       # (hits, live query ids, weight, fill)
+    for s, wgt in chosen:
         if isinstance(s, InvertedIndex):
-            return sparse_hits(s), fill_score(s.cfg)
-        h = s.sparse_hits(env.spark, parsed.search)
-        if h is not None and has_filter:
-            h = h.join(ids, "doc_id", "left_semi")
-        return h, s.fill_score()
+            qt = embed_queries(spark, s, queries, isregex=isregex)
+            h, s0, emb = classic_hits(s, qt), fill_score(s.cfg), qt
+        else:
+            h, emb = s.sparse_hits_batch(spark, queries)
+            s0 = s.fill_score()
+        # emb is a LocalRelation: its collect launches no job
+        live = {r["query_id"] for r in emb.select("query_id").collect()}
+        if live:
+            if ids is not None:
+                h = h.join(ids, "doc_id", "left_semi")
+            sets.append((h, live, wgt, s0))
+    if not sets:
+        return local_frame(spark, [],
+                           "query_id INT, doc_id LONG, score DOUBLE, rank INT")
+    qids = sorted(set().union(*(live for _, live, _, _ in sets)))
+    # one query keys on doc_id alone: the joins then ride the hits'
+    # doc_id partitioning (a (query_id, doc_id) key reshuffles both
+    # sides), and its query id returns as a literal at the end
+    one = len(qids) == 1
+    keys = ["doc_id"] if one else ["query_id", "doc_id"]
 
-    if multi:
-        # §3.1 step 7: per-searcher result sets, weighted and merged by
-        # the env aggregation strategy (A6).  A searcher whose query is
-        # OOV contributes nothing (is_embedded gate) — matching the
-        # round-1 behavior where its full set was empty.
-        from garamond_jl_spark.operators.aggregate import (aggregate_results,
-                                                           strategy_scalar)
-        sets = [(*searcher_hits(ix), wgt) for ix, wgt in chosen]
-        sets = [(h, wgt, s0) for h, s0, wgt in sets if h is not None]
-        if not sets:
-            return local_frame(env.spark,
-                [], "doc_id LONG, score DOUBLE, rank INT")
-        cands = sets[0][0].select("doc_id")
-        for h, _, _ in sets[1:]:
-            cands = cands.unionByName(h.select("doc_id"))
-        cands = cands.distinct()
-        # densify per embedded searcher over the candidate union only:
-        # a doc unmatched by searcher i scores its fill s0_i, exactly
-        # what the old corpus-wide pad produced for it
-        dense = [(cands.join(h, "doc_id", "left")
-                  .select("doc_id",
-                          F.coalesce(F.col("score"), F.lit(s0))
-                          .alias("score")), wgt)
-                 for h, wgt, s0 in sets]
-        hits = aggregate_results(dense, strategy=env.aggregation,
-                                 ranked=False)
-        # docs matched by NO searcher share one constant agg score
-        fills = [wgt * s0 for _, wgt, s0 in sets]
-        pad_score = strategy_scalar(fills, env.aggregation)
-        pad_cands = cands
-        # heterogeneous searchers (semantic cosines can be negative) may
-        # score an embedded doc BELOW pad_score, so the usual
-        # "limit 2k lowest ids, then anti-join" shortcut is unsound —
-        # anti-join the candidates FIRST, then take the 2k lowest
-        # non-candidate ids (≤ k pads can ever enter the top-k)
-        low = (pool.join(pad_cands, "doc_id", "left_anti")
-               .orderBy("doc_id").limit(2 * k))
-        pad = low.withColumn("score", F.lit(float(pad_score)))
-    else:
-        hits = sparse_hits(primary)
-        if hits is None:  # OOV query ⇒ no results (is_embedded gate)
-            return local_frame(env.spark,
-                [], "doc_id LONG, score DOUBLE, rank INT")
-        pad_score = fill_score(primary.cfg)
-        pad_cands = hits.select("doc_id")
-        # BM25 cosine ≥ 0 ⇒ every match outranks every fill row, so the
-        # cheap limit-then-anti construction is exact here
-        low = pool.orderBy("doc_id").limit(2 * k)
-        pad = (low.join(pad_cands, "doc_id", "left_anti")
-               .withColumn("score", F.lit(float(pad_score))))
+    cands = reduce(DataFrame.unionByName,
+                   [h.select(*keys) for h, _, _, _ in sets]).distinct()
+    dens = []
+    for h, live, wgt, s0 in sets:
+        c = cands
+        if len(live) < len(qids):
+            c = c.join(F.broadcast(local_frame(spark,
+                [(q,) for q in sorted(live)], "query_id INT")),
+                "query_id", "left_semi")
+        dens.append(c.join(h.select(*keys, "score"), keys, "left")
+                    .select(*keys,
+                            (F.lit(wgt) * F.coalesce("score", F.lit(s0)))
+                            .alias("wscore")))
+    hits = strategy_agg(reduce(DataFrame.unionByName, dens).groupBy(*keys),
+                        env.aggregation).where(F.col("score") > 0)
 
-    if pad_score > 0:  # zero-score drop applies to fill rows too
-        hits = hits.unionByName(pad)
-    rank_on = (F.round(F.col("score"), request.tiebreak_round)
-               if request.tiebreak_round is not None else F.col("score"))
-    # distributed top-k (TakeOrdered) before the (≤k rows) ranking window
-    hits = hits.orderBy(rank_on.desc(), F.col("doc_id").asc()).limit(k)
-    w = Window.orderBy(rank_on.desc(), F.col("doc_id").asc())
+    # the pad: every doc no searcher hit scores the strategy over the
+    # live searchers' weighted fills (zero-score drop included).  Dense
+    # scores can fall below it, so the low-id cut must come AFTER the
+    # candidates are excluded.  free = the k lowest ids in no query's
+    # candidate set C; a query's k lowest non-candidates lie in
+    # free ∪ (C ∖ C_q), none above max(free) — all of C when free is
+    # short.  With one query C_q = C and free alone is its pad.
+    pad_scores = [(q, strategy_scalar([w * s0 for _, live, w, s0 in sets
+                                       if q in live], env.aggregation))
+                  for q in qids]
+    pad_scores = [(q, p) for q, p in pad_scores if p > 0]
+    if pad_scores:
+        pool = env.index.docs.select("doc_id") if ids is None else ids
+        cdocs = cands.select("doc_id")
+        low = (pool.join(cdocs, "doc_id", "left_anti")
+               .orderBy("doc_id").limit(k))
+        if one:
+            pads = low.withColumn("score", F.lit(pad_scores[0][1]))
+        else:
+            edge = low.agg(F.max("doc_id").alias("_mx"),
+                           F.count("*").alias("_n"))
+            low = low.unionByName(
+                cdocs.distinct().crossJoin(edge)
+                .where((F.col("doc_id") < F.col("_mx")) | (F.col("_n") < k))
+                .select("doc_id"))
+            wlow = Window.partitionBy("query_id").orderBy("doc_id")
+            pads = (F.broadcast(local_frame(spark, pad_scores,
+                                            "query_id INT, score DOUBLE"))
+                    .crossJoin(low)
+                    .join(cands, keys, "left_anti")
+                    .withColumn("_r", F.row_number().over(wlow))
+                    .where(F.col("_r") <= k).drop("_r"))
+        hits = hits.unionByName(pads)
+
+    rank_on = (F.round(F.col("score"), tiebreak_round)
+               if tiebreak_round is not None else F.col("score"))
+    order = [rank_on.desc(), F.col("doc_id").asc()]
+    if one:
+        # one query: distributed top-k (TakeOrdered), then the ≤ k-row
+        # ranking window
+        w = Window.orderBy(*order)
+        return (hits.orderBy(*order).limit(k)
+                .select(F.lit(qids[0]).alias("query_id"), "doc_id", "score",
+                        F.row_number().over(w).alias("rank")))
+    w = Window.partitionBy("query_id").orderBy(*order)
     return (hits.withColumn("rank", F.row_number().over(w))
-            .select("doc_id", "score", "rank"))
-
-
+            .where(F.col("rank") <= k)
+            .select("query_id", "doc_id", "score", "rank"))
 
 
 def search_grouped(env: SearchEnv, request: InternalRequest
@@ -365,13 +380,12 @@ def search_many(env: SearchEnv, requests: list[InternalRequest]
 
     Per searcher the whole batch embeds in one local_frame + join
     (``embed_queries`` for classic indexes — already batch-shaped —
-    and :meth:`DenseVectorSearcher.sparse_hits_batch` for dense ones,
-    which replaces the per-query driver projection loops of
-    embed_query); the merge/fill/pad algebra of the single path is
-    re-expressed with query_id riding every key.  Requests that need
-    the filter plans (P10) fall back to :func:`search` individually —
-    the batched shape is the search-only hot path, matching the classic
-    engine's batched ``topk_plan``.
+    and :meth:`DenseVectorSearcher.sparse_hits_batch` for dense ones),
+    and the batch goes through :func:`merge`, the merge a single
+    request uses, with each request's index as its query id.  Requests
+    that need the filter plans (P10) fall back to :func:`search`
+    individually — the batched shape is the search-only hot path,
+    matching the classic engine's batched ``topk_plan``.
 
     Batched (search-only) requests must share ``tiebreak_round`` (one
     ranking key per window); fallback requests rank individually and
@@ -398,12 +412,9 @@ def search_many(env: SearchEnv, requests: list[InternalRequest]
         else:
             fallback.append(i)
 
-    out_schema = "request_id INT, doc_id LONG, score DOUBLE, rank INT"
-    parts: list[DataFrame] = []
-    for i in fallback:
-        parts.append(search(env, requests[i])
-                     .select(F.lit(i).alias("request_id"),
-                             "doc_id", "score", "rank"))
+    parts = [search(env, requests[i]).select(
+                 F.lit(i).alias("request_id"), "doc_id", "score", "rank")
+             for i in fallback]
 
     if batch:
         # the ranking window is shared by every BATCHED request (one
@@ -415,114 +426,34 @@ def search_many(env: SearchEnv, requests: list[InternalRequest]
                 "search_many requires a uniform tiebreak_round across "
                 "batched (search-only) requests")
         tiebreak_round = next(iter(rounds))
-        queries = [parsed[i].search for i in batch]
-        ks = [(qid, min(requests[i].max_matches, n_live))
-              for qid, i in enumerate(batch)]
+        # query ids are request ids: a fallback request's slot is an
+        # empty query, which no searcher embeds
+        queries = [""] * len(requests)
+        for i in batch:
+            queries[i] = parsed[i].search
+        ks = [(i, min(requests[i].max_matches, n_live)) for i in batch]
         max_k = max(k for _, k in ks)
         if not env.searchers:
             qt = embed_queries(spark, env.index, queries)
             hits = topk_plan(env.index, qt, max_k,
                              tiebreak_round=tiebreak_round, pad_to_k=True)
         else:
-            hits = _search_many_multi(env, queries, max_k, tiebreak_round)
-        kdf = F.broadcast(local_frame(spark, ks, "query_id INT, k INT"))
-        qmap = F.broadcast(local_frame(spark,
-            [(qid, i) for qid, i in enumerate(batch)],
-            "query_id INT, request_id INT"))
-        parts.append(hits.join(kdf, "query_id")
-                     .where(F.col("rank") <= F.col("k"))
-                     .join(qmap, "query_id")
-                     .select("request_id", "doc_id", "score", "rank"))
+            hits = merge(env, [(env.index, env.score_weight),
+                               *env.searchers],
+                         queries, max_k, tiebreak_round)
+        if any(k < max_k for _, k in ks):
+            hits = (hits.join(F.broadcast(local_frame(spark, ks,
+                                                      "query_id INT, k INT")),
+                              "query_id")
+                    .where(F.col("rank") <= F.col("k")))
+        parts.append(hits.select(
+            F.col("query_id").cast("int").alias("request_id"),
+            "doc_id", "score", "rank"))
 
     if not parts:
-        return local_frame(spark, [], out_schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _search_many_multi(env: SearchEnv, queries: list[str], k: int,
-                       tiebreak_round: int | None) -> DataFrame:
-    """The multi-searcher merge of :func:`search`, batched: per-searcher
-    sparse hit sets with query_id on every key, candidate-union
-    densify + per-query fill, strategy aggregation, per-query pad from
-    the lowest non-candidate ids, one ranking window."""
-    from garamond_jl_spark.operators.aggregate import strategy_agg
-    spark = env.spark
-
-    sets = []
-    for s, wgt in [(env.index, env.score_weight), *env.searchers]:
-        if isinstance(s, InvertedIndex):
-            qt = embed_queries(spark, s, queries)
-            sets.append((classic_hits(s, qt), qt.select("query_id").distinct(),
-                         wgt, fill_score(s.cfg)))
-        else:
-            h, emb = s.sparse_hits_batch(spark, queries)
-            sets.append((h, emb, wgt, s.fill_score()))
-
-    cands = sets[0][0].select("query_id", "doc_id")
-    for h, _, _, _ in sets[1:]:
-        cands = cands.unionByName(h.select("query_id", "doc_id"))
-    cands = cands.distinct()
-
-    long = None
-    fills = None
-    for h, emb, wgt, s0 in sets:
-        dens = (cands.join(emb, "query_id", "left_semi")
-                .join(h, ["query_id", "doc_id"], "left")
-                .select("query_id", "doc_id",
-                        (F.lit(wgt) * F.coalesce("score", F.lit(s0)))
-                        .alias("wscore")))
-        long = dens if long is None else long.unionByName(dens)
-        fr = emb.select("query_id",
-                        F.lit(wgt * s0).alias("wscore"))
-        fills = fr if fills is None else fills.unionByName(fr)
-
-    agg = strategy_agg(long.groupBy("query_id", "doc_id"),
-                        env.aggregation).where(F.col("score") > 0)
-    padsc = strategy_agg(fills.groupBy("query_id"), env.aggregation) \
-        .withColumnRenamed("score", "pad_score") \
-        .where(F.col("pad_score") > 0)
-
-    # per-query pad: the k lowest NON-candidate doc ids.  Dense scores
-    # can fall below the pad, so candidates must be excluded before the
-    # low-id cut (same invariant as the single path); the low slice
-    # grows geometrically until every query has k non-candidates in it
-    # (one tiny job per doubling — candidates rarely monopolize the
-    # lowest ids).
-    qids = F.broadcast(local_frame(spark,
-        [(q,) for q in range(len(queries))], "query_id INT"))
-    n_docs = env.index.meta.get("n_live_docs", env.index.meta["n_docs"])
-    L = 4 * k
-    while True:
-        low = env.index.docs.orderBy("doc_id").limit(L).select("doc_id")
-        lowq = (qids.crossJoin(low)
-                .join(cands, ["query_id", "doc_id"], "left_anti"))
-        if L >= n_docs:
-            break
-        counts = {r["query_id"]: r["cnt"] for r in
-                  lowq.groupBy("query_id").agg(F.count("*").alias("cnt"))
-                  .collect()}
-        if min((counts.get(q, 0) for q in range(len(queries))),
-               default=k) >= k:
-            break
-        L *= 4
-    wlow = Window.partitionBy("query_id").orderBy(F.col("doc_id").asc())
-    pads = (lowq.withColumn("_r", F.row_number().over(wlow))
-            .where(F.col("_r") <= k).drop("_r")
-            .join(padsc, "query_id")
-            .select("query_id", "doc_id",
-                    F.col("pad_score").alias("score")))
-
-    hits = agg.unionByName(pads)
-    rank_on = (F.round(F.col("score"), tiebreak_round)
-               if tiebreak_round is not None else F.col("score"))
-    w = Window.partitionBy("query_id").orderBy(rank_on.desc(),
-                                               F.col("doc_id").asc())
-    return (hits.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "doc_id", "score", "rank"))
+        return local_frame(spark, [],
+                           "request_id INT, doc_id LONG, score DOUBLE, rank INT")
+    return reduce(DataFrame.unionByName, parts)
 
 
 def rank_ids(env: SearchEnv, request: InternalRequest) -> DataFrame:

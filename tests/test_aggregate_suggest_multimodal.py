@@ -2,50 +2,71 @@
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from garamond_jl_spark.functions.suggest import missing_needles, suggest_terms
-from garamond_jl_spark.operators.aggregate import aggregate_results
 from garamond_jl_spark.operators.multimodal import (MEDIA_SCHEMA,
                                                     chunk_split_fn,
                                                     deterministic_fake_decoder,
                                                     extract_features,
                                                     sample_frames)
+from garamond_jl_spark.session import local_frame
 
 
-@pytest.fixture(scope="module")
-def hits(spark):
-    h1 = spark.createDataFrame([(1, 0.9), (2, 0.5), (3, 0.1)],
-                               "doc_id LONG, score DOUBLE")
-    h2 = spark.createDataFrame([(1, 0.7), (2, 0.8), (4, 0.4)],
-                               "doc_id LONG, score DOUBLE")
-    return h1, h2
+class _FixedSearcher:
+    """A searcher with fixed hits — ``per_query[q]`` lists query q's
+    (doc_id, score) pairs — through the ``sparse_hits_batch`` /
+    ``fill_score`` interface the merge reads."""
+
+    def __init__(self, *per_query, fill=0.0):
+        self.per_query, self.fill = per_query, fill
+
+    def sparse_hits_batch(self, spark, queries):
+        hits = local_frame(spark, [(q, d, s)
+                                   for q, rows in enumerate(self.per_query)
+                                   for d, s in rows],
+                           "query_id INT, doc_id LONG, score DOUBLE")
+        return hits, local_frame(spark, [(q,) for q in range(len(queries))],
+                                 "query_id INT")
+
+    def fill_score(self):
+        return self.fill
 
 
-def test_aggregate_mean_weighted(spark, hits):
-    h1, h2 = hits
-    got = {r["doc_id"]: r["score"] for r in
-           aggregate_results([(h1, 1.0), (h2, 0.5)], "mean").collect()}
-    assert got[1] == pytest.approx((0.9 + 0.35) / 2)
-    assert got[3] == pytest.approx(0.1)       # single-searcher doc
-    assert got[4] == pytest.approx(0.2)
+def _merged(spark, sets, strategy, n_queries=1):
+    """{(query_id, doc_id): score} of the lifecycle merge over fixed
+    searchers on a 10-doc pool (fills 0.0: the pad drops as zero)."""
+    from types import SimpleNamespace
+
+    from garamond_jl_spark.plans.lifecycle import merge
+    env = SimpleNamespace(
+        spark=spark, aggregation=strategy,
+        index=SimpleNamespace(docs=spark.range(10).withColumnRenamed(
+            "id", "doc_id")))
+    return {(r["query_id"], r["doc_id"]): r["score"] for r in
+            merge(env, sets, ["q"] * n_queries, 10, None).collect()}
 
 
-def test_aggregate_strategies(spark, hits):
-    h1, h2 = hits
+H1 = [(1, 0.9), (2, 0.5), (3, 0.1)]
+H2 = [(1, 0.7), (2, 0.8), (4, 0.4)]
+
+
+def test_aggregate_mean_weighted(spark):
+    """Weights scale each searcher's scores; a doc one searcher missed
+    takes that searcher's fill (0.0 here) in the mean."""
+    got = _merged(spark, [(_FixedSearcher(H1), 1.0),
+                          (_FixedSearcher(H2), 0.5)], "mean")
+    assert got[(0, 1)] == pytest.approx((0.9 + 0.35) / 2)
+    assert got[(0, 3)] == pytest.approx(0.1 / 2)
+    assert got[(0, 4)] == pytest.approx(0.2 / 2)
+    assert set(got) == {(0, 1), (0, 2), (0, 3), (0, 4)}   # pad score 0
+
+
+def test_aggregate_strategies(spark):
     for strat, want1 in [("min", 0.7), ("max", 0.9),
                          ("median", 0.8), ("product", 0.63)]:
-        got = {r["doc_id"]: r["score"] for r in
-               aggregate_results([(h1, 1.0), (h2, 1.0)], strat).collect()}
-        assert got[1] == pytest.approx(want1, abs=1e-9), strat
-
-
-def test_aggregate_trim_and_rank(spark, hits):
-    h1, h2 = hits
-    got = sorted(aggregate_results([(h1, 1.0), (h2, 1.0)], "max",
-                                   max_matches=2).collect(),
-                 key=lambda r: r["rank"])
-    assert [r["doc_id"] for r in got] == [1, 2]
+        got = _merged(spark, [(_FixedSearcher(H1), 1.0),
+                              (_FixedSearcher(H2), 1.0)], strat)
+        assert got[(0, 1)] == pytest.approx(want1, abs=1e-9), strat
 
 
 def test_suggestions(spark):
@@ -146,34 +167,24 @@ def test_product_strategy_zero_factor_zeroes_doc(spark):
     """results.jl prod(): a zero factor zeroes the product (the doc
     then falls to the zero-score drop) — exp(sum(log)) silently NULLed
     it out of the sum and kept the doc."""
-    from garamond_jl_spark.operators.aggregate import (aggregate_results,
-                                                       strategy_scalar)
-    a = spark.createDataFrame([(1, 2.0), (2, 0.5)],
-                              "doc_id LONG, score DOUBLE")
-    b = spark.createDataFrame([(1, 0.0), (2, 0.5)],
-                              "doc_id LONG, score DOUBLE")
-    got = {r["doc_id"]: r["score"] for r in
-           aggregate_results([(a, 1.0), (b, 1.0)],
-                             strategy="product").collect()}
-    assert got == {2: 0.25}          # doc 1's zero factor drops it
+    from garamond_jl_spark.operators.aggregate import strategy_scalar
+    got = _merged(spark, [(_FixedSearcher([(1, 2.0), (2, 0.5)]), 1.0),
+                          (_FixedSearcher([(1, 0.0), (2, 0.5)]), 1.0)],
+                  "product")
+    assert got == {(0, 2): 0.25}     # doc 1's zero factor drops it
     assert strategy_scalar([2.0, 0.0], "product") == 0.0
     import pytest as _pt
     with _pt.raises(ValueError):
         strategy_scalar([], "product")
-    with _pt.raises(ValueError):
-        aggregate_results([], strategy="mean")
 
 
-def test_aggregate_results_groups_per_query(spark):
-    """A hit frame carrying query_id aggregates per (query, doc) —
-    dropping the column averaged different queries together."""
-    from garamond_jl_spark.operators.aggregate import aggregate_results
-    h = spark.createDataFrame([(0, 1, 1.0), (1, 1, 0.2)],
-                              "query_id INT, doc_id LONG, score DOUBLE")
-    rows = aggregate_results([(h, 1.0)], strategy="mean").collect()
-    got = {(r["query_id"], r["doc_id"]): (r["score"], r["rank"])
-           for r in rows}
-    assert got == {(0, 1): (1.0, 1), (1, 1): (0.2, 1)}
+def test_merge_groups_per_query(spark):
+    """A batch aggregates per (query, doc): a doc two queries hit keeps
+    one score per query — dropping the query key averaged different
+    queries' scores together."""
+    got = _merged(spark, [(_FixedSearcher([(1, 1.0)], [(1, 0.2)]), 1.0)],
+                  "mean", n_queries=2)
+    assert got == {(0, 1): 1.0, (1, 1): 0.2}
 
 
 # ----------------------------------------------------------------- stdlib codecs

@@ -24,6 +24,17 @@ def env(spark):
     return SearchEnv(spark=spark, index=index)
 
 
+def _jobs_of(spark, group, fn):
+    """(fn(), number of Spark jobs fn launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 # ---- indexfilter unit semantics (test/indexfilter.jl analog) -------------
 
 @pytest.fixture(scope="module")
@@ -100,6 +111,17 @@ def test_filter_only_plan(env):
                      [(r["doc_id"],) for r in got], "doc_id LONG"),
                  "doc_id").select("lang").collect()}
     assert langs == {"python"}
+
+
+def test_filter_only_plan_builds_without_jobs(spark, env):
+    """Building a filter-only request's plan runs no job: the linear
+    scores take their length from a window count, not a driver
+    count() before the plan runs."""
+    req = InternalRequest(query='lang:"python"', max_matches=10,
+                          sort_fields=["doclen"], sort_reverse=True)
+    search(env, req).collect()                    # warm
+    _, n = _jobs_of(spark, "filter-only-build", lambda: search(env, req))
+    assert n == 0
 
 
 def test_combined_plan(env):
@@ -269,14 +291,11 @@ def test_lifecycle_large_vector_oov_docs(spark):
     assert any(r["doc_id"] == 2 for r in got)  # the all-OOV doc is a hit
 
 
-def test_search_many_matches_single_requests(spark):
-    """Batched lifecycle search: N mixed-env requests in one DAG return
-    exactly what N single search() calls return — including an
-    all-OOV query (empty result) and per-request max_matches — while
-    launching O(#searchers) jobs, not O(N)."""
+@pytest.fixture(scope="module")
+def mixed_env(spark):
+    """sf0.001 classic + BOE env, weights 0.8/0.8, :mean."""
     from garamond_jl_spark.operators.semantic import (
         BOESearcher, synthetic_word_vectors)
-    from garamond_jl_spark.plans.lifecycle import search_many
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     idx = build_index(spark, docs, EngineConfig(score_alpha=0.4),
@@ -287,9 +306,18 @@ def test_search_many_matches_single_requests(spark):
     tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     wv = synthetic_word_vectors(tf.select("term"), dim=16, seed=0)
     boe = BOESearcher.from_tokens(tf, wv, score_alpha=0.4)
-    env = SearchEnv(spark=spark, index=idx, score_weight=0.8,
-                    searchers=[(boe, 0.8)], aggregation="mean")
+    return SearchEnv(spark=spark, index=idx, score_weight=0.8,
+                     searchers=[(boe, 0.8)], aggregation="mean")
 
+
+def test_search_many_matches_single_requests(spark, mixed_env):
+    """Batched lifecycle search: N mixed-env requests in one DAG return
+    exactly what N single search() calls return — including an
+    all-OOV query (empty result) and per-request max_matches — while
+    launching O(#searchers) jobs, not O(N)."""
+    from garamond_jl_spark.plans.lifecycle import search_many
+
+    env = mixed_env
     texts = ["spark join data", "window batch merge", "stream filter map",
              "shuffle sort spill", "cache persist disk",
              "broadcast hash join", "column prune scan"]
@@ -301,16 +329,11 @@ def test_search_many_matches_single_requests(spark):
              InternalRequest(query='spark lang:"en"', max_matches=7,
                              tiebreak_round=6)]   # filter → fallback path
 
-    sc = spark.sparkContext
-    sc.setJobGroup("smany", "batched lifecycle search")
-    got = search_many(env, reqs).collect()
-    n_batch = len(sc.statusTracker().getJobIdsForGroup("smany"))
-
-    sc.setJobGroup("ssingle", "per-request lifecycle search")
-    wants = [sorted(search(env, req).collect(), key=lambda r: r["rank"])
-             for req in reqs]
-    n_single = len(sc.statusTracker().getJobIdsForGroup("ssingle"))
-    sc.setJobGroup("", "")
+    got, n_batch = _jobs_of(spark, "smany",
+                            lambda: search_many(env, reqs).collect())
+    wants, n_single = _jobs_of(spark, "ssingle", lambda: [
+        sorted(search(env, req).collect(), key=lambda r: r["rank"])
+        for req in reqs])
 
     by_req = {}
     for r in got:
@@ -325,9 +348,106 @@ def test_search_many_matches_single_requests(spark):
     assert len(by_req[1]) == 5        # per-request max_matches honored
     # raw Spark job counts are AQE/broadcast-inflated, so the honest
     # check is relative: the batch DAG launches fewer jobs than the
-    # per-request loop over the SAME requests (measured ~95 vs ~210;
-    # batch job count is flat in N while singles grow linearly)
+    # per-request loop over the SAME requests (batch job count is flat
+    # in N while singles grow linearly)
     assert n_batch < n_single, (n_batch, n_single)
+
+
+def test_search_many_one_request_costs_a_search(spark, mixed_env):
+    """A one-request batch is the single request's merge: warm, it
+    launches no more jobs than search() of the same request.  AQE runs
+    a query stage as its own job or inside a later one depending on
+    timing, so an identical plan varies by ±2 jobs: the batch's fewest
+    over three warm calls must not exceed the single request's most."""
+    from garamond_jl_spark.plans.lifecycle import search_many
+    req = InternalRequest(query="spark join data", max_matches=10,
+                          tiebreak_round=6)
+    one = sorted(search(mixed_env, req).collect(), key=lambda r: r["rank"])
+    many = sorted(search_many(mixed_env, [req]).collect(),
+                  key=lambda r: r["rank"])
+    assert [(r["doc_id"], r["score"], r["rank"]) for r in many] == \
+        [(r["doc_id"], r["score"], r["rank"]) for r in one]
+    n_one, n_many = [], []
+    for i in range(3):
+        n_one.append(_jobs_of(spark, f"one-{i}", lambda: search(
+            mixed_env, req).collect())[1])
+        n_many.append(_jobs_of(spark, f"many-{i}", lambda: search_many(
+            mixed_env, [req]).collect())[1])
+    assert min(n_many) <= max(n_one), (n_many, n_one)
+
+
+class _FixedDense:
+    """A dense searcher with fixed hits per query text — the
+    ``sparse_hits_batch`` / ``fill_score`` interface of the merge."""
+
+    def __init__(self, hits: dict[str, list[tuple[int, float]]]):
+        self.hits = hits
+
+    def sparse_hits_batch(self, spark, queries):
+        from garamond_jl_spark.session import local_frame
+        live = [q for q, text in enumerate(queries) if text in self.hits]
+        rows = [(q, d, s) for q in live for d, s in self.hits[queries[q]]]
+        return (local_frame(spark, rows,
+                            "query_id INT, doc_id LONG, score DOUBLE"),
+                local_frame(spark, [(q,) for q in live], "query_id INT"))
+
+    def fill_score(self):
+        from garamond_jl_spark.operators.query import fill_score
+        return fill_score(CFG)
+
+
+def test_pad_is_exact_when_dense_scores_fall_below_it(spark):
+    """The pad enters after the candidate anti-join: a dense searcher
+    scores the lowest doc ids BELOW the pad, and two queries' candidate
+    sets differ (each query's lowest non-candidates include the other's
+    candidates).  search_many and per-request search() both equal a
+    driver-side merge that densifies over every doc."""
+    from garamond_jl_spark.operators.query import (embed_queries,
+                                                   fill_score)
+    from garamond_jl_spark.plans.lifecycle import classic_hits, search_many
+    texts = {20: "alpha x20", 21: "alpha alpha x21", 22: "beta x22"}
+    df = spark.createDataFrame(
+        [(i, texts.get(i, f"x{i}")) for i in range(30)],
+        "doc_id LONG, content STRING")
+    idx = build_index(spark, df, CFG, id_col="doc_id")
+    low, high = 0.05, 0.99           # dense fill is 1 − tanh(0.4) ≈ 0.62
+    dense = _FixedDense({
+        "alpha": [(d, low) for d in range(8)] + [(25, high)],
+        "beta": [(d, low) for d in (0, 1, 2, 3, 4, 5, 8, 9)]
+        + [(26, high)]})
+    env = SearchEnv(spark=spark, index=idx, score_weight=0.8,
+                    searchers=[(dense, 0.8)], aggregation="mean")
+    reqs = [InternalRequest(query=q, max_matches=8)
+            for q in ("alpha", "beta")]
+
+    fc = fill_score(CFG)
+    wants = []
+    for req in reqs:
+        ch = {r["doc_id"]: r["score"] for r in classic_hits(
+            idx, embed_queries(spark, idx, [req.query])).collect()}
+        dh = dict(dense.hits[req.query])
+        scores = sorted(((0.8 * ch.get(d, fc) + 0.8 * dh.get(d, fc)) / 2, d)
+                        for d in range(30))
+        top = sorted(scores, key=lambda t: (-t[0], t[1]))[:8]
+        wants.append([(d, s, r + 1) for r, (s, d) in enumerate(top)])
+    # the fixture bites: some of each query's top 8 are pad docs that
+    # rank above lower-id candidates
+    assert all(any(d > 5 and d not in dense.hits[req.query]
+                   for d, _, _ in want) for req, want in zip(reqs, wants))
+
+    batch = {}
+    for r in search_many(env, reqs).collect():
+        batch.setdefault(r["request_id"], []).append(
+            (r["doc_id"], r["score"], r["rank"]))
+    for i, (req, want) in enumerate(zip(reqs, wants)):
+        single = [(r["doc_id"], r["score"], r["rank"])
+                  for r in search(env, req).collect()]
+        for got in (sorted(single, key=lambda t: t[2]),
+                    sorted(batch[i], key=lambda t: t[2])):
+            assert [(d, r) for d, _, r in got] == \
+                [(d, r) for d, _, r in want], req.query
+            for (_, a, _), (_, b, _) in zip(got, want):
+                assert a == pytest.approx(b, abs=1e-12)
 
 
 def test_search_many_single_searcher_env(spark):
